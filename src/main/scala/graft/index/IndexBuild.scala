@@ -251,8 +251,8 @@ object IndexBuild {
     * min/max stats prune per-term point lookups at serving time. */
   def save(spark: SparkSession, built: BuiltIndex, dir: String): Unit = {
     import graft.tables.TableIO
-    // docs sorted by doc_id → row-group min/max stats serve point lookups
-    // (LazySearcher's isin fetch) with pruned scans
+    // docs sorted by doc_id → row-group min/max stats serve doc_id point
+    // lookups (isin filters) with pruned scans
     TableIO.write(built.docs.toDF().sort("doc_id"), s"$dir/docs", "index-docs")
     TableIO.write(built.dictionary.toDF(), s"$dir/dictionary", "index-dictionary")
     TableIO.write(built.blocks.sortWithinPartitions("term", "part_id", "seq").toDF(),

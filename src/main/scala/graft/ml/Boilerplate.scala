@@ -26,16 +26,9 @@ object Boilerplate {
     * (doc_id, clean_text, n_lines, n_lines_kept). */
   def stripSourceBoilerplate(df: DataFrame, idCol: String, sourceCol: String,
                              textCol: String, lineTokens: Int = 10,
-                             minFrac: Double = 0.5,
-                             hashedLines: Boolean = false): DataFrame = {
-    // `hashedLines`: the chrome-frequency count and the anti-join key on
-    // (source, xxhash64(line)) — same narrow-key trade as
-    // [[TextAnalysis.lineDedup]]'s flag, spec-pinned equal on the oracle
-    // corpora; strings stay the default contract.
+                             minFrac: Double = 0.5): DataFrame = {
     require(lineTokens > 0, s"lineTokens must be positive, got $lineTokens")
     require(minFrac > 0.0 && minFrac <= 1.0, s"minFrac must be in (0,1], got $minFrac")
-    val lineKey: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (hashedLines) c => xxhash64(c) else identity
     val toks = df
       .select(col(idCol).cast("long").as("doc_id"),
         col(sourceCol).as("source"),
@@ -49,14 +42,14 @@ object Boilerplate {
         x => x.getField("tok")), " ").as("line"))
     val docTotals = df.groupBy(col(sourceCol).as("source"))
       .agg(countDistinct(col(idCol)).as("n_docs"))
-    val chrome = lines.groupBy(col("source"), lineKey(col("line")).as("lk"))
+    val chrome = lines.groupBy(col("source"), col("line").as("lk"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .join(docTotals, "source")
       .filter(col("nd") >= col("n_docs") * minFrac)
       .select(col("source").as("c_source"), col("lk"))
     val perDoc = lines
       .join(chrome, lines("source") === chrome("c_source") &&
-        lineKey(lines("line")) === chrome("lk"), "left_anti")
+        lines("line") === chrome("lk"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("line_id"), col("line")))),

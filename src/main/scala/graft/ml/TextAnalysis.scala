@@ -122,18 +122,9 @@ object TextAnalysis {
     * driver-side set, no O(n²) pair comparison, text shuffles at line (not
     * document) granularity. */
   def lineDedup(df: DataFrame, idCol: String, textCol: String,
-                lineTokens: Int = 10, minDocs: Int = 2,
-                hashedLines: Boolean = false): DataFrame = {
-    // `hashedLines` (the at-scale key mode): the duplicate-line aggregation
-    // and the anti-join key on xxhash64(line) — 8-byte keys instead of the
-    // ~60-byte line strings (the line text itself still travels exactly
-    // once, doc-grouped, for reassembly). A collision can only ADD a
-    // dropped line (conservative for dedup); LineDedupSpec pins flag-on ≡
-    // flag-off on the oracle corpora; strings stay the default contract.
+                lineTokens: Int = 10, minDocs: Int = 2): DataFrame = {
     require(lineTokens > 0, s"lineTokens must be positive, got $lineTokens")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val lineKey: Column => Column =
-      if (hashedLines) c => xxhash64(c) else identity
     val toks = df
       .select(col(idCol).cast("long").as("doc_id"),
         posexplode(split(trim(col(textCol)), "\\s+")).as(Seq("pos", "tok")))
@@ -144,12 +135,12 @@ object TextAnalysis {
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("pos"), col("tok")))),
         x => x.getField("tok")), " ").as("line"))
-    val dupLines = lines.groupBy(lineKey(col("line")).as("lk"))
+    val dupLines = lines.groupBy(col("line").as("lk"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= minDocs)
       .select(col("lk"))
     val perDoc = lines
-      .join(dupLines, lineKey(lines("line")) === dupLines("lk"), "left_anti")
+      .join(dupLines, lines("line") === dupLines("lk"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(array_join(transform(
         array_sort(collect_list(struct(col("line_id"), col("line")))),

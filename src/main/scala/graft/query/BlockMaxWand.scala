@@ -15,7 +15,7 @@ import graft.index.{BuiltIndex, IndexBuild, PostingBlock, Varbyte}
   *
   * Results are EXACT — identical rows AND bit-identical scores to the
   * exhaustive [[QueryOps.batchBm25TopK]] (both fold the shared
-  * [[QueryOps.bm25ContribCol]] values in the shared term-asc order), proved
+  * [[Bm25.contribCol]] values in the shared term-asc order), proved
   * by BlockMaxSpec and the same DuckDB oracle. Rank-safe two-phase scheme:
   *
   *  1. SEED (θ): decode only the single highest-impact block per term
@@ -74,9 +74,8 @@ object BlockMaxWand {
     * rank ≤ k by (score desc, url asc), raw stored urls, queries with no
     * live term emit no rows. */
   def batchBm25WandTopK(spark: SparkSession, built: BuiltIndex,
-                        queries: Seq[String], k: Int = 10,
-                        k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    instrumented(spark, built, queries, k, k1, b)._1
+                        queries: Seq[String], k: Int = 10): DataFrame =
+    instrumented(spark, built, queries, k)._1
 
   /** As [[batchBm25WandTopK]] plus the pruning diagnostics (spec hook).
     *
@@ -86,7 +85,6 @@ object BlockMaxWand {
     * oversized closure — pruning that weak wasn't going to win anyway. */
   private[graft] def instrumented(spark: SparkSession, built: BuiltIndex,
                                   queries: Seq[String], k: Int = 10,
-                                  k1: Double = 1.2, b: Double = 0.75,
                                   rescoreCollectCap: Int = 1 << 20,
                                   isinThreshold: Int = 2048): (DataFrame, Diag) = {
     import spark.implicits._
@@ -114,17 +112,13 @@ object BlockMaxWand {
     val nd = statsRow.getLong(0)
     if (nd == 0) return empty
     val avgdl = statsRow.getLong(1).toDouble / nd
-    val dlMin = statsRow.getLong(2).toDouble
-    val idfOf: Map[String, Double] = liveTerms.map { t =>
-      val df = dict(t).df
-      t -> math.log((nd - df + 0.5) / (df + 0.5) + 1.0)
-    }.toMap
+    val dlMin = statsRow.getLong(2)
+    val idfOf: Map[String, Double] = liveTerms.map(t => t -> Bm25.idf(nd, dict(t).df)).toMap
 
     // block upper bound: its best posting (max_tf) landing in the shortest
     // document — the block-max metadata written at index build
     def ubOf(term: String, maxTf: Int): Double =
-      idfOf(term) * (maxTf * (k1 + 1)) /
-        (maxTf + k1 * (1 - b + b * dlMin / avgdl))
+      Bm25.contribution(idfOf(term), maxTf, dlMin, avgdl)
     def safeDown(x: Double): Double = x - 1e-9 * math.max(1.0, math.abs(x))
 
     val liveBlocks = built.blocks.filter($"term".isin(liveTerms: _*))
@@ -153,7 +147,7 @@ object BlockMaxWand {
     val seedPartials = seedPosts
       .join(docsDl.select($"doc_id", $"dl"), Seq("doc_id"))
       .join(idfDf, Seq("term")).join(weightsDf, Seq("term"))
-      .select($"query_id", $"doc_id", QueryOps.bm25ContribCol(k1, b, avgdl).as("c"))
+      .select($"query_id", $"doc_id", Bm25.contribCol(lit(avgdl)).as("c"))
       .groupBy($"query_id", $"doc_id").agg(sum($"c").as("partial"))
     val thetaRows = seedPartials
       .withColumn("_rn", row_number().over(
@@ -206,7 +200,7 @@ object BlockMaxWand {
       .join(weightsUbDf, Seq("term"))
       .filter($"ub" >= $"ub_min")
       .select($"query_id", $"doc_id", $"term",
-        QueryOps.bm25ContribCol(k1, b, avgdl).as("c"))
+        Bm25.contribCol(lit(avgdl)).as("c"))
       .groupBy($"query_id", $"doc_id")
       .agg(QueryOps.bm25TermOrderedFold.as("kept"))
       .persist()
@@ -227,7 +221,7 @@ object BlockMaxWand {
       (cands, diag.copy(totalBlocks = totalBlocks, seedBlocks = liveTerms.size.toLong))
     } finally keptScored.unpersist()
     if (candRows.length > rescoreCollectCap)
-      return (QueryOps.batchBm25TopK(spark, built, queries, k, k1, b), finalDiag)
+      return (QueryOps.batchBm25TopK(spark, built, queries, k), finalDiag)
 
     // ---- phase 3: exact rescore of the candidate set from ALL blocks ----
     // candidate ids ride a sorted broadcast; each block's doc-id bytes are
@@ -264,7 +258,7 @@ object BlockMaxWand {
       .join(weightsDf, Seq("term"))
       .join(candPairsDf, Seq("query_id", "doc_id"))
       .select($"query_id", $"doc_id", $"url", $"term",
-        QueryOps.bm25ContribCol(k1, b, avgdl).as("c"))
+        Bm25.contribCol(lit(avgdl)).as("c"))
       .groupBy($"query_id", $"doc_id", $"url")
       .agg(QueryOps.bm25TermOrderedFold.as("score"))
     val wRank = Window.partitionBy($"query_id").orderBy($"score".desc, $"url".asc)

@@ -633,8 +633,8 @@ object DirectIndex {
   }
 }
 
-/** NO-SPARK-JOB point-lookup serving tier — [[LazySearcher]]'s fetch
-  * pattern at [[Searcher.fromIndex]]'s latency: per query it reads only the
+/** NO-SPARK-JOB point-lookup serving tier at [[Searcher.fromIndex]]'s
+  * latency without its driver-memory bound: per query it reads only the
   * query terms' posting blocks (one seek each) and the touched docs'
   * records from memory-mapped shard files. No SparkSession anywhere; the
   * p95 is a property of the index layout + OS page cache, matching the
@@ -809,9 +809,8 @@ final class DirectSearcher private (dir: String, n: Int) {
                     pagerank: Option[String => Double] = None): List[(String, Double)] =
     searcher.referenceTopK(query, pagerank)
 
-  def bm25TopK(query: String, k: Int = 10, k1: Double = 1.2,
-               b: Double = 0.75): List[(String, Double)] =
-    searcher.bm25TopK(query, k, k1, b)
+  def bm25TopK(query: String, k: Int = 10): List[(String, Double)] =
+    searcher.bm25TopK(query, k)
 
   /** Total sidecar bytes on disk (for the bytes-read ≪ index-size check). */
   def indexBytes: Long =
@@ -890,8 +889,8 @@ final class DirectPages private (dir: String) {
     None
   }
 
-  /** `GET /query/:url` response body with zero Spark jobs — same payload as
-    * [[Serving.detailJson]] over the parquet pages table. */
+  /** `GET /query/:url` response body with zero Spark jobs: the stored page
+    * (or the default info map on a miss) through [[Serving.pageInfoJson]]. */
   def detailJson(url: String): String =
     Serving.pageInfoJson(url, html(graft.util.RefHasher.hash(url)))
 

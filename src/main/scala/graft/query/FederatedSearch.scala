@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * Determinism contract: beliefs are [[ShardSelect.cori]]'s 6dp-rounded
   * outputs (selection ranked on the raw fold, as there); the BM25
-  * algebra is q142's literal shape with shard-local (nd, avgdl, df);
+  * algebra is [[Bm25]]'s Column form (q142's) with shard-local
+  * (nd, avgdl, df);
   * per-(query, shard, url) sums absorb association slack at the shared
   * 6dp rounding; final order (score desc, url asc) per query.
   *
@@ -66,11 +67,7 @@ object FederatedSearch {
       .join(docs, Seq("shard", "url"))
       .join(broadcast(sstats), Seq("shard"))
 
-    val c = log((col("nd") - col("df").cast("double") + lit(0.5)) /
-        (col("df").cast("double") + lit(0.5)) + lit(1.0)) *
-      (col("tf").cast("double") * lit(1.2 + 1.0)) /
-      (col("tf").cast("double") + lit(1.2) *
-        (lit(1.0 - 0.75) + lit(0.75) * col("dl").cast("double") / col("avgdl")))
+    val c = Bm25.contribCol(col("avgdl"), Bm25.idfCol(col("nd")))
     val fin = cand.select(col("query_id"), col("shard"), col("url"),
         col("belief"), c.as("c"))
       .groupBy(col("query_id"), col("shard"), col("url"), col("belief"))

@@ -57,7 +57,8 @@ object Mmr {
       val out = new scala.collection.mutable.ArrayBuffer[(Int, Int, Long, Double)]()
       var pos = 1
       while (pos <= k && picked.length < cands.length) {
-        var bestDoc = -1L
+        var found = false
+        var bestDoc = 0L
         var bestScore = Double.NegativeInfinity
         cands.foreach { case (doc, r) =>
           if (!picked.contains(doc)) {
@@ -70,16 +71,16 @@ object Mmr {
             }
             if (!seen) maxSim = 0.0
             val score = lambda * r - (1 - lambda) * maxSim
-            if (score > bestScore || (score == bestScore && doc < bestDoc)) {
-              bestScore = score; bestDoc = doc
+            if (score > bestScore || (score == bestScore && (!found || doc < bestDoc))) {
+              bestScore = score; bestDoc = doc; found = true
             }
           }
         }
         // every unpicked candidate scoring NaN (NaN rel reaching the public
-        // API) fails both comparisons and leaves bestDoc = -1 — emitting a
-        // phantom doc_id=-1 row; stop instead (ADVICE r5; unreachable from
-        // the q146 driver query, which filters NaN rel upstream)
-        if (bestDoc == -1L) { pos = k + 1 }
+        // API) fails both comparisons and nothing is found; stop instead of
+        // emitting a phantom row (unreachable from the q146 driver query,
+        // which filters NaN rel upstream)
+        if (!found) { pos = k + 1 }
         else {
           out += ((qid, pos, bestDoc, math.rint(bestScore * 1e6) / 1e6))
           picked += bestDoc

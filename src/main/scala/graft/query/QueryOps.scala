@@ -317,9 +317,8 @@ object QueryOps {
     * scorer — no reference url-decode/hygiene semantics, exactly like the
     * driver tier). Queries with no live term emit no rows. */
   def batchBm25TopK(spark: SparkSession, built: BuiltIndex,
-                    queries: Seq[String], k: Int = 10,
-                    k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    batchBm25Core(spark, built, queries, k, k1, b, requireAll = false)
+                    queries: Seq[String], k: Int = 10): DataFrame =
+    batchBm25Core(spark, built, queries, k, requireAll = false)
 
   /** Conjunctive (AND-semantics) batch BM25: only documents containing
     * EVERY parsed surface term of the query are candidates, scored with the
@@ -333,21 +332,13 @@ object QueryOps {
     * per-(query, doc) count equality, applied AFTER the fold so score
     * arithmetic stays identical to the disjunctive twin's. */
   def conjunctiveBm25TopK(spark: SparkSession, built: BuiltIndex,
-                          queries: Seq[String], k: Int = 10,
-                          k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    batchBm25Core(spark, built, queries, k, k1, b, requireAll = true)
-
-  /** The ONE BM25 per-posting contribution expression (expects columns
-    * `idf`, `tf`, `dl`), shared by the exhaustive batch scorer and the
-    * block-max-pruned [[BlockMaxWand]] so their FP values can never drift —
-    * the pruned path's exactness proof assumes bit-identical contributions. */
-  private[query] def bm25ContribCol(k1: Double, b: Double, avgdl: Double): org.apache.spark.sql.Column =
-    col("idf") * (col("tf") * lit(k1 + 1)) /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / lit(avgdl)))
+                          queries: Seq[String], k: Int = 10): DataFrame =
+    batchBm25Core(spark, built, queries, k, requireAll = true)
 
   /** Per-(query, doc) score = fold of contributions in PINNED term-asc
     * order (expects `term`, `c`) — immune to partition reassociation;
-    * shared for the same drift-proofing reason as [[bm25ContribCol]]. */
+    * shared with [[BlockMaxWand]] so the exhaustive and pruned scores
+    * cannot drift — the pruned path's exactness proof needs them equal. */
   private[query] def bm25TermOrderedFold: org.apache.spark.sql.Column =
     aggregate(sort_array(collect_list(struct(col("term"), col("c")))),
       lit(0.0d), (acc, x) => acc + x.getField("c"))
@@ -360,7 +351,7 @@ object QueryOps {
 
   private def batchBm25Core(spark: SparkSession, built: BuiltIndex,
                             queries: Seq[String], k: Int,
-                            k1: Double, b: Double, requireAll: Boolean): DataFrame = {
+                            requireAll: Boolean): DataFrame = {
     import spark.implicits._
     def emptyResult: DataFrame = emptyTopK(spark)
 
@@ -391,10 +382,7 @@ object QueryOps {
     val nd = statsRow.getLong(0)
     if (nd == 0) return emptyResult
     val avgdl = statsRow.getLong(1).toDouble / nd
-    val idfOf = liveTerms.map { t =>
-      val df = dict(t).df
-      t -> math.log((nd - df + 0.5) / (df + 0.5) + 1.0)
-    }
+    val idfOf = liveTerms.map(t => t -> Bm25.idf(nd, dict(t).df))
     val idfDf = broadcast(idfOf.toDF("term", "idf"))
     val weightsDf = broadcast(live.toDF("query_id", "term"))
 
@@ -412,7 +400,7 @@ object QueryOps {
       .join(idfDf, Seq("term"))
       .join(weightsDf, Seq("term"))
       .select($"query_id", $"doc_id", $"url", $"term",
-        bm25ContribCol(k1, b, avgdl).as("c"))
+        Bm25.contribCol(lit(avgdl)).as("c"))
 
     val scoredAll = contrib
       .groupBy($"query_id", $"doc_id", $"url")

@@ -32,9 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Rocchio {
 
-  private val K1 = 1.2
-  private val B = 0.75
-
   /** PRF-expanded BM25 top-k over (url, term, tf) posting triples.
     * Returns (rank, url, score) — score rounded 6dp round-even, order
     * (score desc, url asc). Also exposes the chosen expansion terms via
@@ -54,12 +51,8 @@ object Rocchio {
     val nd = ndL.toDouble
     val avgdl = dlSum.toDouble / nd
 
-    def idfCol = log((lit(nd) - col("df").cast("double") + lit(0.5)) /
-      (col("df").cast("double") + lit(0.5)) + lit(1.0))
-    def bm25c = idfCol *
-      (col("tf").cast("double") * lit(K1 + 1.0)) /
-      (col("tf").cast("double") + lit(K1) *
-        (lit(1.0 - B) + lit(B) * col("dl").cast("double") / lit(avgdl)))
+    def idfCol = Bm25.idfCol(lit(nd))
+    def bm25c = Bm25.contribCol(lit(avgdl), idfCol)
 
     /** Weighted BM25 over a (term, w) table: Σ w·c per url, 6dp-rounded
       * rank (desc, url asc), top `n` collected (n rows only). */

@@ -1,7 +1,6 @@
 package graft.query
 
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import graft.index.{BuiltIndex, DictEntry, IndexBuild, PostingBlock, Varbyte}
 import graft.text.{PorterStemmer, Text}
 
@@ -24,7 +23,7 @@ import graft.text.{PorterStemmer, Text}
   *    backend/Backend.java:40-139,205-330,333-410 exactly (int-division
   *    log500 idf, idf==0 drop, 0.7 stem discount, per-term 200-posting cap,
   *    TreeMap url-asc ties, stable desc sort, top-200).
-  *  - [[bm25TopK]] — the performance scorer: standard BM25(k1,b) over the
+  *  - [[bm25TopK]] — the performance scorer: standard [[Bm25]] over the
   *    impact-ordered blocks with block-max early termination (Anh–Moffat
   *    style impact ordering; the block-max bound plays the WAND θ role).
   */
@@ -158,14 +157,14 @@ final class Searcher(val n: Int,
         size() > 1024
     })
 
-  def bm25TopK(query: String, k: Int = 10, k1: Double = 1.2, b: Double = 0.75): List[(String, Double)] = {
+  def bm25TopK(query: String, k: Int = 10): List[(String, Double)] = {
     val terms = (Text.parseQuery(query).toSet.flatMap { (t: String) =>
       Set(t, PorterStemmer.stem(t))
     }).toSeq.sorted.filter(dict.contains)
     if (terms.isEmpty) return Nil
 
     def contribution(idf: Double, tf: Int, dl: Long): Double =
-      idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+      Bm25.contribution(idf, tf, dl, avgdl)
 
     final case class TermState(term: String, idf: Double,
                                blocks: IndexedSeq[PostingBlock], var next: Int) {
@@ -174,9 +173,7 @@ final class Searcher(val n: Int,
         else contribution(idf, blocks(next).max_tf, dlMin)
     }
     val states = terms.map { t =>
-      val d = dict(t)
-      val idf = math.log((numDocs - d.df + 0.5) / (d.df + 0.5) + 1.0)
-      TermState(t, idf, blocksOf(t), 0)
+      TermState(t, Bm25.idf(numDocs, dict(t).df), blocksOf(t), 0)
     }.toArray
     def decodedDocOrder(st: TermState, idx: Int): (Array[Long], Array[Int]) = {
       val key = (st.term, idx)
@@ -460,9 +457,9 @@ object Searcher {
   }
 
   /** Every term either scorer can touch for a query: surface forms plus
-    * their Porter stems. The SINGLE superset contract LazySearcher's block
-    * prefetch relies on — a new expansion variant in referenceTopK/bm25TopK
-    * must extend THIS set or the lazy tier silently under-fetches. */
+    * their Porter stems — the term rule the batch twins ([[QueryOps]],
+    * [[BlockMaxWand]]) share with [[bm25TopK]]; a new expansion variant in
+    * referenceTopK/bm25TopK must extend THIS set or the twins drift. */
   def expansionTerms(query: String): Seq[String] = {
     val surface = Text.parseQuery(query)
     (surface ++ surface.map(PorterStemmer.stem)).distinct
@@ -480,14 +477,14 @@ object Searcher {
     val blocks = groupBlocks(built.blocks.collect().toIndexedSeq)
     // loud cliff, like the engine's Fnv/collision guards: this eager tier
     // array-indexes by doc_id.toInt, so it is bounded at 2^31 docs — past
-    // that, serve from DirectSearcher (mmap shards) or LazySearcher instead.
+    // that, serve from DirectSearcher (mmap shards) instead.
     // The count() is one extra narrow job over the (session-persisted) docs
     // — the price of failing with THIS message instead of the driver OOM a
     // 2-billion-row collect() would die with
     val numDocs = built.docs.count()
     require(numDocs < Int.MaxValue,
       s"eager Searcher tier holds doc arrays in driver memory and is bounded at ${Int.MaxValue} docs " +
-      s"(corpus has $numDocs); use DirectSearcher or LazySearcher for larger corpora")
+      s"(corpus has $numDocs); use DirectSearcher for larger corpora")
     val docs = built.docs.collect()
     val urlArr = new Array[String](docs.length)
     val dlArr = new Array[Long](docs.length)
@@ -498,8 +495,4 @@ object Searcher {
     new Searcher(n, dict, t => blocks.getOrElse(t, IndexedSeq.empty), id => urlArr(id.toInt), id => dlArr(id.toInt),
       avgdl, dlMin, docs.length.toLong)
   }
-
-  /** Load from index artifacts persisted by [[IndexBuild.save]]. */
-  def load(spark: SparkSession, dir: String, n: Int): Searcher =
-    fromIndex(IndexBuild.load(spark, dir), n)
 }

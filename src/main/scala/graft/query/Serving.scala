@@ -1,9 +1,5 @@
 package graft.query
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
-import graft.util.RefHasher
-
 /** The reference Backend's two HTTP response bodies, composed end-to-end
   * over this engine's artifacts (the Spark library's "switch-over surface"
   * for a reference user; the HTTP framing itself is out of scope per the
@@ -12,8 +8,8 @@ import graft.util.RefHasher
   *  - `GET /query?query=…` → ranked-result JSON array
   *    (Backend.java:74-139, 613-635);
   *  - `GET /query/:url` → page-info JSON object (Backend.java:416-482,
-  *    638-655) — a point lookup on the pages table keyed by
-  *    `Hasher.hash(url)` feeding the title-regex info map.
+  *    638-655) over the page a point lookup keyed by `Hasher.hash(url)`
+  *    returns ([[DirectPages.detailJson]]), via the title-regex info map.
   */
 object Serving {
 
@@ -51,78 +47,8 @@ object Serving {
     sb.append("}").toString
   }
 
-  /** `GET /query` response body: rank via any scorer tier (eager searcher,
-    * LazySearcher, …), serialize like Backend.java:613-635. */
+  /** `GET /query` response body: rank via any scorer tier (eager
+    * [[Searcher]], [[DirectSearcher]]), serialize like Backend.java:613-635. */
   def searchJson(topK: String => List[(String, Double)], query: String): String =
     DocDetail.toJsonArray(topK(query))
-
-  /** The pages DataFrame is resolved ONCE per (session, dir) and reused by
-    * every lookup: resolving it per call would re-read parquet footers and
-    * re-analyze the plan on every doc-detail request (round-2 verdict
-    * "What's wrong" #2). Keyed by applicationId so entries never cross
-    * Spark sessions. `pagesLoads` is exposed so ServingSpec can assert the
-    * single resolution. */
-  private val pagesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.DataFrame]()
-  private[query] val pagesLoads = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** appId → SparkContext, so dead-session entries (whose cached DataFrames
-    * reference a stopped context) are evicted on the next access instead of
-    * accumulating for the JVM's lifetime. */
-  private val cacheOwners =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.SparkContext]()
-
-  /** The ONE cache-key spelling: absolute + normalized, so a relative and
-    * an absolute spelling of the same directory share one entry — with
-    * normalize() alone ('data/pages' vs '/cwd/data/pages') the stale-listing
-    * eviction could evict one spelling while the other kept serving the
-    * stale resolved listing, the exact failure the normalization prevents. */
-  private def cacheKey(spark: SparkSession, pagesDir: String): (String, String) =
-    (spark.sparkContext.applicationId,
-      java.nio.file.Paths.get(pagesDir).toAbsolutePath.normalize().toString)
-
-  private def pagesTable(spark: SparkSession, pagesDir: String): org.apache.spark.sql.DataFrame = {
-    cacheOwners.putIfAbsent(spark.sparkContext.applicationId, spark.sparkContext)
-    val it = cacheOwners.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.isStopped) {
-        pagesCache.keySet.removeIf(_._1 == e.getKey); it.remove()
-      }
-    }
-    pagesCache.computeIfAbsent(cacheKey(spark, pagesDir), _ => {
-      pagesLoads.incrementAndGet()
-      spark.read.parquet(pagesDir)
-    })
-  }
-
-  /** `GET /query/:url` response body: point lookup on a pages table keyed
-    * by the reference row-key hash (written key-sorted → row-group-pruned
-    * fetch), then the info map. Missing url → the default info map, like
-    * the reference's null-row branch. */
-  def detailJson(spark: SparkSession, pagesDir: String, url: String): String = {
-    val key = RefHasher.hash(url)
-    def fetch(): Option[String] =
-      // limit(1): a point lookup must not collect every matching row (keys
-      // are unique by construction, but a bounded scan is free insurance)
-      pagesTable(spark, pagesDir)
-        .filter(col("key") === key)
-        .select(col("html"))
-        .limit(1)
-        .collect().headOption.map(_.getString(0))
-    val row =
-      try fetch()
-      catch {
-        case e: org.apache.spark.SparkException
-            if e.getMessage != null && e.getMessage.contains("FileNotFound") =>
-          // the pages table was republished under this dir (new part files):
-          // drop the stale resolved listing and retry once
-          pagesCache.remove(cacheKey(spark, pagesDir))
-          fetch()
-        case _: java.io.FileNotFoundException =>
-          pagesCache.remove(cacheKey(spark, pagesDir))
-          fetch()
-      }
-    pageInfoJson(url, row)
-  }
 }

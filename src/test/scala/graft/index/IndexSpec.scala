@@ -2,6 +2,8 @@ package graft.index
 
 import scala.io.Source
 import org.apache.spark.sql.SparkSession
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
 import graft.oracle.Oracle
@@ -389,7 +391,16 @@ class IndexSpec extends AnyFunSuite {
     val dlOf = docs.map(d => d.doc_id -> d.dl).toMap
     val avgdl = docs.map(_.dl.toDouble).sum / docs.length
     val blocks = built.blocks.collect().groupBy(_.term)
-    for (q <- Seq("galaxy engine", "prince officer soldier", "the of", "history")) {
+    // the fixed queries plus 50 generated 1-4-term queries drawn from the
+    // dictionary (fixed seed): multi-term finish-pass exactness beyond
+    // hand-picked inputs
+    val vocab = dict.keys.toVector.sorted
+    val genQuery = for {
+      n <- Gen.choose(1, 4)
+      ts <- Gen.listOfN(n, Gen.oneOf(vocab))
+    } yield ts.mkString(" ")
+    val generated = Gen.listOfN(50, genQuery).pureApply(Gen.Parameters.default, Seed(383L))
+    for (q <- Seq("galaxy engine", "prince officer soldier", "the of", "history") ++ generated) {
       val terms = (graft.text.Text.parseQuery(q).toSet
         .flatMap((t: String) => Set(t, graft.text.PorterStemmer.stem(t))))
         .toSeq.sorted.filter(dict.contains)

@@ -189,7 +189,7 @@ class SegmentedIndexSpec extends AnyFunSuite {
     val pages = Corpus.generate(spark, 150)
     val built = IndexBuild.build(spark, pages, Corpus.lexicon, parts = 4, blockSize = 64)
     IndexBuild.save(spark, built, dir)
-    val reloaded = Searcher.load(spark, dir, 150)
+    val reloaded = Searcher.fromIndex(IndexBuild.load(spark, dir), 150)
     val direct = Searcher.fromIndex(built, 150)
     for (q <- queries)
       assert(reloaded.referenceTopK(q) == direct.referenceTopK(q), s"query '$q'")

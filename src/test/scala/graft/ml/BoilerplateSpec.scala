@@ -66,22 +66,4 @@ class BoilerplateSpec extends AnyFunSuite {
     val at60 = strip(rows, minFrac = 0.6)
     assert(at60(1L)._1 == "top line body one")
   }
-
-  test("hashedLines mode returns the exact string-key results") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, "a", "nav bar alpha beta"),
-      (2L, "a", "nav bar gamma delta"),
-      (3L, "a", "nav bar epsilon zeta"),
-      (4L, "b", "nav bar eta theta"),
-      (5L, "b", "iota kappa"),
-      (6L, "b", "lambda mu")).toDF("doc_id", "source", "text")
-    val str = Boilerplate.stripSourceBoilerplate(
-        rows, "doc_id", "source", "text", lineTokens = 2)
-      .collect().map(_.toSeq).toSet
-    val hsh = Boilerplate.stripSourceBoilerplate(
-        rows, "doc_id", "source", "text", lineTokens = 2, hashedLines = true)
-      .collect().map(_.toSeq).toSet
-    assert(hsh == str, s"hashed-line boilerplate diverges:\n$hsh\nvs\n$str")
-  }
 }

@@ -302,20 +302,6 @@ class MlSpec extends AnyFunSuite {
     assert(out(4L) == (("", 0L, 0L)))
   }
 
-  test("line dedup hashedLines mode returns the exact string-key results") {
-    val footer = (1 to 10).map(i => s"footer$i").mkString(" ")
-    def uniq(d: Int) = (1 to 10).map(i => s"doc${d}tok$i").mkString(" ")
-    val rows = Seq(
-      (0L, uniq(0) + " " + footer), (1L, footer + " " + uniq(1)),
-      (2L, footer), (3L, uniq(3) + " short tail"), (4L, ""))
-    val df = rows.toDF("doc_id", "text")
-    val str = TextAnalysis.lineDedup(df, "doc_id", "text")
-      .collect().map(_.toSeq).toSet
-    val hsh = TextAnalysis.lineDedup(df, "doc_id", "text", hashedLines = true)
-      .collect().map(_.toSeq).toSet
-    assert(hsh == str, s"hashed-line dedup diverges:\n$hsh\nvs\n$str")
-  }
-
   test("decontamination flags 13-gram overlap, not 12-gram, case-insensitive") {
     val bench13 = (1 to 13).map(i => s"ev$i").mkString(" ")
     val rows = Seq(

@@ -9,8 +9,8 @@ import graft.util.RefHasher
 
 /** The no-Spark-job doc-detail tier: [[DirectIndex.writePages]] +
   * [[DirectPages]] must return `GET /query/:url` payloads byte-identical to
-  * [[Serving.detailJson]] over the parquet pages table, schedule zero Spark
-  * jobs per lookup, and read only a tiny fraction of the page store. */
+  * [[Serving.pageInfoJson]] over the stored page, schedule zero Spark jobs
+  * per lookup, and read only a tiny fraction of the page store. */
 class DirectPagesSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -28,12 +28,6 @@ class DirectPagesSpec extends AnyFunSuite {
       .map(p => (RefHasher.hash(p.url), p.url, new String(p.html, "UTF-8")))
       .toDF("key", "url", "html")
   }
-  lazy val parquetDir = {
-    val d = Files.createTempDirectory("graft-pages-pq").toFile.getAbsolutePath
-    keyed.repartition(1).sortWithinPartitions("key")
-      .write.mode("overwrite").parquet(d)
-    d
-  }
   lazy val sidecarDir = {
     val d = Files.createTempDirectory("graft-pages-direct").toFile.getAbsolutePath
     DirectIndex.writePages(keyed, d)
@@ -41,11 +35,13 @@ class DirectPagesSpec extends AnyFunSuite {
   }
 
   test("direct doc detail is payload-identical to the Spark tier, zero jobs per lookup") {
-    val urls = keyed.select("url").collect().map(_.getString(0))
+    val rows = keyed.select("url", "html").collect().map(r => (r.getString(0), r.getString(1)))
+    val htmlByUrl = rows.toMap
+    val urls = rows.map(_._1)
     val probe = urls.take(7) ++ urls.takeRight(3) ++
       Seq("http://absent.example/none", "not a url at all", "")
-    // Spark-tier expectations first (these DO run jobs)
-    val expected = probe.map(u => u -> Serving.detailJson(spark, parquetDir, u)).toMap
+    // expectations first (collecting `keyed` above DID run jobs)
+    val expected = probe.map(u => u -> Serving.pageInfoJson(u, htmlByUrl.get(u))).toMap
 
     val direct = DirectPages.open(sidecarDir)
     var jobs = 0

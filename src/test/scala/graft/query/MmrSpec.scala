@@ -67,10 +67,12 @@ class MmrSpec extends AnyFunSuite {
   }
 
   test("queries are independent groups") {
-    val two = rel ++ Seq((1, 7L, 0.3), (1, 8L, 0.9))
+    // query 2's relevance leader has doc_id -1: a real id, not "no pick"
+    val two = rel ++ Seq((1, 7L, 0.3), (1, 8L, 0.9), (2, 9L, 0.4), (2, -1L, 0.8))
     val got = run(two, sims, 0.7, 2)
     assert(got.filter(_._1 == 1).map(_._3) == Seq(8L, 7L))
     assert(got.filter(_._1 == 0).map(_._3) == Seq(1L, 3L))
+    assert(got.filter(_._1 == 2).map(_._3) == Seq(-1L, 9L))
   }
 
   test("bad args are loud") {

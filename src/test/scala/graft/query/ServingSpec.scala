@@ -7,10 +7,10 @@ import graft.corpus.Corpus
 import graft.index.IndexBuild
 import graft.util.RefHasher
 
-/** End-to-end reference response bodies over the engine's artifacts:
-  * ranked-list JSON from either serving tier, and the keyed point-lookup
-  * detail JSON with the reference's HashMap-order serialization and
-  * default branches. */
+/** End-to-end reference response bodies over the direct tier: the
+  * ranked-list JSON of `/query` and the keyed point-lookup detail JSON of
+  * `/query/:url`, with the reference's HashMap-order serialization and
+  * default branches, byte-identical through the HTTP routes. */
 class ServingSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -21,49 +21,6 @@ class ServingSpec extends AnyFunSuite {
     .getOrCreate()
 
   val numDocs = 120
-
-  lazy val (pagesDir, searcher, lazySearcher) = {
-    import spark.implicits._
-    val base = Files.createTempDirectory("serving").toString
-    val pages = Corpus.generate(spark, numDocs)
-    pages.map(p => (RefHasher.hash(p.url), p.url, new String(p.html, "UTF-8")))
-      .toDF("key", "url", "html")
-      .sortWithinPartitions("key")
-      .write.parquet(s"$base/pages")
-    val built = IndexBuild.build(spark, pages, Corpus.lexicon, parts = 4, blockSize = 64)
-    val idxDir = s"$base/index"
-    IndexBuild.save(spark, built, idxDir)
-    (s"$base/pages", Searcher.fromIndex(built, numDocs),
-      LazySearcher.open(spark, idxDir, numDocs))
-  }
-
-  test("GET /query body: ranked JSON array, identical from both tiers") {
-    val viaEager = Serving.searchJson(q => searcher.referenceTopK(q), "galaxy engine")
-    val viaLazy = Serving.searchJson(q => lazySearcher.referenceTopK(q), "galaxy engine")
-    assert(viaEager == viaLazy)
-    assert(viaEager.startsWith("[{\"url\":\"") && viaEager.endsWith("\"}]"))
-    val expected = DocDetail.toJsonArray(searcher.referenceTopK("galaxy engine"))
-    assert(viaEager == expected)
-  }
-
-  test("GET /query/:url body: keyed point lookup + HashMap-order info JSON") {
-    val url = Corpus.urlOf(7, 16)
-    val html = new String(Corpus.makePage(7, numDocs, 16, 42L).html, "UTF-8")
-    val got = Serving.detailJson(spark, pagesDir, url)
-    assert(got == Serving.pageInfoJson(url, Some(html)))
-    // quirk: extracted title rides under "abstract"; "title" stays the url
-    val title = DocDetail.getTitle(html)
-    assert(got.contains("\"abstract\":\"" + title + "\""))
-    assert(got.contains("\"title\":\"" + url + "\""))
-    // all three keys present exactly once, object-shaped
-    assert(got.count(_ == '{') == 1 && got.count(_ == '}') == 1)
-  }
-
-  test("GET /query/:url body for an unknown url: default info map") {
-    val got = Serving.detailJson(spark, pagesDir, "http://nowhere.example/missing")
-    assert(got == Serving.pageInfoJson("http://nowhere.example/missing", None))
-    assert(got.contains("\"abstract\":\"No Information Available\""))
-  }
 
   test("HTTP surface round-trips byte-identical bodies over the direct tier") {
     import spark.implicits._
@@ -103,13 +60,25 @@ class ServingSpec extends AnyFunSuite {
         assert(body == Serving.searchJson(
           x => ds.referenceTopK(x, Some(dr.prFunction)), q), s"query '$q'")
       }
-      // /query/:url: byte-identical detail JSON, hit + miss
+      // /query body shape: a JSON array of url/score objects
+      val ranked = get("/query?query=galaxy+engine")._2
+      assert(ranked.startsWith("[{\"url\":\"") && ranked.endsWith("\"}]"))
+      // /query/:url: keyed point lookup + HashMap-order info JSON, hit + miss
       val url = Corpus.urlOf(7, 16)
+      val html = new String(Corpus.makePage(7, numDocs, 16, 42L).html, "UTF-8")
+      val hit = dp.detailJson(url)
+      assert(hit == Serving.pageInfoJson(url, Some(html)))
+      // quirk: extracted title rides under "abstract"; "title" stays the url
+      assert(hit.contains("\"abstract\":\"" + DocDetail.getTitle(html) + "\""))
+      assert(hit.contains("\"title\":\"" + url + "\""))
+      // all three keys present exactly once, object-shaped
+      assert(hit.count(_ == '{') == 1 && hit.count(_ == '}') == 1)
       val encUrl = java.net.URLEncoder.encode(url, "UTF-8")
-      assert(get(s"/query/$encUrl")._2 == dp.detailJson(url))
+      assert(get(s"/query/$encUrl")._2 == hit)
       val miss = java.net.URLEncoder.encode("http://nowhere.example/x", "UTF-8")
-      assert(get(s"/query/$miss")._2 ==
-        Serving.pageInfoJson("http://nowhere.example/x", None))
+      val missBody = get(s"/query/$miss")._2
+      assert(missBody == Serving.pageInfoJson("http://nowhere.example/x", None))
+      assert(missBody.contains("\"abstract\":\"No Information Available\""))
       // missing query param serves the empty query's list; junk path 404s
       assert(get("/query")._1 == 200)
       assert(get("/nope")._1 == 404)
@@ -118,14 +87,5 @@ class ServingSpec extends AnyFunSuite {
       assert(get("/query?query=%zz")._1 == 400)
       assert(get("/query/http%zz")._1 == 400)
     } finally srv.stop()
-  }
-
-  test("pages table is resolved once across repeated lookups") {
-    Serving.detailJson(spark, pagesDir, Corpus.urlOf(1, 16)) // ensure cached
-    val before = Serving.pagesLoads.get()
-    for (i <- 2L to 20L)
-      Serving.detailJson(spark, pagesDir, Corpus.urlOf(i, 16))
-    assert(Serving.pagesLoads.get() == before,
-      "every lookup after the first must reuse the resolved pages table")
   }
 }
