@@ -1,6 +1,6 @@
 package graft.query
 
-import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
 import java.nio.channels.FileChannel
 import java.nio.file.{StandardCopyOption, StandardOpenOption}
 import org.apache.spark.TaskContext
@@ -26,8 +26,7 @@ import graft.index.{BuiltIndex, DictEntry, PostingBlock}
   *  - `dict.bin`    — term → (df, max_tf); lexicon-bounded, loaded whole;
   *  - `terms.manifest` + `terms-<pid>.idx` — per-partition term → ordered
   *                    (part_id, seq, shard, offset) block refs, merged at
-  *                    open into serving order (part_id asc, seq asc); the
-  *                    legacy single global `terms.idx` stays readable;
+  *                    open into serving order (part_id asc, seq asc);
   *  - `blocks-<pid>.bin` — per block: n, max_tf, the three varbyte payload
   *                    lengths, payloads (delta-coded doc ids, tfs, serving
   *                    permutation) — read with ONE seek per block;
@@ -36,6 +35,18 @@ import graft.index.{BuiltIndex, DictEntry, PostingBlock}
   *                    then the per-doc offset table (doc ids are dense and
   *                    range-sorted, so a shard's table is indexed by
   *                    `id - minId`).
+  *
+  * The two KEY families, `pages` ([[writePages]]) and `ranks`
+  * ([[writeRanks]]), share ONE key-table layout (the reference keeps both as
+  * tables of one KVS keyed by the url's row-key hash):
+  *  - `<family>-<sid>.bin` — `[len][bytes]` records streamed first, then a
+  *                    fixed-width `[40-byte key][8-byte offset]` table in
+  *                    key order;
+  *  - `<family>.idx` — `[n]` then per shard (sid, count, table position,
+  *                    min key, max key); shard key ranges are disjoint.
+  *
+  * Every fixed-width `.idx` is length-checked at open (`4 + n × rowBytes`),
+  * so a truncated, padded or foreign index fails instead of misparsing.
   */
 object DirectIndex {
 
@@ -51,8 +62,7 @@ object DirectIndex {
   // pointer at open; a reader opened before a rewrite keeps serving every
   // shard it has already mapped (mmap holds the inode past the GC unlink),
   // but its unmapped shards die with the GC — a production rollover reopens
-  // (cheap: index files only) on pointer change. A dir with no pointer file
-  // is read flat (pre-generation layout).
+  // (cheap: index files only) on pointer change.
   private def newGenDir(dir: String, family: String): File = {
     val d = new File(dir, s"$family-gen-${System.currentTimeMillis()}-${System.nanoTime() % 1000000}")
     require(d.mkdirs(), s"cannot create generation dir $d")
@@ -72,13 +82,13 @@ object DirectIndex {
     })
   }
 
-  /** The directory a reader should serve `family` from: the committed
-    * generation if a pointer exists, else `dir` itself (flat layout). */
+  /** The committed generation a reader should serve `family` from, named
+    * by the `current.<family>` pointer every writer commits. A dir without
+    * that pointer holds no servable generation and fails loudly. */
   private[query] def resolveDir(dir: String, family: String): String = {
-    val p = new File(dir, s"current.$family").toPath
-    if (java.nio.file.Files.exists(p))
-      new File(dir, new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim).getAbsolutePath
-    else dir
+    val p = new File(dir, s"current.$family")
+    require(p.isFile, s"$p not found: no committed $family generation under $dir")
+    new File(dir, new String(java.nio.file.Files.readAllBytes(p.toPath), "UTF-8").trim).getAbsolutePath
   }
 
   // ------------------------------------------- attempt-isolated shard writes
@@ -179,20 +189,15 @@ object DirectIndex {
       "driver-shared filesystem: run in local mode, or point `dir` at a shared " +
       "mount visible to every executor and set -Dgraft.direct.fs.shared=true")
 
-  /** Write the serving sidecar. `perShardIndex = true` (the default, the
-    * production layout) has each blocks task write its OWN `terms-<pid>.idx`
-    * next to its shard rolls and return ONE record per index file to the
-    * driver, which writes only a tiny `terms.manifest` — driver transit is
-    * bounded by the shard count, like the reference's KVS workers owning
-    * their own rows. `false` keeps the legacy single global `terms.idx`
-    * (one record per posting BLOCK through the driver — fine at test scale,
-    * ~25M records at 10^11 postings, which is why it is no longer the
-    * default). Readers accept both layouts. Returns the number of records
-    * that transited the driver for the blocks index (observability for the
+  /** Write the serving sidecar. Each blocks task writes its OWN
+    * `terms-<pid>.idx` next to its shard rolls and returns ONE record per
+    * index file to the driver, which writes only a tiny `terms.manifest` —
+    * driver transit is bounded by the shard count, like the reference's KVS
+    * workers owning their own rows. Returns the number of records that
+    * transited the driver for the blocks index (observability for the
     * bounded-transit contract). */
   def write(built: BuiltIndex, dir: String,
-            maxShardBytes: Long = DefaultMaxShardBytes,
-            perShardIndex: Boolean = true): Int = {
+            maxShardBytes: Long = DefaultMaxShardBytes): Int = {
     new File(dir).mkdirs()
     val gen = newGenDir(dir, "index")
     val dirAbs = gen.getAbsolutePath
@@ -201,9 +206,9 @@ object DirectIndex {
     import spark.implicits._
 
     // ---- blocks shards: each task streams its partition, rolling files
-    // at the size cap; the per-block index records stay TASK-LOCAL in the
-    // per-shard layout (written to the task's own terms-<pid>.idx) ----
-    val blockRecords = built.blocks.mapPartitions { it =>
+    // at the size cap; the per-block index records stay TASK-LOCAL (written
+    // to the task's own terms-<pid>.idx) ----
+    val indexPids = built.blocks.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       val roll = new RollingShard(dirAbs, "blocks", pid, maxShardBytes, 0L)
       val acc = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int, Int, Long)]
@@ -220,8 +225,7 @@ object DirectIndex {
         }
         roll.finish()
       } catch { case e: Throwable => roll.abort(); throw e }
-      if (!perShardIndex) acc.iterator
-      else if (acc.isEmpty) Iterator.empty
+      if (acc.isEmpty) Iterator.empty
       else {
         // this task's own index sidecar: refs carry (part_id, seq) so the
         // open-time merge can restore global serving order. Attempt-isolated
@@ -250,37 +254,18 @@ object DirectIndex {
           // commit to carry forever
           case e: Throwable => tmp.delete(); throw e
         }
-        // ONE driver record per index file: (marker, pid, nTerms, 0, 0)
-        Iterator.single(("", pid, byTerm.size, 0, 0L))
+        // ONE driver record per index file
+        Iterator.single(pid)
       }
     }.collect()
 
-    val driverRecords = blockRecords.length
-    if (perShardIndex) {
-      // terms.manifest: the per-partition index files to merge at open
-      val mf = new DataOutputStream(new BufferedOutputStream(
-        new FileOutputStream(new File(dirAbs, "terms.manifest"))))
-      try {
-        val pids = blockRecords.map(_._2).sorted
-        mf.writeInt(pids.length)
-        pids.foreach(mf.writeInt)
-      } finally mf.close()
-    } else {
-      // legacy global terms.idx: per term, block refs in serving order
-      val byTerm = blockRecords.groupBy(_._1)
-      val idx = new DataOutputStream(new BufferedOutputStream(
-        new FileOutputStream(new File(dirAbs, "terms.idx"))))
-      try {
-        idx.writeInt(byTerm.size)
-        for ((term, refs) <- byTerm.toSeq.sortBy(_._1)) {
-          val tb = term.getBytes("UTF-8")
-          idx.writeInt(tb.length); idx.write(tb)
-          val ordered = refs.sortBy(r => (r._2, r._3)) // (part_id, seq)
-          idx.writeInt(ordered.length)
-          for ((_, _, _, shard, off) <- ordered) { idx.writeInt(shard); idx.writeLong(off) }
-        }
-      } finally idx.close()
-    }
+    // terms.manifest: the per-partition index files to merge at open
+    val mf = new DataOutputStream(new BufferedOutputStream(
+      new FileOutputStream(new File(dirAbs, "terms.manifest"))))
+    try {
+      mf.writeInt(indexPids.length)
+      indexPids.sorted.foreach(mf.writeInt)
+    } finally mf.close()
 
     // ---- docs shards: range-sorted by doc_id → contiguous id ranges,
     // rolled at the size cap (each roll is its own contiguous id subrange
@@ -356,11 +341,11 @@ object DirectIndex {
     } finally mout.close()
 
     commitGen(dir, "index", gen)
-    driverRecords
+    indexPids.length
   }
 
   private[query] def readDict(dir: String): Map[String, DictEntry] = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(
+    val in = new DataInputStream(new BufferedInputStream(
       new FileInputStream(new File(dir, "dict.bin"))))
     try {
       val n = in.readInt()
@@ -376,77 +361,62 @@ object DirectIndex {
     } finally in.close()
   }
 
-  /** Term → block refs in serving order, from EITHER index layout: the
-    * per-shard layout (`terms.manifest` + one `terms-<pid>.idx` per blocks
-    * partition, merged here — entries carry (part_id, seq) so the global
-    * serving order is restored across partitions) or the legacy global
-    * `terms.idx`. The merged map is lexicon-bounded either way, so open-time
-    * memory is unchanged; what the per-shard layout removes is the
-    * per-BLOCK fan-in through the write-time driver. */
+  /** Term → block refs in serving order: the `terms.manifest` names one
+    * `terms-<pid>.idx` per blocks partition, merged here — entries carry
+    * (part_id, seq) so the global serving order is restored across
+    * partitions. The merged map is lexicon-bounded; the per-shard files keep
+    * per-BLOCK records out of the write-time driver. */
   private[query] def readTermRefs(dir: String): Map[String, IndexedSeq[BlockRef]] = {
-    val manifest = new File(dir, "terms.manifest")
-    if (manifest.exists()) {
-      val pids = {
-        val in = new DataInputStream(new java.io.BufferedInputStream(
-          new FileInputStream(manifest)))
-        try IndexedSeq.fill(in.readInt())(in.readInt()) finally in.close()
-      }
-      val acc = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[(Int, Int, BlockRef)]]
-      for (pid <- pids) {
-        val in = new DataInputStream(new java.io.BufferedInputStream(
-          new FileInputStream(new File(dir, s"terms-$pid.idx"))))
-        try {
-          val n = in.readInt()
-          var i = 0
-          while (i < n) {
-            val tb = new Array[Byte](in.readInt()); in.readFully(tb)
-            val term = new String(tb, "UTF-8")
-            val cnt = in.readInt()
-            val buf = acc.getOrElseUpdate(term,
-              scala.collection.mutable.ArrayBuffer.empty[(Int, Int, BlockRef)])
-            var j = 0
-            while (j < cnt) {
-              val bPid = in.readInt(); val seq = in.readInt()
-              buf += ((bPid, seq, BlockRef(in.readInt(), in.readLong())))
-              j += 1
-            }
-            i += 1
-          }
-        } finally in.close()
-      }
-      acc.iterator.map { case (t, refs) =>
-        t -> refs.sortBy(r => (r._1, r._2)).map(_._3).toIndexedSeq
-      }.toMap
-    } else {
-      val in = new DataInputStream(new java.io.BufferedInputStream(
-        new FileInputStream(new File(dir, "terms.idx"))))
+    val pids = {
+      val in = new DataInputStream(new BufferedInputStream(
+        new FileInputStream(new File(dir, "terms.manifest"))))
+      try IndexedSeq.fill(in.readInt())(in.readInt()) finally in.close()
+    }
+    val acc = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[(Int, Int, BlockRef)]]
+    for (pid <- pids) {
+      val in = new DataInputStream(new BufferedInputStream(
+        new FileInputStream(new File(dir, s"terms-$pid.idx"))))
       try {
         val n = in.readInt()
-        val b = Map.newBuilder[String, IndexedSeq[BlockRef]]
         var i = 0
         while (i < n) {
           val tb = new Array[Byte](in.readInt()); in.readFully(tb)
           val term = new String(tb, "UTF-8")
           val cnt = in.readInt()
-          val refs = IndexedSeq.newBuilder[BlockRef]
+          val buf = acc.getOrElseUpdate(term,
+            scala.collection.mutable.ArrayBuffer.empty[(Int, Int, BlockRef)])
           var j = 0
-          while (j < cnt) { refs += BlockRef(in.readInt(), in.readLong()); j += 1 }
-          b += term -> refs.result()
+          while (j < cnt) {
+            val bPid = in.readInt(); val seq = in.readInt()
+            buf += ((bPid, seq, BlockRef(in.readInt(), in.readLong())))
+            j += 1
+          }
           i += 1
         }
-        b.result()
       } finally in.close()
     }
+    acc.iterator.map { case (t, refs) =>
+      t -> refs.sortBy(r => (r._1, r._2)).map(_._3).toIndexedSeq
+    }.toMap
   }
 
-  private[query] def readDocShards(dir: String): IndexedSeq[(Int, Long, Int, Long)] = {
-    val in = new DataInputStream(new FileInputStream(new File(dir, "docs.idx")))
+  /** `[n]` then n fixed-width rows of `rowBytes` each. The file length must
+    * be exactly `4 + n × rowBytes`: a truncated or padded index, or one in
+    * another row layout, fails here instead of being misparsed. */
+  private def readRows[A](dir: String, name: String, rowBytes: Int)(row: DataInputStream => A): IndexedSeq[A] = {
+    val f = new File(dir, name)
+    val in = new DataInputStream(new BufferedInputStream(new FileInputStream(f)))
     try {
-      val n = in.readInt()
-      IndexedSeq.fill(n)((in.readInt(), in.readLong(), in.readInt(), in.readLong()))
+      val n = if (f.length() >= 4) in.readInt() else -1
+      require(n >= 0 && f.length() == 4L + n.toLong * rowBytes,
+        s"$f: ${f.length()} bytes does not hold [n = $n] + n rows of $rowBytes bytes — truncated, padded or foreign-layout index")
+      IndexedSeq.fill(n)(row(in))
     } finally in.close()
   }
+
+  private[query] def readDocShards(dir: String): IndexedSeq[(Int, Long, Int, Long)] =
+    readRows(dir, "docs.idx", 24)(in => (in.readInt(), in.readLong(), in.readInt(), in.readLong()))
 
   private[query] def readMeta(dir: String): (Long, Long, Long) = {
     val in = new DataInputStream(new FileInputStream(new File(dir, "meta.bin")))
@@ -469,41 +439,38 @@ object DirectIndex {
     } finally ch.close()
   }
 
-  // ------------------------------------------------------- pages (doc detail)
+  // ------------------------------------------------ key tables (pages, ranks)
 
   /** [[graft.util.RefHasher.hash]] emits 20 lowercase-ASCII char pairs, so
-    * page keys are FIXED-WIDTH 40 bytes and byte order == string order —
+    * row keys are FIXED-WIDTH 40 bytes and byte order == string order —
     * the shard key tables binary-search raw bytes, no decode per probe. */
-  private[query] val PageKeyWidth = 40
+  private val KeyWidth = 40
+  /** One `<family>.idx` row: sid, count, table position, min key, max key. */
+  private val KeyIdxRowBytes = 4 + 4 + 8 + 2 * KeyWidth
 
-  /** Sidecar pages shards for the no-Spark-job `GET /query/:url` flow (the
-    * reference Backend keeps pages in its KVS and point-fetches by row key,
-    * Backend.java:416-482 — this is that shape on shard files).
-    *
-    * `keyed` must have (key: String — the reference row-key hash, html:
-    * String). A global sort on key range-partitions the table into DISJOINT
-    * sorted key ranges; each task streams `pages-<pid>.bin`:
-    * `[htmlLen][htmlBytes]` records first, then a fixed-width
-    * `[40-byte key][8-byte offset]` table. Only per-shard index rows
-    * (count, table position, min/max key — a few dozen bytes) return to the
-    * driver, which writes `pages.idx`. Serving memory is O(shards); lookups
-    * binary-search the mmap'd table. */
-  def writePages(keyed: org.apache.spark.sql.DataFrame, dir: String,
-                 maxShardBytes: Long = DefaultMaxShardBytes): Unit = {
+  /** THE key-table writer both key families share. `rows` holds (key — the
+    * reference row-key hash, value). A global sort on key range-partitions
+    * the table into DISJOINT sorted key ranges; each task streams
+    * `<family>-<sid>.bin`: `[len][encode(value)]` records first, then the
+    * fixed-width `[40-byte key][8-byte offset]` table. Only per-shard index
+    * rows (a few dozen bytes) return to the driver, which writes
+    * `<family>.idx`. */
+  private def writeKeyTable[V](rows: org.apache.spark.sql.Dataset[(String, V)], dir: String,
+                               family: String, maxShardBytes: Long)(encode: V => Array[Byte]): Unit = {
     new File(dir).mkdirs()
-    val gen = newGenDir(dir, "pages")
+    val gen = newGenDir(dir, family)
     val dirAbs = gen.getAbsolutePath
-    val spark = keyed.sparkSession
+    val spark = rows.sparkSession
     requireSharedFs(spark)
     import spark.implicits._
-    val shards = keyed.select("key", "html").as[(String, String)]
+    val shards = rows
       .sort("key")
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
         val results = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, String, String)]
         var keys = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Long)]
         // file size = records + (40-byte key + 8-byte offset) per record
-        val roll = new RollingShard(dirAbs, "pages", pid, maxShardBytes, PageKeyWidth + 8L,
+        val roll = new RollingShard(dirAbs, family, pid, maxShardBytes, KeyWidth + 8L,
           onOpen = () => keys = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Long)],
           onClose = (s, recordBytes, out) => {
             for ((kb, off) <- keys) { out.write(kb); out.writeLong(off) }
@@ -511,15 +478,15 @@ object DirectIndex {
               new String(keys.head._1, "UTF-8"), new String(keys.last._1, "UTF-8")))
           })
         try {
-          for ((k, html) <- it) {
+          for ((k, v) <- it) {
             val kb = k.getBytes("UTF-8")
-            require(kb.length == PageKeyWidth,
-              s"page key '$k' is not a ${PageKeyWidth}-byte reference row-key hash")
-            val hb = html.getBytes("UTF-8")
-            val (_, off) = roll.add(4L + hb.length)
+            require(kb.length == KeyWidth,
+              s"$family key '$k' is not a ${KeyWidth}-byte reference row-key hash")
+            val vb = encode(v)
+            val (_, off) = roll.add(4L + vb.length)
             keys += ((kb, off))
             val out = roll.stream
-            out.writeInt(hb.length); out.write(hb)
+            out.writeInt(vb.length); out.write(vb)
           }
           roll.finish()
         } catch { case e: Throwable => roll.abort(); throw e }
@@ -531,105 +498,111 @@ object DirectIndex {
       .sortWith((a, b) => java.util.Arrays.compareUnsigned(
         a._4.getBytes("UTF-8"), b._4.getBytes("UTF-8")) < 0)
     val idx = new DataOutputStream(new BufferedOutputStream(
-      new FileOutputStream(new File(dirAbs, "pages.idx"))))
+      new FileOutputStream(new File(dirAbs, s"$family.idx"))))
     try {
       idx.writeInt(shards.length)
-      for ((pid, count, tablePos, minKey, maxKey) <- shards) {
-        idx.writeInt(pid); idx.writeInt(count); idx.writeLong(tablePos)
+      for ((s, count, tablePos, minKey, maxKey) <- shards) {
+        idx.writeInt(s); idx.writeInt(count); idx.writeLong(tablePos)
         idx.write(minKey.getBytes("UTF-8")); idx.write(maxKey.getBytes("UTF-8"))
       }
     } finally idx.close()
 
-    commitGen(dir, "pages", gen)
+    commitGen(dir, family, gen)
   }
 
-  // ------------------------------------------------------- ranks (blend sidecar)
+  /** Sidecar pages shards for the no-Spark-job `GET /query/:url` flow (the
+    * reference Backend keeps pages in its KVS and point-fetches by row key,
+    * Backend.java:416-482 — this is that shape on shard files). `keyed` must
+    * have (key: String — the reference row-key hash, html: String); each
+    * record is the page's UTF-8 html. Serving memory is O(shards); lookups
+    * binary-search the mmap'd key table ([[DirectPages]]). */
+  def writePages(keyed: org.apache.spark.sql.DataFrame, dir: String,
+                 maxShardBytes: Long = DefaultMaxShardBytes): Unit = {
+    val spark = keyed.sparkSession
+    import spark.implicits._
+    writeKeyTable(keyed.select("key", "html").as[(String, String)], dir, "pages",
+      maxShardBytes)(_.getBytes("UTF-8"))
+  }
 
   /** Sidecar (url-key → PageRank score) shards, so the backup scorer's
     * 0.7·TFIDF + 0.3·pagerank blend ([[Searcher.referenceTopK]]) serves with
     * zero Spark jobs. `ranks` is the PageRank output (url already
-    * PageRank-normalized). Layout mirrors the pages family minus the records
-    * section: each globally-key-sorted roll is ONE fixed-width
-    * `[40-byte RefHasher key][8-byte rank double]` table, binary-searched
-    * per lookup; `ranks.idx` holds (sid, count, min/max key) per roll. */
+    * PageRank-normalized), keyed by the url's row-key hash; each record is
+    * the rank's 8 `doubleToLongBits` bytes, in the pages key-table layout. */
   def writeRanks(ranks: org.apache.spark.sql.Dataset[graft.rank.PageRankResult],
                  dir: String, maxShardBytes: Long = DefaultMaxShardBytes): Unit = {
-    new File(dir).mkdirs()
-    val gen = newGenDir(dir, "ranks")
-    val dirAbs = gen.getAbsolutePath
     val spark = ranks.sparkSession
-    requireSharedFs(spark)
     import spark.implicits._
-    val rowW = PageKeyWidth + 8L
-    val shards = ranks
-      .map(r => (graft.util.RefHasher.hash(r.url), r.rank))
-      .toDF("key", "rank").as[(String, Double)]
-      .sort("key")
-      .mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        val results = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String, String)]
-        var firstKey: String = null; var lastKey: String = null
-        // fixed-width rows: the file is ONE table, record count = bytes/rowW
-        val roll = new RollingShard(dirAbs, "ranks", pid, maxShardBytes, 0L,
-          onOpen = () => { firstKey = null; lastKey = null },
-          onClose = (s, recordBytes, _) =>
-            results += ((s, (recordBytes / rowW).toInt, firstKey, lastKey)))
-        try {
-          for ((k, rank) <- it) {
-            val kb = k.getBytes("UTF-8")
-            require(kb.length == PageKeyWidth,
-              s"rank key '$k' is not a ${PageKeyWidth}-byte reference row-key hash")
-            val _ = roll.add(rowW)
-            if (firstKey == null) firstKey = k
-            lastKey = k
-            val out = roll.stream
-            out.write(kb); out.writeLong(java.lang.Double.doubleToLongBits(rank))
-          }
-          roll.finish()
-        } catch { case e: Throwable => roll.abort(); throw e }
-        results.iterator
-      }.collect()
-      .sortWith((a, b) => java.util.Arrays.compareUnsigned(
-        a._3.getBytes("UTF-8"), b._3.getBytes("UTF-8")) < 0)
-    val idx = new DataOutputStream(new BufferedOutputStream(
-      new FileOutputStream(new File(dirAbs, "ranks.idx"))))
-    try {
-      idx.writeInt(shards.length)
-      for ((s, count, minKey, maxKey) <- shards) {
-        idx.writeInt(s); idx.writeInt(count)
-        idx.write(minKey.getBytes("UTF-8")); idx.write(maxKey.getBytes("UTF-8"))
-      }
-    } finally idx.close()
-
-    commitGen(dir, "ranks", gen)
+    writeKeyTable(ranks.map(r => (graft.util.RefHasher.hash(r.url), r.rank))
+      .toDF("key", "rank").as[(String, Double)], dir, "ranks", maxShardBytes) { rank =>
+      java.nio.ByteBuffer.allocate(8).putLong(java.lang.Double.doubleToLongBits(rank)).array()
+    }
   }
 
-  private[query] def readRanksIdx(dir: String): IndexedSeq[(Int, Int, Array[Byte], Array[Byte])] = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      new FileInputStream(new File(dir, "ranks.idx"))))
-    try {
-      val n = in.readInt()
-      IndexedSeq.fill(n) {
-        val s = in.readInt(); val count = in.readInt()
-        val minK = new Array[Byte](PageKeyWidth); in.readFully(minK)
-        val maxK = new Array[Byte](PageKeyWidth); in.readFully(maxK)
-        (s, count, minK, maxK)
-      }
-    } finally in.close()
-  }
+  /** THE key-table reader both key families share: only the per-shard
+    * `<family>.idx` rows (min/max key, table position) live in heap; key
+    * tables and records are mmap'd and binary-searched per lookup. Thread
+    * safety: absolute (positional) buffer gets only, like [[DirectSearcher]]. */
+  private[query] final class KeyTable(dir: String, family: String) {
+    // sorted by minKey; ranges are disjoint (global sort at write)
+    private val shards = readRows(dir, s"$family.idx", KeyIdxRowBytes) { in =>
+      val s = in.readInt(); val count = in.readInt(); val tablePos = in.readLong()
+      val minK = new Array[Byte](KeyWidth); in.readFully(minK)
+      val maxK = new Array[Byte](KeyWidth); in.readFully(maxK)
+      (s, count, tablePos, minK, maxK)
+    }
+    private val bufs = new java.util.concurrent.ConcurrentHashMap[Int, java.nio.MappedByteBuffer]()
+    private def buf(s: Int) =
+      bufs.computeIfAbsent(s, p => mapShard(dir, s"$family-$p.bin"))
+    // eager mapping — survives a concurrent generation rewrite (see
+    // DirectSearcher; reservation only, no page reads)
+    shards.foreach(s => buf(s._1))
 
-  private[query] def readPagesIdx(dir: String): IndexedSeq[(Int, Int, Long, Array[Byte], Array[Byte])] = {
-    val in = new DataInputStream(new java.io.BufferedInputStream(
-      new FileInputStream(new File(dir, "pages.idx"))))
-    try {
-      val n = in.readInt()
-      IndexedSeq.fill(n) {
-        val pid = in.readInt(); val count = in.readInt(); val tablePos = in.readLong()
-        val minK = new Array[Byte](PageKeyWidth); in.readFully(minK)
-        val maxK = new Array[Byte](PageKeyWidth); in.readFully(maxK)
-        (pid, count, tablePos, minK, maxK)
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
+
+    private def cmpKeyAt(b: java.nio.MappedByteBuffer, pos: Long, kb: Array[Byte]): Int = {
+      var i = 0
+      while (i < KeyWidth) {
+        val c = (b.get((pos + i).toInt) & 0xff) - (kb(i) & 0xff)
+        if (c != 0) return c
+        i += 1
       }
-    } finally in.close()
+      0
+    }
+
+    /** The record stored under a reference row-key hash, or None when absent
+      * (the reference's null-row branch). O(log shards) heap compares +
+      * O(log rows-per-shard) mmap probes. */
+    def get(key: String): Option[Array[Byte]] = {
+      val kb = key.getBytes("UTF-8")
+      if (kb.length != KeyWidth || shards.isEmpty) return None
+      // last shard with minKey <= key
+      var lo = 0; var hi = shards.length - 1
+      while (lo < hi) {
+        val mid = (lo + hi + 1) >>> 1
+        if (java.util.Arrays.compareUnsigned(shards(mid)._4, kb) <= 0) lo = mid else hi = mid - 1
+      }
+      val (s, count, tablePos, minK, maxK) = shards(lo)
+      if (java.util.Arrays.compareUnsigned(minK, kb) > 0 ||
+          java.util.Arrays.compareUnsigned(maxK, kb) < 0) return None
+      val b = buf(s)
+      var l = 0; var h = count - 1
+      while (l <= h) {
+        val mid = (l + h) >>> 1
+        val entry = tablePos + mid.toLong * (KeyWidth + 8)
+        val c = cmpKeyAt(b, entry, kb)
+        if (c == 0) {
+          val off = b.getLong((entry + KeyWidth).toInt)
+          val len = b.getInt(off.toInt)
+          val vb = new Array[Byte](len)
+          b.get(off.toInt + 4, vb)
+          bytesRead.addAndGet(KeyWidth + 12L + len)
+          return Some(vb)
+        } else if (c < 0) l = mid + 1
+        else h = mid - 1
+      }
+      None
+    }
   }
 }
 
@@ -827,67 +800,15 @@ object DirectSearcher {
 
 /** NO-SPARK-JOB doc-detail tier over [[DirectIndex.writePages]] sidecar
   * shards — the reference Backend's `GET /query/:url` point KVS fetch
-  * (Backend.java:416-482) with bounded memory: only per-shard index rows
-  * (min/max key, table position) live in heap; key tables and page bytes
-  * are mmap'd and binary-searched per lookup. Thread safety: absolute
-  * (positional) buffer gets only, like [[DirectSearcher]]. */
+  * (Backend.java:416-482) with bounded memory: a UTF-8 decoder over the
+  * shared key-table reader. */
 final class DirectPages private (dir: String) {
-  import DirectIndex.PageKeyWidth
+  private val table = new DirectIndex.KeyTable(dir, "pages")
 
-  // sorted by minKey; ranges are disjoint (global sort at write)
-  private val shards = DirectIndex.readPagesIdx(dir)
-  private val bufs = new java.util.concurrent.ConcurrentHashMap[Int, java.nio.MappedByteBuffer]()
-  private def buf(pid: Int) =
-    bufs.computeIfAbsent(pid, p => DirectIndex.mapShard(dir, s"pages-$p.bin"))
-  // eager mapping — survives a concurrent generation rewrite (see
-  // DirectSearcher; reservation only, no page reads)
-  shards.foreach(s => buf(s._1))
+  val bytesRead: java.util.concurrent.atomic.AtomicLong = table.bytesRead
 
-  val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def cmpKeyAt(b: java.nio.MappedByteBuffer, pos: Long, kb: Array[Byte]): Int = {
-    var i = 0
-    while (i < PageKeyWidth) {
-      val c = (b.get((pos + i).toInt) & 0xff) - (kb(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    0
-  }
-
-  /** The page html for a reference row-key hash, or None when absent (the
-    * reference's null-row branch). O(log shards) heap compares + O(log
-    * rows-per-shard) mmap probes. */
-  def html(key: String): Option[String] = {
-    val kb = key.getBytes("UTF-8")
-    if (kb.length != PageKeyWidth || shards.isEmpty) return None
-    // last shard with minKey <= key
-    var lo = 0; var hi = shards.length - 1
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (java.util.Arrays.compareUnsigned(shards(mid)._4, kb) <= 0) lo = mid else hi = mid - 1
-    }
-    val (pid, count, tablePos, minK, maxK) = shards(lo)
-    if (java.util.Arrays.compareUnsigned(minK, kb) > 0 ||
-        java.util.Arrays.compareUnsigned(maxK, kb) < 0) return None
-    val b = buf(pid)
-    var l = 0; var h = count - 1
-    while (l <= h) {
-      val mid = (l + h) >>> 1
-      val entry = tablePos + mid.toLong * (PageKeyWidth + 8)
-      val c = cmpKeyAt(b, entry, kb)
-      if (c == 0) {
-        val off = b.getLong((entry + PageKeyWidth).toInt)
-        val len = b.getInt(off.toInt)
-        val hb = new Array[Byte](len)
-        b.get(off.toInt + 4, hb)
-        bytesRead.addAndGet(PageKeyWidth + 12L + len)
-        return Some(new String(hb, "UTF-8"))
-      } else if (c < 0) l = mid + 1
-      else h = mid - 1
-    }
-    None
-  }
+  /** The page html for a reference row-key hash, or None when absent. */
+  def html(key: String): Option[String] = table.get(key).map(new String(_, "UTF-8"))
 
   /** `GET /query/:url` response body with zero Spark jobs: the stored page
     * (or the default info map on a miss) through [[Serving.pageInfoJson]]. */
@@ -908,55 +829,14 @@ object DirectPages {
 /** NO-SPARK-JOB PageRank lookup over [[DirectIndex.writeRanks]] sidecar
   * shards, so [[DirectSearcher.referenceTopK]]'s 0.7/0.3 blend flag works
   * with zero jobs: `prFunction` plugs straight into the `pagerank`
-  * parameter every scorer tier shares. Only per-shard (min/max key, count)
-  * rows live in heap; the fixed-width key→rank tables are mmap'd and
-  * binary-searched per url. Thread safety: absolute buffer gets only. */
+  * parameter every scorer tier shares. A `longBitsToDouble` decoder over the
+  * shared key-table reader (the pages layout, 8-byte records). */
 final class DirectRanks private (dir: String) {
-  import DirectIndex.PageKeyWidth
-  private val RowW = PageKeyWidth + 8
-
-  // sorted by minKey; ranges are disjoint (global sort at write)
-  private val shards = DirectIndex.readRanksIdx(dir)
-  private val bufs = new java.util.concurrent.ConcurrentHashMap[Int, java.nio.MappedByteBuffer]()
-  private def buf(s: Int) =
-    bufs.computeIfAbsent(s, p => DirectIndex.mapShard(dir, s"ranks-$p.bin"))
-  // eager mapping — survives a concurrent generation rewrite
-  shards.foreach(s => buf(s._1))
-
-  private def cmpKeyAt(b: java.nio.MappedByteBuffer, pos: Long, kb: Array[Byte]): Int = {
-    var i = 0
-    while (i < PageKeyWidth) {
-      val c = (b.get((pos + i).toInt) & 0xff) - (kb(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    0
-  }
+  private val table = new DirectIndex.KeyTable(dir, "ranks")
 
   /** Rank for a reference row-key hash, or None when absent. */
-  def rank(key: String): Option[Double] = {
-    val kb = key.getBytes("UTF-8")
-    if (kb.length != PageKeyWidth || shards.isEmpty) return None
-    var lo = 0; var hi = shards.length - 1
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (java.util.Arrays.compareUnsigned(shards(mid)._3, kb) <= 0) lo = mid else hi = mid - 1
-    }
-    val (s, count, minK, maxK) = shards(lo)
-    if (java.util.Arrays.compareUnsigned(minK, kb) > 0 ||
-        java.util.Arrays.compareUnsigned(maxK, kb) < 0) return None
-    val b = buf(s)
-    var l = 0; var h = count - 1
-    while (l <= h) {
-      val mid = (l + h) >>> 1
-      val c = cmpKeyAt(b, mid.toLong * RowW, kb)
-      if (c == 0)
-        return Some(java.lang.Double.longBitsToDouble(b.getLong(mid * RowW + PageKeyWidth)))
-      else if (c < 0) l = mid + 1
-      else h = mid - 1
-    }
-    None
-  }
+  def rank(key: String): Option[Double] =
+    table.get(key).map(b => java.lang.Double.longBitsToDouble(java.nio.ByteBuffer.wrap(b).getLong))
 
   /** The blend function [[Searcher.referenceTopK]] expects: postings carry
     * decoded urls; PageRank keys its scores by the PageRank-normalized self

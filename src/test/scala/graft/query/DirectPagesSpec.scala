@@ -34,7 +34,7 @@ class DirectPagesSpec extends AnyFunSuite {
     d
   }
 
-  test("direct doc detail is payload-identical to the Spark tier, zero jobs per lookup") {
+  test("direct doc detail is payload-identical to pageInfoJson over the stored page, zero jobs per lookup") {
     val rows = keyed.select("url", "html").collect().map(r => (r.getString(0), r.getString(1)))
     val htmlByUrl = rows.toMap
     val urls = rows.map(_._1)
@@ -94,5 +94,14 @@ class DirectPagesSpec extends AnyFunSuite {
     val full = DirectPages.open(sidecarDir)
     assert(full.html("tooshort").isEmpty)
     assert(full.html("").isEmpty)
+  }
+
+  test("a pages.idx with bytes appended fails loudly at open") {
+    val d = Files.createTempDirectory("graft-pages-padded").toFile.getAbsolutePath
+    DirectIndex.writePages(keyed, d)
+    val idx = new java.io.File(DirectIndex.resolveDir(d, "pages"), "pages.idx")
+    Files.write(idx.toPath, new Array[Byte](8), java.nio.file.StandardOpenOption.APPEND)
+    val e = intercept[IllegalArgumentException](DirectPages.open(d))
+    assert(e.getMessage.contains("pages.idx"), e.getMessage)
   }
 }

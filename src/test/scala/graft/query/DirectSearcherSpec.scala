@@ -165,30 +165,26 @@ class DirectSearcherSpec extends AnyFunSuite {
     }
   }
 
-  test("per-shard index layout serves identically to the global terms.idx, shard-bounded transit") {
-    val dGlobal = Files.createTempDirectory("graft-direct-global").toFile.getAbsolutePath
-    val recGlobal = DirectIndex.write(built, dGlobal, perShardIndex = false)
-    val dShard = Files.createTempDirectory("graft-direct-shard").toFile.getAbsolutePath
-    val recShard = DirectIndex.write(built, dShard)
-    // write-time driver transit: the legacy layout fans ONE RECORD PER BLOCK
-    // into the driver; the per-shard layout one per index FILE (≤ parts=5)
-    assert(recGlobal == built.blocks.count(),
-      s"global layout transits per-block records, got $recGlobal")
-    assert(recShard <= 5 && recShard < recGlobal,
-      s"per-shard transit must be shard-bounded: $recShard vs $recGlobal")
-    // layout shape: manifest + per-partition idx files, no global terms.idx
-    val gen = new java.io.File(DirectIndex.resolveDir(dShard, "index"))
+  test("blocks index is per-shard (terms.manifest + terms-<pid>.idx), shard-bounded transit") {
+    val d = Files.createTempDirectory("graft-direct-shard").toFile.getAbsolutePath
+    val rec = DirectIndex.write(built, d)
+    // write-time driver transit: ONE record per index FILE, at most one per
+    // blocks partition (parts = 5) — never one per posting block
+    assert(rec >= 1 && rec <= 5, s"per-shard transit must be shard-bounded, got $rec")
+    // layout shape: manifest + per-partition idx files and no other terms
+    // file (no single global index)
+    val gen = new java.io.File(DirectIndex.resolveDir(d, "index"))
     assert(new java.io.File(gen, "terms.manifest").exists())
-    assert(gen.listFiles().exists(_.getName.matches("terms-\\d+\\.idx")))
-    assert(!new java.io.File(gen, "terms.idx").exists())
-    // results identical across layouts on the full query set (incl. the
-    // adversarial hygiene corpus baked into `built`)
-    val sGlobal = DirectSearcher.open(dGlobal, numDocs)
-    val sShard = DirectSearcher.open(dShard, numDocs)
-    for (q <- queries ++ Seq("telescope", "", "zzzabsent")) {
-      assert(sShard.referenceTopK(q) == sGlobal.referenceTopK(q), s"ref '$q'")
-      assert(sShard.bm25TopK(q, 10) == sGlobal.bm25TopK(q, 10), s"bm25 '$q'")
-    }
+    val (idxFiles, others) = gen.listFiles().map(_.getName).filter(_.startsWith("terms"))
+      .filterNot(_ == "terms.manifest").partition(_.matches("terms-\\d+\\.idx"))
+    assert(idxFiles.length == rec, s"${idxFiles.length} terms-<pid>.idx files for $rec driver records")
+    assert(others.isEmpty, s"unexpected terms files: ${others.toSeq}")
+  }
+
+  test("a dir with no current.index pointer fails loudly at open") {
+    val d = Files.createTempDirectory("graft-direct-nopointer").toFile.getAbsolutePath
+    val e = intercept[IllegalArgumentException](DirectSearcher.open(d, numDocs))
+    assert(e.getMessage.contains("current.index"), e.getMessage)
   }
 
   test("PageRank blend serves from the ranks sidecar with zero jobs") {
@@ -199,7 +195,14 @@ class DirectSearcherSpec extends AnyFunSuite {
     val pr: String => Double =
       url => ranksMap.getOrElse(graft.rank.RefUrl.selfNormalize(url), 0.0)
     val eager = Searcher.fromIndex(built, numDocs)
-    DirectIndex.writeRanks(ranksDs, dir) // new `ranks` family beside `index`
+    // new `ranks` family beside `index`; a tiny cap rolls several rank
+    // shards per partition through the shared key-table reader
+    val cap = 1024L
+    DirectIndex.writeRanks(ranksDs, dir, maxShardBytes = cap)
+    val rankFiles = new java.io.File(DirectIndex.resolveDir(dir, "ranks")).listFiles()
+      .filter(f => f.getName.startsWith("ranks-") && f.getName.endsWith(".bin"))
+    assert(rankFiles.length > 4, s"expected rolled rank shards, got ${rankFiles.length}")
+    for (f <- rankFiles) assert(f.length() <= cap, s"${f.getName} over cap: ${f.length()}")
     val direct = DirectSearcher.open(dir, numDocs)
     val dranks = DirectRanks.open(dir)
 
@@ -215,6 +218,24 @@ class DirectSearcherSpec extends AnyFunSuite {
       Thread.sleep(300)
       assert(jobs == 0, s"ranks-sidecar blend scheduled $jobs Spark jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a ranks.idx in the old 88-byte-row layout fails loudly at open") {
+    // the pre-key-table ranks index: [n] then (sid, count, minKey, maxKey)
+    val d = Files.createTempDirectory("graft-direct-oldranks").toFile
+    val gen = new java.io.File(d, "ranks-gen-old")
+    gen.mkdirs()
+    Files.write(new java.io.File(d, "current.ranks").toPath, gen.getName.getBytes("UTF-8"))
+    val out = new java.io.DataOutputStream(new java.io.FileOutputStream(new java.io.File(gen, "ranks.idx")))
+    try {
+      out.writeInt(2)
+      for (s <- 0 until 2) {
+        out.writeInt(s); out.writeInt(10)
+        out.write(("a" * 40).getBytes("UTF-8")); out.write(("b" * 40).getBytes("UTF-8"))
+      }
+    } finally out.close()
+    val e = intercept[IllegalArgumentException](DirectRanks.open(d.getAbsolutePath))
+    assert(e.getMessage.contains("ranks.idx"), e.getMessage)
   }
 
   test("concurrent queries on one open searcher match serial results") {
