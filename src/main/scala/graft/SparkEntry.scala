@@ -242,9 +242,9 @@ object SparkEntry {
     * Shared by the oracle-SQL generators so the SQL carries exactly the
     * weights the engine uses. */
   private def refTermWeights(query: String): Seq[(String, Double, Int)] =
-    // the ONE expansion implementation (QueryOps.termWeights) — the single-
+    // the ONE expansion implementation (RefScore.termWeights) — the single-
     // query and batch oracle generators must draw identical semantics
-    graft.query.QueryOps.termWeights(query).zipWithIndex
+    graft.query.RefScore.termWeights(query).zipWithIndex
       .map { case ((t, f), i) => (t, f, i) }
 
   /** DuckDB SQL for the full reference scorer over a dumped triples table.
@@ -1841,13 +1841,11 @@ object SparkEntry {
     // token spans covered by corpus-repeated 10-grams, merged with the
     // gaps-and-islands window; only the rare (doc, pos) hits shuffle — the
     // text never does. The oracle replays the same gram/merge algebra. ----
-    // hashedGrams: the count/join keys are xxhash64(gram) — 8-byte shuffle
-    // keys, the at-scale mode; results identical to the string path on this
-    // corpus (DupSpansSpec pins flag-on ≡ flag-off; the unchanged string-
-    // semantics oracle below keeps hash-matching)
+    // the count/join keys are xxhash64(gram) — 8-byte shuffle keys; the
+    // string-semantics oracle below matches on this corpus (DupSpansSpec
+    // pins the operator to string-keyed expectations)
     "q87_dup_spans" -> ((s, d) =>
-      graft.ml.DupSpans.spans(t(s, d, "documents"), "doc_id", "text", n = 10,
-        hashedGrams = true)),
+      graft.ml.DupSpans.spans(t(s, d, "documents"), "doc_id", "text", n = 10)),
 
     // ---- personalized PageRank: 0.85-damped walks restarting at a 2-url
     // seed set over the q32-style link graph, 10 fixed power-iteration
@@ -1870,12 +1868,12 @@ object SparkEntry {
     // ---- asymmetric containment near-dup pairs (Broder): shared df-capped
     // 8-grams over min(|A|,|B|) — catches "short doc inside long doc" that
     // Jaccard (q24) and MinHash (q22) structurally miss ----
-    // hashedGrams: distinct/df-window/self-join all key on xxhash64(gram)
-    // (8-byte keys; the self-join's Sigma-df-squared shuffle shrinks ~8x);
-    // ContainmentSpec pins flag-on ≡ flag-off, oracle unchanged
+    // distinct/df-window/self-join all key on xxhash64(gram) (8-byte keys;
+    // the self-join's Sigma-df-squared shuffle shrinks ~8x); ContainmentSpec
+    // pins the operator to string-keyed expectations, oracle unchanged
     "q89_containment" -> ((s, d) =>
       graft.ml.Containment.pairs(t(s, d, "documents"), "doc_id", "text",
-          n = 8, maxGramDf = 50, minContainment = 0.5, hashedGrams = true)
+          n = 8, maxGramDf = 50, minContainment = 0.5)
         .withColumn("containment", round(col("containment"), 6))),
 
     // ---- STREAM-STREAM event-time interval join (click attribution):
@@ -3054,7 +3052,7 @@ object SparkEntry {
     * per-qid ranking. */
   private def batchSearchSql(n: Int, triplesName: String): String = {
     val vals = batchQueries.zipWithIndex.flatMap { case (q, qi) =>
-      graft.query.QueryOps.termWeights(q).zipWithIndex.map { case ((t, f), j) =>
+      graft.query.RefScore.termWeights(q).zipWithIndex.map { case ((t, f), j) =>
         s"($qi, '$t', ${f}e0, $j)"
       }
     }.mkString(", ")

@@ -2,16 +2,18 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.query.{RefScore, ShardedSearch}
 
 /** Static index pruning (Carmel et al., SIGIR 2001 shape): keep only the
   * top ⌈frac · |postings(t)|⌉ postings of every term, ordered by the
   * reference scorer's own impact order (tf desc, url asc — the scorer's
   * per-posting score is monotone in tf within a term, so a tf-ordered
   * prefix IS the impact prefix). Serving then runs over an index a
-  * constant factor smaller; collection statistics (df, max-tf) are FROZEN
-  * from the full corpus before pruning, the standard design: pruning must
-  * shrink the posting tails, not shift every surviving score by changing
-  * IDF.
+  * constant factor smaller; collection statistics (df, max-tf —
+  * [[ShardedSearch.statsOf]]) are FROZEN from the full corpus before
+  * pruning, the standard design: pruning must shrink the posting tails,
+  * not shift every surviving score by changing IDF. Scores are the
+  * [[RefScore]] rule, through [[ShardedSearch.scoreCandidates]].
   *
   * Scale shape: one window shuffle on term (the same key the posting build
   * already shuffles on), counts map-side-combined; no driver transit. At
@@ -24,32 +26,30 @@ object StaticPrune {
     * of fraction `frac` (at least one posting per term survives — ceil). */
   def prune(triples: DataFrame, frac: Double): DataFrame = {
     require(frac > 0.0 && frac <= 1.0, s"frac must be in (0,1], got $frac")
+    withKept(triples, frac).where(col("kept")).select("url", "term", "tf")
+  }
+
+  /** `triples` plus `kept`: the posting is in its term's impact prefix of
+    * fraction `frac` (tf desc, url asc). */
+  private def withKept(triples: DataFrame, frac: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val perTerm = Window.partitionBy("term")
-      .orderBy(col("tf").desc, col("url").asc)
-    val all = Window.partitionBy("term")
     triples
-      .withColumn("rnk", row_number().over(perTerm))
-      .withColumn("cnt", count(lit(1)).over(all))
-      .where(col("rnk") <= ceil(lit(frac) * col("cnt")))
-      .select("url", "term", "tf")
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("term").orderBy(col("tf").desc, col("url").asc)))
+      .withColumn("cnt", count(lit(1)).over(Window.partitionBy("term")))
+      .withColumn("kept", col("rnk") <= ceil(lit(frac) * col("cnt")))
   }
 
   /** Reference-scored top-k over the pruned index, with full-corpus stats:
     * candidates come from the pruned posting lists, df/max-tf from the
     * unpruned `triples`. Returns (url, score) in rank order. */
   def topK(spark: SparkSession, triples: DataFrame, numDocs: Long,
-           query: String, frac: Double, k: Int = 200): DataFrame = {
-    val weights = graft.query.QueryOps.termWeights(query)
-    import spark.implicits._
-    if (weights.isEmpty)
-      return spark.emptyDataset[(String, Double)].toDF("url", "score")
+           query: String, frac: Double, k: Int = RefScore.Cap): DataFrame = {
+    val weights = RefScore.termWeights(query)
     val terms = weights.map(_._1)
-    val tq = triples.where(col("term").isin(terms: _*))
-    val dict = tq.groupBy("term")
-      .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"))
-    graft.query.ShardedSearch.scoreCandidates(
-      prune(tq, frac), dict, weights, numDocs, k)
+    ShardedSearch.scoreCandidates(
+      prune(triples.where(col("term").isin(terms: _*)), frac),
+      ShardedSearch.statsOf(triples, terms), weights, numDocs, k)
   }
 
   /** [[topK]] plus a PER-RESULT EXACTNESS CERTIFICATE — the safety rail
@@ -66,45 +66,34 @@ object StaticPrune {
     *
     * B folds in query-term order on the driver from one per-term
     * aggregate row (stats-service-sized), bit-identically to the oracle's
-    * qidx-ordered list_reduce. Returns (url, score, certified). */
+    * qidx-ordered list_reduce. Terms the scorer drops add nothing, and
+    * neither does a term with idf −∞ (n < df): its postings can only lower
+    * a score, so its bound is that of a doc without the term, 0. Returns
+    * (url, score, certified). */
   def certifiedTopK(spark: SparkSession, triples: DataFrame, numDocs: Long,
-                    query: String, frac: Double, k: Int = 200): DataFrame = {
-    val weights = graft.query.QueryOps.termWeights(query)
+                    query: String, frac: Double, k: Int = RefScore.Cap): DataFrame = {
+    val weights = RefScore.termWeights(query)
     import spark.implicits._
     if (weights.isEmpty)
       return spark.emptyDataset[(String, Double, Boolean)]
         .toDF("url", "score", "certified")
     val terms = weights.map(_._1)
     val tq = triples.where(col("term").isin(terms: _*))
-    val dict = tq.groupBy("term")
-      .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"))
+    val dict = ShardedSearch.statsOf(triples, terms)
     // highest tf among DROPPED postings per term (null when nothing
     // dropped), one tiny row per query term
-    import org.apache.spark.sql.expressions.Window
-    val perTerm = Window.partitionBy("term")
-      .orderBy(col("tf").desc, col("url").asc)
-    val dropped = tq
-      .withColumn("rnk", row_number().over(perTerm))
-      .withColumn("cnt", count(lit(1)).over(Window.partitionBy("term")))
-      .where(col("rnk") > ceil(lit(frac) * col("cnt")))
+    val dropped = withKept(tq, frac).where(!col("kept"))
       .groupBy("term").agg(max(col("tf")).as("tf_drop"))
-    val stats = dict.join(dropped, Seq("term"), "left").collect()
-      .map(r => r.getString(0) ->
-        ((r.getLong(1), r.getAs[Number](2).intValue(),
-          Option(r.get(3)).map(_.asInstanceOf[Number].intValue()))))
-      .toMap
-    // B: qidx-ordered fold of per-term drop bounds, idf==0 terms excluded
-    // exactly like the scorer
+    val rows = dict.join(dropped, Seq("term"), "left").collect()
+    val stats = ShardedSearch.termStats(rows, numDocs)
+    val tfDrop = rows.flatMap(r =>
+      Option(r.get(3)).map(td => r.getString(0) -> td.asInstanceOf[Number].intValue())).toMap
+    // B: qidx-ordered fold of per-term drop bounds
     var b = 0.0
-    for ((t, f) <- weights; (df, maxTf, tfDrop) <- stats.get(t);
-         td <- tfDrop) {
-      val idfBase = numDocs / df
-      if (idfBase > 1)
-        b += (0.4 + 0.6 * td / maxTf) *
-          (math.log(idfBase.toDouble) / math.log(500.0)) * f
-    }
-    graft.query.ShardedSearch.scoreCandidates(
-        prune(tq, frac), dict, weights, numDocs, k)
+    for ((t, f) <- weights; (idf, maxTf) <- stats.get(t); td <- tfDrop.get(t)
+         if idf > 0.0)
+      b += RefScore.base(td, maxTf, idf) * f
+    ShardedSearch.scoreCandidates(prune(tq, frac), dict, weights, numDocs, k)
       .withColumn("certified", col("score") >= lit(b))
   }
 }

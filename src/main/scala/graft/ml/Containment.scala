@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** N-gram CONTAINMENT near-dup pairs — the asymmetric member of the dedup
@@ -20,44 +20,31 @@ import org.apache.spark.sql.functions._
   */
 object Containment {
 
-  private def wordGrams(text: Column, n: Int): Column = {
-    val toks = filter(split(lower(trim(text)), "\\s+"), t => t =!= lit(""))
-    val cnt = size(toks)
-    when(cnt < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), cnt - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-  }
-
   /** @return (doc_a, doc_b, shared_grams, n_a, n_b, containment) with
     *         doc_a < doc_b and containment ≥ `minContainment`, containment
     *         computed over the df-capped gram sets. */
   def pairs(docs: DataFrame, idCol: String, textCol: String,
             n: Int = 8, maxGramDf: Long = 50,
-            minContainment: Double = 0.5,
-            hashedGrams: Boolean = false): DataFrame = {
+            minContainment: Double = 0.5): DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
     require(maxGramDf >= 2, s"maxGramDf < 2 keeps no shareable gram: $maxGramDf")
-    // hashed mode (the at-scale key): every downstream op — the distinct,
-    // the df window's shuffle+sort, and the Σdf²-bounded self-join — keys
-    // on xxhash64(gram): 8-byte keys instead of ~60-byte 8-gram strings.
-    // A 64-bit collision merges two grams (slightly inflating shared/size
-    // counts, symmetric on both sides); expected collisions ~g²/2^65.
-    // ContainmentSpec pins flag-on ≡ flag-off on the oracle corpora; the
-    // string path stays the default contract.
-    val exploded = docs.select(col(idCol).cast("long").as("doc_id"),
-      explode(wordGrams(col(textCol), n)).as("gram"))
-    val grams =
-      (if (hashedGrams)
-         exploded.select(col("doc_id"), xxhash64(col("gram")).as("gram"))
-       else exploded)
+    // every downstream op — the distinct, the df window's shuffle+sort, and
+    // the Σdf²-bounded self-join — keys on xxhash64(gram): 8-byte keys
+    // instead of ~60-byte 8-gram strings. A 64-bit collision merges two
+    // grams (slightly inflating shared/size counts, symmetric on both
+    // sides); expected collisions ~g²/2^65. ContainmentSpec pins the output
+    // to string-keyed expectations computed in the spec.
+    val grams = docs.select(col(idCol).cast("long").as("doc_id"),
+        explode(Decontaminate.wordGrams(col(textCol), n)).as("gram"))
+      .select(col("doc_id"), xxhash64(col("gram")).as("gram"))
       .distinct()
     // kept is consumed THREE times (sizes, both self-join sides); without a
     // materialization barrier the tokenize+distinct+window subtree inlines
     // into every consumer (measured: 8 Generate nodes in the q89 plan — the
     // posexplode tokenize ran ~8x via the broadcast builds). One eager
     // localCheckpoint runs it once; the narrow (doc_id, gram) rows are the
-    // cheapest frame in the pipeline to hold (8-byte keys under
-    // `hashedGrams`), and the blocks release with the plan (ContextCleaner).
+    // cheapest frame in the pipeline to hold (8-byte keys), and the blocks
+    // release with the plan (ContextCleaner).
     val kept = grams
       .withColumn("_df", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("gram"))))

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,25 +23,16 @@ import org.apache.spark.sql.functions._
   * "overlaps or touches the previous" is exactly `pos − lag(pos) ≤ n` —
   * no running-max needed).
   *
-  * `hashedGrams` (the at-scale key mode): the gram-count aggregation and
-  * the hit semi-join key on `xxhash64(gram)` — 8-byte shuffle keys instead
-  * of ~60-80-byte gram strings, the same narrow-key discipline as the
-  * index build's dictionary ids. A 64-bit collision can only ADD a
-  * spurious duplicated position (it merges two grams' counts upward), i.e.
-  * over-mark a span — it can never unmark one; expected collisions are
-  * ~g²/2^65 (≪1 below 10^9 distinct grams — far past any single-corpus
-  * gram table). DupSpansSpec pins flag-on ≡ flag-off on the oracle
-  * corpora; the string path stays the default contract.
+  * Gram key: the gram-count aggregation and the hit semi-join key on
+  * `xxhash64(gram)` — 8-byte shuffle keys instead of ~60-80-byte gram
+  * strings, the same narrow-key discipline as the index build's dictionary
+  * ids. A 64-bit collision can only ADD a spurious duplicated position (it
+  * merges two grams' counts upward), i.e. over-mark a span — it can never
+  * unmark one; expected collisions are ~g²/2^65 (≪1 below 10^9 distinct
+  * grams — far past any single-corpus gram table). DupSpansSpec pins the
+  * output to string-keyed expectations computed in the spec.
   */
 object DupSpans {
-
-  private def wordGramsWithPos(text: Column, n: Int): Column = {
-    val toks = filter(split(lower(trim(text)), "\\s+"), t => t =!= lit(""))
-    val cnt = size(toks)
-    when(cnt < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), cnt - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-  }
 
   /** Maximal duplicated token spans per document.
     *
@@ -49,21 +40,17 @@ object DupSpans {
     *         0-based inclusive; dup_tokens = span length. Documents with
     *         no duplicated n-gram emit no rows. */
   def spans(docs: DataFrame, idCol: String, textCol: String,
-            n: Int = 10, minCount: Long = 2,
-            hashedGrams: Boolean = false): DataFrame = {
+            n: Int = 10, minCount: Long = 2): DataFrame = {
     require(n >= 1, s"n-gram order must be >= 1, got $n")
     require(minCount >= 2, s"minCount < 2 marks every gram, got $minCount")
-    val rawGrams = docs.select(col(idCol).cast("long").as("doc_id"),
-        posexplode(wordGramsWithPos(col(textCol), n)).as(Seq("pos", "gram")))
-    // hashed mode: the gram string never leaves the map side — only the
-    // 8-byte key enters the count shuffle. (A string-free xxhash64-chain
-    // over per-token hashes was tried and measured no faster on this
-    // corpus: the higher-order-function chain costs about what the string
-    // build + single hash does, for more code.)
-    val grams =
-      if (hashedGrams) rawGrams.select(col("doc_id"), col("pos"),
-        xxhash64(col("gram")).as("gram"))
-      else rawGrams
+    // the gram string never leaves the map side — only the 8-byte key
+    // enters the count shuffle. (A string-free xxhash64-chain over
+    // per-token hashes was tried and measured no faster on this corpus:
+    // the higher-order-function chain costs about what the string build +
+    // single hash does, for more code.)
+    val grams = docs.select(col(idCol).cast("long").as("doc_id"),
+        posexplode(Decontaminate.wordGrams(col(textCol), n)).as(Seq("pos", "gram")))
+      .select(col("doc_id"), col("pos"), xxhash64(col("gram")).as("gram"))
     // corpus frequency as ONE window over the gram key instead of the
     // groupBy + semi-join pair: the gram table (and its posexplode
     // tokenize, the dominant per-row cost) is derived once, and the plan

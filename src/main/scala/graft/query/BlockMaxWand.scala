@@ -94,26 +94,14 @@ object BlockMaxWand {
       spark.sparkContext.longAccumulator("wand.rescoreHitBlocks"))
     def empty = (QueryOps.emptyTopK(spark), diag)
 
-    // ---- preamble: identical term rule + corpus scalars to the twin ----
-    val termsOf: String => Seq[String] =
-      q => Searcher.expansionTerms(q).toSet.toSeq.sorted
-    val allTerms = queries.flatMap(termsOf).distinct
-    if (allTerms.isEmpty) return empty
-    val dict = built.dictionary
-      .filter($"term".isin(allTerms: _*))
-      .collect().map(d => d.term -> d).toMap
-    val live: Seq[(Int, String)] = queries.zipWithIndex.flatMap {
-      case (q, qi) => termsOf(q).filter(dict.contains).map(t => (qi, t))
-    }
-    if (live.isEmpty) return empty
-    val liveTerms = live.map(_._2).distinct
-
-    val statsRow = built.docs.toDF().agg(count(lit(1)), sum($"dl"), min($"dl")).head()
-    val nd = statsRow.getLong(0)
-    if (nd == 0) return empty
-    val avgdl = statsRow.getLong(1).toDouble / nd
-    val dlMin = statsRow.getLong(2)
-    val idfOf: Map[String, Double] = liveTerms.map(t => t -> Bm25.idf(nd, dict(t).df)).toMap
+    // ---- preamble: the exhaustive twin's own term rule, corpus scalars,
+    // idf and broadcast frames (one copy: the exactness proof needs them
+    // identical) ----
+    val QueryOps.Bm25Batch(live, liveTerms, avgdl, dlMin, idfOf, idfDf, weightsDf) =
+      QueryOps.bm25Batch(spark, built, queries, requireAll = false) match {
+        case Some(b) => b
+        case None => return empty
+      }
 
     // block upper bound: its best posting (max_tf) landing in the shortest
     // document — the block-max metadata written at index build
@@ -131,8 +119,6 @@ object BlockMaxWand {
       metaRows.map(r => r.getString(0) -> ubOf(r.getString(0), r.getInt(2))).toMap
 
     val docsDl = built.docs.toDF().select($"doc_id", $"dl", $"url")
-    val idfDf = broadcast(idfOf.toSeq.toDF("term", "idf"))
-    val weightsDf = broadcast(live.toDF("query_id", "term"))
 
     // ---- phase 1: θ from the single best-impact block per term ----
     val wSeed = Window.partitionBy($"term")
@@ -261,10 +247,6 @@ object BlockMaxWand {
         Bm25.contribCol(lit(avgdl)).as("c"))
       .groupBy($"query_id", $"doc_id", $"url")
       .agg(QueryOps.bm25TermOrderedFold.as("score"))
-    val wRank = Window.partitionBy($"query_id").orderBy($"score".desc, $"url".asc)
-    val out = rescored.withColumn("rank", row_number().over(wRank))
-      .filter($"rank" <= k)
-      .select($"query_id", $"rank", $"url", $"score")
-    (out, finalDiag)
+    (QueryOps.rankTopK(rescored, k), finalDiag)
   }
 }

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
 object ExpandedSearch {
 
   /** Expanded reference-scored top-k: base weights from
-    * [[QueryOps.termWeights]], plus per surface term its top PMI
+    * [[RefScore.termWeights]], plus per surface term its top PMI
     * co-occurring term (n_pairs ≥ minPairs, not already in the query) at
     * `expandFactor`, qidx continuing after the base weights in surface
     * order, first pick wins on duplicates. Returns (url, score) ranked. */
@@ -33,7 +33,7 @@ object ExpandedSearch {
            query: String, minPairs: Long = 5, expandFactor: Double = 0.5,
            k: Int = 200): DataFrame = {
     import spark.implicits._
-    val base = QueryOps.termWeights(query)
+    val base = RefScore.termWeights(query)
     if (base.isEmpty)
       return spark.emptyDataset[(String, Double)].toDF("url", "score")
     val surface = graft.text.Text.parseQuery(query).distinct.filter(_.nonEmpty)
@@ -67,10 +67,7 @@ object ExpandedSearch {
     val weights = base ++ seen.toSeq.map(t => (t, expandFactor))
 
     val terms = weights.map(_._1)
-    val dict = triples.where(col("term").isin(terms: _*))
-      .groupBy("term")
-      .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"))
-    ShardedSearch.scoreCandidates(
-      triples.where(col("term").isin(terms: _*)), dict, weights, numDocs, k)
+    ShardedSearch.scoreCandidates(triples.where(col("term").isin(terms: _*)),
+      ShardedSearch.statsOf(triples, terms), weights, numDocs, k)
   }
 }

@@ -36,7 +36,7 @@ object LmRetrieval {
 
   /** Parse a free-text query into (term, multiplicity) pairs with the
     * reference tokenizer's surface forms (no stem expansion — an LM over
-    * surface statistics; [[QueryOps.termWeights]] owns the stem-expanded
+    * surface statistics; [[RefScore.termWeights]] owns the stem-expanded
     * family). Order pinned (term asc) so generated oracles enumerate
     * identically. */
   def queryTerms(query: String): Seq[(String, Int)] =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.index.{BuiltIndex, IndexBuild}
-import graft.text.{PorterStemmer, Text}
 
 /** The query path expressed as DATASET OPERATIONS (north star: "top-k …
   * expressed as Dataset operations plus a broadcast term-dictionary") — the
@@ -27,9 +26,8 @@ import graft.text.{PorterStemmer, Text}
   *     (Backend.java:268-273): postings of hygiene-dirty docs are skipped
   *     without counting, and a doc whose url throws in URLDecoder empties
   *     the whole term (Backend.java:309-313) — bug-for-bug, oracle-tested
-  *     on the adversarial corpus in IndexSpec. Emits the per-term tfidf
-  *     base (reference tfn × int-division log₅₀₀ idf) and the CLEAN serving
-  *     rank;
+  *     on the adversarial corpus in IndexSpec. Emits the per-term
+  *     [[RefScore.base]] and the CLEAN serving rank;
   *  4. the broadcast (query_id, term, factor, qidx) expansion table fans
   *     each term's postings out to its queries — each posting block of a
   *     shared term is decoded ONCE for the entire batch;
@@ -45,55 +43,48 @@ import graft.text.{PorterStemmer, Text}
   * unclean URLs — a tiny fraction of any real crawl by construction (the
   * crawler's own normalizer rejects most). While the flagged count fits the
   * driver ([[QueryOps.HygieneSetCap]]) both sets are collected and
-  * broadcast exact; past the cap (or when forced) the walk switches to a
-  * broadcast BLOOM pre-screen: postings whose doc hits a filter are emitted
-  * as SUSPECTS (not counted toward the cap) until 200 definitely-clean
-  * postings accumulate, the tiny suspect id set is classified EXACTLY
-  * against the docs table (one broadcast join), and a per-term ordered
-  * re-rank replays the reference walk — skip-docs dropped without
-  * counting, a genuinely-throwing doc reached before the 200th clean
-  * posting emptying its term. False positives cost only extra suspects;
-  * results stay bit-identical (IndexSpec forces this path on the
-  * adversarial corpus).
+  * broadcast exact; past the cap the ONE walk screens with a broadcast
+  * BLOOM filter instead and resolves its suspects exactly afterwards (see
+  * [[walkTermPostings]]). False positives cost only extra suspects;
+  * results stay bit-identical (QueryOpsBloomSpec and IndexSpec force this
+  * screen on the adversarial corpus).
   */
 object QueryOps {
 
-  /** Query expansion with reference semantics (surface terms first, stems
-    * appended, put-overwrite) → ordered (term, stemFactor). */
-  def termWeights(query: String): Seq[(String, Double)] = {
-    val surface = Text.parseQuery(query)
-    val expanded = surface.map(t => (t, false)) ++ surface.flatMap { t =>
-      val st = PorterStemmer.stem(t)
-      if (st != t) Some((st, true)) else None
-    }
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    for ((t, isStem) <- expanded if t.nonEmpty) m.put(t, if (isStem) 0.7 else 1.0)
-    m.toSeq
-  }
-
-  /** Reference url hygiene classification (Backend.java:268-273,309-324):
-    * 0 = clean, 1 = skipped (doesn't count toward the 200-cap), 2 = throws
-    * in URLDecoder (empties the whole posting list of every term the doc
-    * appears in). Doc-level: depends only on the stored url. */
+  /** Reference url hygiene classification ([[RefScore.cleanUrl]]):
+    * [[Clean]], [[Skip]] (doesn't count toward the cap) or [[Throw]]
+    * (URLDecoder throws — empties the whole posting list of every term the
+    * doc appears in). Doc-level: depends only on the stored url. */
   private[query] def classifyUrl(url: String): Int =
-    try {
-      val dec = java.net.URLDecoder.decode(url.trim, "UTF-8")
-      if (dec == null || dec.isEmpty || dec == "null" || dec.contains("\"") ||
-          Searcher.hasControlChar(dec)) 1
-      else 0
-    } catch { case _: Exception => 2 }
+    try { if (RefScore.cleanUrl(url).isDefined) Clean else Skip }
+    catch { case _: Exception => Throw }
+
+  /** Posting classes of the serving-order walk: the three exact hygiene
+    * classes, plus [[Suspect]] — a Bloom-screen hit whose exact class is
+    * still to be resolved. */
+  private[query] final val Clean = 0
+  private[query] final val Skip = 1
+  private[query] final val Throw = 2
+  private[query] final val Suspect = 3
 
   /** Hygiene representation the walk screens postings with: exact driver
     * sets while they fit, Bloom pre-screens past [[HygieneSetCap]]. Both
     * carry the flagged COUNT so the block-prune window knows how many
     * skippable postings may precede the cap. */
-  private[query] sealed trait Hygiene { def flaggedCount: Long }
+  private[query] sealed trait Hygiene {
+    def flaggedCount: Long
+    def classOf(docId: Long): Int
+  }
   private[query] final case class ExactSets(skip: Set[Long], thr: Set[Long]) extends Hygiene {
     def flaggedCount: Long = skip.size.toLong + thr.size
+    def classOf(docId: Long): Int =
+      if (thr.contains(docId)) Throw else if (skip.contains(docId)) Skip else Clean
   }
   private[query] final case class BloomScreen(
       filter: org.apache.spark.util.sketch.BloomFilter,
-      flaggedCount: Long) extends Hygiene
+      flaggedCount: Long) extends Hygiene {
+    def classOf(docId: Long): Int = if (filter.mightContainLong(docId)) Suspect else Clean
+  }
 
   /** Above this many flagged docs the exact sets stop being collected and
     * the Bloom pre-screen takes over (≈ 16 MB of driver longs at the cap —
@@ -119,7 +110,7 @@ object QueryOps {
     // the per-row classifyUrl scan runs once, not twice
     val flagged = built.docs
       .map(d => (d.doc_id, classifyUrl(d.url)))
-      .filter(_._2 != 0)
+      .filter(_._2 != Clean)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val cnt = flagged.count()
@@ -133,8 +124,8 @@ object QueryOps {
           BloomScreen(bf, cnt)
         } else {
           val arr = flagged.collect()
-          ExactSets(arr.collect { case (id, 1) => id }.toSet,
-                    arr.collect { case (id, 2) => id }.toSet)
+          ExactSets(arr.collect { case (id, Skip) => id }.toSet,
+                    arr.collect { case (id, Throw) => id }.toSet)
         }
       cache.put(built, v)
       v
@@ -166,10 +157,9 @@ object QueryOps {
   def batchReferenceTopK(spark: SparkSession, built: BuiltIndex,
                          queries: Seq[String], n: Int,
                          isinThreshold: Int = 2048,
-                         broadcastRowCap: Long = 100000L,
-                         forceBloomHygiene: Boolean = false): DataFrame = {
+                         broadcastRowCap: Long = 100000L): DataFrame = {
     val (ranked, scratch) = batchReferenceTopKPlan(spark, built, queries, n,
-      isinThreshold, broadcastRowCap, forceBloomHygiene)
+      isinThreshold, broadcastRowCap)
     if (scratch.isEmpty) ranked // empty result — nothing was persisted
     else {
       // eager localCheckpoint: materializes the ≤200-rows-per-query result
@@ -189,7 +179,8 @@ object QueryOps {
     * (plan-pinning specs) use this and release the scratch themselves;
     * everyone else calls [[batchReferenceTopK]], which eagerly materializes
     * and releases. An empty scratch list means the empty-result short
-    * circuit fired and nothing is persisted. */
+    * circuit fired and nothing is persisted. `forceBloomHygiene` screens
+    * with the Bloom filter even below [[HygieneSetCap]] (specs only). */
   private[graft] def batchReferenceTopKPlan(
       spark: SparkSession, built: BuiltIndex,
       queries: Seq[String], n: Int,
@@ -197,29 +188,23 @@ object QueryOps {
       broadcastRowCap: Long = 100000L,
       forceBloomHygiene: Boolean = false): (DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
-    def emptyResult: DataFrame = spark.emptyDataFrame
-      .withColumn("query_id", lit(0)).withColumn("rank", lit(0))
-      .withColumn("url", lit("")).withColumn("score", lit(0.0)).limit(0)
-
     // driver-side expansion: queries are tiny, terms lexicon-bounded
     val weights = queries.zipWithIndex.flatMap { case (q, qi) =>
-      termWeights(q).zipWithIndex.map { case ((t, f), j) => (qi, t, f, j) }
+      RefScore.termWeights(q).zipWithIndex.map { case ((t, f), j) => (qi, t, f, j) }
     }
     val allTerms = weights.map(_._2).distinct
-    if (allTerms.isEmpty) return (emptyResult, Nil)
+    if (allTerms.isEmpty) return (emptyTopK(spark), Nil)
     val dict = built.dictionary
       .filter($"term".isin(allTerms: _*))
       .collect().map(d => d.term -> d).toMap
-    // idf==0 terms drop for every query (df is per-term, not per-query)
-    def idfOf(t: String): Double =
-      dict.get(t).map(d => math.log((n / d.df).toDouble) / math.log(500.0)).getOrElse(0.0)
-    val live = weights.filter { case (_, t, _, _) => idfOf(t) != 0.0 }
-    if (live.isEmpty) return (emptyResult, Nil)
-    val liveTerms = live.map(_._2).distinct
     // the single copy of the rank-identity-critical idf/max_tf per term —
-    // the walk consumes exactly these (no second int-division site)
-    val termStats = liveTerms.flatMap(t =>
-      dict.get(t).map(d => t -> (idfOf(t), d.max_tf))).toMap
+    // the walk consumes exactly these; a dropped term (idf == 0, df is
+    // per-term) drops for every query
+    val termStats = allTerms.flatMap(t => dict.get(t).flatMap(d =>
+      RefScore.idf(n, d.df).map(idf => t -> (idf, d.max_tf)))).toMap
+    val live = weights.filter { case (_, t, _, _) => termStats.contains(t) }
+    if (live.isEmpty) return (emptyTopK(spark), Nil)
+    val liveTerms = live.map(_._2).distinct
 
     // the walk's output is CAP-BOUNDED (≤ 200 clean postings per live term)
     // but NEVER transits the driver: it is persisted once (the count below
@@ -230,13 +215,8 @@ object QueryOps {
     // plans with STRONG references until an explicit unpersist, so leaving
     // it to GC would leak one cache entry per batch call for the session
     // lifetime in a long-running serving process.
-    val (walkDf, walkScratch) = hygieneOf(built, forceBloomHygiene) match {
-      case ExactSets(skipIds, throwIds) =>
-        (walkTermPostings(spark, built, liveTerms, termStats, skipIds, throwIds), None)
-      case bs: BloomScreen =>
-        val (df, raw) = bloomWalkTermPostings(spark, built, liveTerms, termStats, bs)
-        (df, Some(raw))
-    }
+    val (walkDf, walkScratch) = walkTermPostings(spark, built, liveTerms, termStats,
+      hygieneOf(built, forceBloomHygiene))
     val postings = walkDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE action both materializes the cache and answers every driver-side
     // branch question: the distinct touched ids, cut off at threshold+1 —
@@ -248,7 +228,7 @@ object QueryOps {
     // once `postings` is materialized above it is dead weight — drop it now
     // instead of waiting for the ContextCleaner
     walkScratch.foreach(_.unpersist())
-    if (ids.isEmpty) { postings.unpersist(); return (emptyResult, Nil) }
+    if (ids.isEmpty) { postings.unpersist(); return (emptyTopK(spark), Nil) }
 
     // fan each term's walked postings out to its queries; the expansion
     // table is always tiny (queries × terms rows)
@@ -263,17 +243,15 @@ object QueryOps {
     val decodeUrl = udf((u: String) =>
       try java.net.URLDecoder.decode(u.trim, "UTF-8")
       catch { case _: Exception => null })
+    val urls = built.docs.select($"doc_id", decodeUrl($"url").as("url"))
     val joined =
       if (ids.length <= isinThreshold) {
         // point fetch: In-filter pushdown prunes the doc_id-sorted docs
         // table to the touched row groups; the url slice (≤ ids rows) is
         // the broadcast side — NOT the batch-sized scored side
-        val urls = built.docs.select($"doc_id", decodeUrl($"url").as("url"))
-          .filter($"doc_id".isin(ids.toIndexedSeq: _*))
-        contrib.join(broadcast(urls), Seq("doc_id"))
+        contrib.join(broadcast(urls.filter($"doc_id".isin(ids.toIndexedSeq: _*))), Seq("doc_id"))
       } else {
-        val urls = built.docs.select($"doc_id", decodeUrl($"url").as("url"))
-        val contribUpper = live.size.toLong * 200L
+        val contribUpper = live.size.toLong * RefScore.Cap
         if (contribUpper <= broadcastRowCap) urls.join(broadcast(contrib), Seq("doc_id"))
         else urls.join(contrib, Seq("doc_id")) // AQE picks from runtime sizes
       }
@@ -286,12 +264,7 @@ object QueryOps {
       .agg(aggregate(
         sort_array(collect_list(struct($"qidx", $"term_rank", $"s"))),
         lit(0.0d), (acc, x) => acc + x.getField("s")).as("score"))
-
-    val wRank = Window.partitionBy($"query_id").orderBy($"score".desc, $"url".asc)
-    val ranked = scored.withColumn("rank", row_number().over(wRank))
-      .filter($"rank" <= 200)
-      .select($"query_id", $"rank", $"url", $"score")
-    (ranked, Seq(postings))
+    (rankTopK(scored, RefScore.Cap), Seq(postings))
   }
 
   /** Batch BM25 replay — the DISTRIBUTED twin of [[Searcher.bm25TopK]] for
@@ -343,53 +316,80 @@ object QueryOps {
     aggregate(sort_array(collect_list(struct(col("term"), col("c")))),
       lit(0.0d), (acc, x) => acc + x.getField("c"))
 
+  /** Per-query top-k of `scored` (query_id, url, score) by (score desc,
+    * url asc) → the (query_id, rank, url, score) every batch scorer
+    * returns. */
+  private[query] def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("score").desc, col("url").asc)))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("url"), col("score"))
+
   /** The empty (query_id, rank, url, score) frame every batch scorer's
     * degenerate paths return. */
   private[query] def emptyTopK(spark: SparkSession): DataFrame = spark.emptyDataFrame
     .withColumn("query_id", lit(0)).withColumn("rank", lit(0))
     .withColumn("url", lit("")).withColumn("score", lit(0.0)).limit(0)
 
-  private def batchBm25Core(spark: SparkSession, built: BuiltIndex,
-                            queries: Seq[String], k: Int,
-                            requireAll: Boolean): DataFrame = {
-    import spark.implicits._
-    def emptyResult: DataFrame = emptyTopK(spark)
+  /** What both batch BM25 scorers ([[batchBm25TopK]], [[BlockMaxWand]])
+    * derive before touching a posting — one copy, since WAND's exactness
+    * proof needs them identical: live (query, term) pairs, corpus scalars
+    * with [[Searcher.fromIndex]]'s exact arithmetic (integer dl sum →
+    * double ONCE), driver-side [[Bm25.idf]] and the two broadcast frames.
+    * None when no query has a live term or the corpus is empty. Term rule:
+    * disjunctive = [[Searcher.bm25TopK]]'s surface ∪ stems; conjunctive
+    * (`requireAll`) = parsed surface terms, a dictionary-missing one
+    * killing its query. */
+  private[query] final case class Bm25Batch(
+      live: Seq[(Int, String)], liveTerms: Seq[String],
+      avgdl: Double, dlMin: Long, idfOf: Map[String, Double],
+      idfDf: DataFrame, weightsDf: DataFrame)
 
-    // driver-side term rule: disjunctive = [[Searcher.bm25TopK]]'s surface
-    // ∪ stems; conjunctive = parsed surface terms only
+  private[query] def bm25Batch(spark: SparkSession, built: BuiltIndex,
+                               queries: Seq[String],
+                               requireAll: Boolean): Option[Bm25Batch] = {
+    import spark.implicits._
     val termsOf: String => Seq[String] =
       if (requireAll) q => graft.text.Text.parseQuery(q).distinct.sorted
       else q => Searcher.expansionTerms(q).toSet.toSeq.sorted
     val allTerms = queries.flatMap(termsOf).distinct
-    if (allTerms.isEmpty) return emptyResult
+    if (allTerms.isEmpty) return None
     val dict = built.dictionary
       .filter($"term".isin(allTerms: _*))
       .collect().map(d => d.term -> d).toMap
     val live = queries.zipWithIndex.flatMap { case (q, qi) =>
       val ts = termsOf(q)
       val present = ts.filter(dict.contains)
-      // conjunctive: a dictionary-missing required term kills the query
       if (requireAll && present.size != ts.size) Seq.empty
       else present.map(t => (qi, t))
     }
-    if (live.isEmpty) return emptyResult
+    if (live.isEmpty) return None
     val liveTerms = live.map(_._2).distinct
 
-    // corpus scalars (nd, avgdl) with [[Searcher.fromIndex]]'s exact
-    // arithmetic: the integer dl sum is exact and order-free, → double ONCE
     val statsRow = built.docs.toDF()
-      .agg(count(lit(1)), sum($"dl")).head()
+      .agg(count(lit(1)), sum($"dl"), min($"dl")).head()
     val nd = statsRow.getLong(0)
-    if (nd == 0) return emptyResult
-    val avgdl = statsRow.getLong(1).toDouble / nd
+    if (nd == 0) return None
     val idfOf = liveTerms.map(t => t -> Bm25.idf(nd, dict(t).df))
-    val idfDf = broadcast(idfOf.toDF("term", "idf"))
-    val weightsDf = broadcast(live.toDF("query_id", "term"))
+    Some(Bm25Batch(live, liveTerms, statsRow.getLong(1).toDouble / nd,
+      statsRow.getLong(2), idfOf.toMap,
+      broadcast(idfOf.toDF("term", "idf")),
+      broadcast(live.toDF("query_id", "term"))))
+  }
+
+  private def batchBm25Core(spark: SparkSession, built: BuiltIndex,
+                            queries: Seq[String], k: Int,
+                            requireAll: Boolean): DataFrame = {
+    import spark.implicits._
+    val b = bm25Batch(spark, built, queries, requireAll) match {
+      case Some(b) => b
+      case None => return emptyTopK(spark)
+    }
 
     // decode every live-term block once for the whole batch (doc order —
     // no serving permutation needed for BM25)
     val posts = built.blocks
-      .filter($"term".isin(liveTerms: _*))
+      .filter($"term".isin(b.liveTerms: _*))
       .flatMap { blk =>
         val (ids, tfs) = IndexBuild.decodeBlockDocOrder(blk)
         Iterator.tabulate(ids.length)(i => (blk.term, ids(i), tfs(i)))
@@ -397,10 +397,10 @@ object QueryOps {
 
     val contrib = posts
       .join(built.docs.toDF().select($"doc_id", $"dl", $"url"), Seq("doc_id"))
-      .join(idfDf, Seq("term"))
-      .join(weightsDf, Seq("term"))
+      .join(b.idfDf, Seq("term"))
+      .join(b.weightsDf, Seq("term"))
       .select($"query_id", $"doc_id", $"url", $"term",
-        Bm25.contribCol(lit(avgdl)).as("c"))
+        Bm25.contribCol(lit(b.avgdl)).as("c"))
 
     val scoredAll = contrib
       .groupBy($"query_id", $"doc_id", $"url")
@@ -410,176 +410,121 @@ object QueryOps {
       if (requireAll) {
         // AND filter: keep (query, doc) pairs whose matched-term count hits
         // the query's required count (terms are unique per pair)
-        val nReq = broadcast(live.groupBy(_._1).view.mapValues(_.size)
+        val nReq = broadcast(b.live.groupBy(_._1).view.mapValues(_.size)
           .toSeq.toDF("query_id", "n_req"))
         scoredAll.join(nReq, Seq("query_id")).filter($"nt" === $"n_req")
       } else scoredAll
-
-    val wRank = Window.partitionBy($"query_id").orderBy($"score".desc, $"url".asc)
-    scored.withColumn("rank", row_number().over(wRank))
-      .filter($"rank" <= k)
-      .select($"query_id", $"rank", $"url", $"score")
+    rankTopK(scored, k)
   }
 
   /** Per-term serving-order walk with the hygiene filter applied BEFORE the
-    * 200-cap. Blocks of each term are pruned by the window cumsum (a block
-    * can only matter while prior CLEAN postings < 200; prior_raw −
+    * cap. Blocks of each term are pruned by the window cumsum (a block can
+    * only matter while prior CLEAN postings < cap; prior_raw −
     * skippable-docs bounds that from below), then hash-repartitioned so one
-    * task walks one term's blocks in (part_id, seq) order — early-exiting
-    * at 200 clean postings, skipping hygiene-dirty docs without counting,
-    * and discarding the whole term when a throwing doc is encountered
-    * before the cap. Emits (term, doc_id, rank, base) where rank is the
-    * CLEAN serving rank and base = tfn × idf (stem factor applied later
-    * per query). */
+    * task walks one term's blocks in (part_id, seq) order through a
+    * [[CapWalk]] over the `hygiene` screen's classes. Emits (term, doc_id,
+    * rank, base): rank is the CLEAN serving rank, base = [[RefScore.base]]
+    * (the query factor is applied later per query).
+    *
+    * A [[BloomScreen]] cannot tell skip from throw, so its hits walk as
+    * uncounted SUSPECTS, and two stages follow, bit-identical to an exact
+    * screen: the tiny distinct suspect-id set is classified EXACTLY against
+    * the docs table (a join pruned by the suspect ids, broadcast back), then
+    * each term's walked rows replay in order through a fresh [[CapWalk]]
+    * with exact classes (a throw first met at clean ≥ 200 is past the
+    * reference's loop bound and does NOT abort).
+    *
+    * Returns (walked postings, the Bloom walk's persisted raw rows) — the
+    * caller unpersists the scratch after materializing the result. */
   private[query] def walkTermPostings(spark: SparkSession, built: BuiltIndex,
-                               terms: Seq[String],
-                               termStats: Map[String, (Double, Int)],
-                               skipIds: Set[Long],
-                               throwIds: Set[Long]): DataFrame = {
+                                      terms: Seq[String],
+                                      termStats: Map[String, (Double, Int)],
+                                      hygiene: Hygiene): (DataFrame, Option[DataFrame]) = {
     import spark.implicits._
     val statsB = spark.sparkContext.broadcast(termStats)
-    val skipB = spark.sparkContext.broadcast(skipIds)
-    val throwB = spark.sparkContext.broadcast(throwIds)
-    val skippable = (skipIds.size + throwIds.size).toLong
+    val screenB = spark.sparkContext.broadcast(hygiene)
 
     val wOrd = Window.partitionBy($"term").orderBy($"part_id".asc, $"seq".asc)
-    val pruned = built.blocks.filter($"term".isin(terms: _*))
+    val walked = built.blocks.filter($"term".isin(terms: _*))
       .withColumn("prior_postings",
         coalesce(sum($"n").over(wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter($"prior_postings" < lit(200L + skippable))
-
-    pruned.select($"term", $"part_id", $"seq", $"n", $"max_tf",
-        $"docs_vb", $"tfs_vb", $"perm_vb")
+      .filter($"prior_postings" < lit(RefScore.Cap + hygiene.flaggedCount))
+      .drop("prior_postings")
       .repartition($"term")
       .sortWithinPartitions($"term", $"part_id", $"seq")
-      .as[(String, Int, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
+      .as[graft.index.PostingBlock]
       .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Double)]
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Double)]
-        var curTerm: String = null
-        var clean = 0
-        var aborted = false
-        def flush(): Unit = { if (!aborted) out ++= buf; buf.clear() }
-        for ((term, pid, seq, nb, maxTf, docs, tfs, perm) <- it) {
-          if (term != curTerm) { flush(); curTerm = term; clean = 0; aborted = false }
-          if (!aborted && clean < 200) {
-            val (idf, dMaxTf) = statsB.value(term)
-            val decoded = IndexBuild.decodeBlock(
-              graft.index.PostingBlock(term, pid, seq, nb, maxTf, docs, tfs, perm))
+        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Double, Int)]
+        var walk: CapWalk = null
+        for (blk <- it) {
+          if (walk == null || blk.term != walk.term) {
+            if (walk != null) out ++= walk.rows
+            walk = new CapWalk(blk.term)
+          }
+          if (walk.open) {
+            val (idf, dMaxTf) = statsB.value(blk.term)
+            val decoded = IndexBuild.decodeBlock(blk)
             var i = 0
-            while (i < decoded.length && !aborted && clean < 200) {
+            while (i < decoded.length && walk.open) {
               val (docId, tf) = decoded(i)
-              if (throwB.value.contains(docId)) { aborted = true; buf.clear() }
-              else if (!skipB.value.contains(docId)) {
-                buf += ((term, docId, clean, (0.4 + 0.6 * tf / dMaxTf) * idf))
-                clean += 1
-              }
+              walk.offer(docId, RefScore.base(tf, dMaxTf, idf), screenB.value.classOf(docId))
               i += 1
             }
           }
         }
-        flush()
+        if (walk != null) out ++= walk.rows
         out.iterator
-      }.toDF("term", "doc_id", "rank", "base")
+      }.toDF("term", "doc_id", "rank", "base", "cls")
+
+    hygiene match {
+      case _: ExactSets => (walked.drop("cls"), None)
+      case _: BloomScreen =>
+        val raw = walked.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // exact classification of the suspect ids only (a tiny set: real
+        // flagged docs that made the walk window, plus fpp noise)
+        val suspectIds = raw.filter($"cls" === Suspect).select($"doc_id").distinct()
+        val classify = udf((u: String) => classifyUrl(u))
+        val resolved = built.docs.toDF()
+          .join(suspectIds, Seq("doc_id"), "left_semi")
+          .select($"doc_id", classify($"url").as("exact"))
+        // ordered per-term replay with exact classes; rank orders the raw
+        // walk (suspects included) and is re-assigned as the clean rank
+        val replayed = raw.join(broadcast(resolved), Seq("doc_id"), "left")
+          .select($"term", $"doc_id", $"rank", $"base", coalesce($"exact", $"cls"))
+          .as[(String, Long, Int, Double, Int)]
+          .groupByKey(_._1)
+          .flatMapGroups { (term, it) =>
+            val walk = new CapWalk(term)
+            val rows = it.toIndexedSeq.sortBy(_._3).iterator
+            while (rows.hasNext && walk.open) {
+              val (_, docId, _, base, cls) = rows.next()
+              walk.offer(docId, base, cls)
+            }
+            walk.rows
+          }.toDF("term", "doc_id", "rank", "base", "cls").drop("cls")
+        (replayed, Some(raw))
+    }
   }
 
-  /** The Bloom-pre-screened twin of [[walkTermPostings]] for corpora whose
-    * flagged-doc sets outgrow the driver. Three stages, results
-    * bit-identical to the exact walk:
-    *
-    *  1. walk each term in serving order; a posting whose doc hits the
-    *     (broadcast) Bloom filter is emitted as a SUSPECT and does not
-    *     count; definitely-clean postings count toward the 200 stop. Walk
-    *     output ≤ 200 + suspects per term, suspects ≈ flagged hits + fpp
-    *     noise;
-    *  2. classify the tiny distinct suspect-id set EXACTLY against the docs
-    *     table (join pruned by the suspect ids, result broadcast back);
-    *  3. per-term ordered replay: iterate walked postings in serving order
-    *     with exact classes — skips dropped without counting, a genuinely
-    *     throwing doc reached before the 200th clean posting empties the
-    *     term (a throw first encountered at clean ≥ 200 is past the
-    *     reference's loop bound and must NOT abort), stop at 200.
-    */
-  /** Returns (final walked postings, the stage-1 scratch DataFrame) — the
-    * caller unpersists the scratch after materializing the result. */
-  private[query] def bloomWalkTermPostings(spark: SparkSession, built: BuiltIndex,
-                                    terms: Seq[String],
-                                    termStats: Map[String, (Double, Int)],
-                                    screen: BloomScreen): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val statsB = spark.sparkContext.broadcast(termStats)
-    val bloomB = spark.sparkContext.broadcast(screen.filter)
-    val skippable = screen.flaggedCount
+  /** The reference's per-term cap loop over classified postings in serving
+    * order: a clean posting takes the next rank and counts toward
+    * [[RefScore.Cap]], a suspect takes the next rank without counting, a
+    * skip is dropped, and a throw empties the term. */
+  private final class CapWalk(val term: String) {
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Double, Int)]
+    private var clean = 0
+    private var aborted = false
 
-    val wOrd = Window.partitionBy($"term").orderBy($"part_id".asc, $"seq".asc)
-    val pruned = built.blocks.filter($"term".isin(terms: _*))
-      .withColumn("prior_postings",
-        coalesce(sum($"n").over(wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter($"prior_postings" < lit(200L + skippable))
+    def open: Boolean = !aborted && clean < RefScore.Cap
 
-    // stage 1: raw walk with suspect marking
-    val raw = pruned.select($"term", $"part_id", $"seq", $"n", $"max_tf",
-        $"docs_vb", $"tfs_vb", $"perm_vb")
-      .repartition($"term")
-      .sortWithinPartitions($"term", $"part_id", $"seq")
-      .as[(String, Int, Int, Int, Int, Array[Byte], Array[Byte], Array[Byte])]
-      .mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Int, Double, Boolean)]
-        var curTerm: String = null
-        var confirmedClean = 0
-        var rawIdx = 0
-        for ((term, pid, seq, nb, maxTf, docs, tfs, perm) <- it) {
-          if (term != curTerm) { curTerm = term; confirmedClean = 0; rawIdx = 0 }
-          if (confirmedClean < 200) {
-            val (idf, dMaxTf) = statsB.value(term)
-            val decoded = IndexBuild.decodeBlock(
-              graft.index.PostingBlock(term, pid, seq, nb, maxTf, docs, tfs, perm))
-            var i = 0
-            while (i < decoded.length && confirmedClean < 200) {
-              val (docId, tf) = decoded(i)
-              val suspect = bloomB.value.mightContainLong(docId)
-              out += ((term, docId, rawIdx, (0.4 + 0.6 * tf / dMaxTf) * idf, suspect))
-              rawIdx += 1
-              if (!suspect) confirmedClean += 1
-              i += 1
-            }
-          }
-        }
-        out.iterator
-      }.toDF("term", "doc_id", "raw_idx", "base", "suspect")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def offer(docId: Long, base: Double, cls: Int): Unit = cls match {
+      case Clean => buf += ((term, docId, buf.length, base, cls)); clean += 1
+      case Suspect => buf += ((term, docId, buf.length, base, cls))
+      case Skip => ()
+      case Throw => aborted = true; buf.clear()
+    }
 
-    // stage 2: exact classification of the suspect ids only (a tiny set:
-    // real flagged docs that made the walk window, plus fpp noise)
-    val suspectIds = raw.filter($"suspect").select($"doc_id").distinct()
-    val classify = udf((u: String) => classifyUrl(u))
-    val resolved = built.docs.toDF()
-      .join(suspectIds, Seq("doc_id"), "left_semi")
-      .select($"doc_id", classify($"url").as("cls"))
-
-    // stage 3: ordered per-term replay with exact classes
-    val walked = raw.join(broadcast(resolved), Seq("doc_id"), "left")
-      .select($"term", $"doc_id", $"raw_idx", $"base",
-        coalesce($"cls", lit(0)).as("cls"))
-      .as[(String, Long, Int, Double, Int)]
-      .groupByKey(_._1)
-      .flatMapGroups { (term, it) =>
-        val rows = it.toIndexedSeq.sortBy(_._3)
-        val out = IndexedSeq.newBuilder[(String, Long, Int, Double)]
-        var clean = 0
-        var aborted = false
-        var i = 0
-        while (i < rows.length && clean < 200 && !aborted) {
-          val (_, docId, _, base, cls) = rows(i)
-          cls match {
-            case 0 => out += ((term, docId, clean, base)); clean += 1
-            case 1 => () // skip: does not count toward the cap
-            case 2 => aborted = true // throw before the cap empties the term
-          }
-          i += 1
-        }
-        if (aborted) Iterator.empty else out.result().iterator
-      }.toDF("term", "doc_id", "rank", "base")
-    (walked, raw)
+    def rows: Iterator[(String, Long, Int, Double, Int)] =
+      if (aborted) Iterator.empty else buf.iterator
   }
 }

@@ -20,9 +20,10 @@ import graft.text.{PorterStemmer, Text}
   *
   * Two scorers:
   *  - [[referenceTopK]] — the rank-identity scorer, replicating
-  *    backend/Backend.java:40-139,205-330,333-410 exactly (int-division
-  *    log500 idf, idf==0 drop, 0.7 stem discount, per-term 200-posting cap,
-  *    TreeMap url-asc ties, stable desc sort, top-200).
+  *    backend/Backend.java:40-139,205-330,333-410 exactly: the
+  *    [[RefScore]] rule (int-division log500 idf, idf==0 drop, 0.7 stem
+  *    discount, per-term 200-posting cap, url hygiene filter) plus TreeMap
+  *    url-asc ties, stable desc sort, top-200.
   *  - [[bm25TopK]] — the performance scorer: standard [[Bm25]] over the
   *    impact-ordered blocks with block-max early termination (Anh–Moffat
   *    style impact ordering; the block-max bound plays the WAND θ role).
@@ -51,17 +52,9 @@ final class Searcher(val n: Int,
     * queries, which the in-repo oracle pins identically on both sides. */
   def referenceTopK(query: String,
                     pagerank: Option[String => Double] = None): List[(String, Double)] = {
-    val surface = Text.parseQuery(query)
-    val expanded: Seq[(String, Boolean)] =
-      surface.map(t => (t, false)) ++
-        surface.flatMap { t =>
-          val s = PorterStemmer.stem(t)
-          if (s != t) Some((s, true)) else None
-        }
-
     val tfidfMap = mutable.LinkedHashMap.empty[String, IndexedSeq[(String, Double)]]
-    for ((term, isStem) <- expanded if term.nonEmpty) {
-      val list = termTfidf(term, isStem)
+    for ((term, factor) <- RefScore.termWeights(query)) {
+      val list = termTfidf(term, factor)
       if (list.nonEmpty) tfidfMap.put(term, list)
     }
     if (tfidfMap.isEmpty) return Nil
@@ -74,41 +67,31 @@ final class Searcher(val n: Int,
       }
       combined.update(url, combined.getOrElse(url, 0.0) + s)
     }
-    combined.toList.sortBy { case (_, s) => -s }.take(200)
+    combined.toList.sortBy { case (_, s) => -s }.take(RefScore.Cap)
   }
 
-  /** Per-term (decodedUrl, tfidf) in serving order, ≤200 — Backend.getTFIDF
-    * (Backend.java:205-314) including its per-posting url hygiene filter
-    * (Backend.java:268-273): the stored url is URL-decoded
-    * (`URLDecoder.decode(url.trim(), "UTF-8")`) and the posting is SKIPPED —
-    * before it counts toward the 200-cap — when the decoded url is empty,
-    * the literal string "null", contains a double quote, or contains a
-    * control char (< 0x20, `checkControlChar` Backend.java:317-324). A
-    * malformed %-escape makes URLDecoder throw, which the reference's
-    * enclosing catch turns into an EMPTY list for the whole term
-    * (Backend.java:309-313) — replicated bug-for-bug. The decoded url is
-    * also the key postings combine under downstream. */
-  private def termTfidf(term: String, isStem: Boolean): IndexedSeq[(String, Double)] = {
-    val stemFactor = if (isStem) 0.7 else 1.0
-    dict.get(term) match {
+  /** Per-term (decodedUrl, tfidf) in serving order, ≤ [[RefScore.Cap]] —
+    * Backend.getTFIDF (Backend.java:205-314) including its per-posting url
+    * hygiene filter ([[RefScore.cleanUrl]]): a skipped posting does not
+    * count toward the cap. A malformed %-escape makes URLDecoder throw,
+    * which the reference's enclosing catch turns into an EMPTY list for the
+    * whole term (Backend.java:309-313) — replicated bug-for-bug. The
+    * decoded url is also the key postings combine under downstream. */
+  private def termTfidf(term: String, factor: Double): IndexedSeq[(String, Double)] =
+    dict.get(term).flatMap(d => RefScore.idf(n, d.df).map((d, _))) match {
       case None => IndexedSeq.empty
-      case Some(d) =>
-        val idf = math.log((n / d.df).toDouble) / math.log(500.0) // Java int division
-        if (idf == 0.0) return IndexedSeq.empty
+      case Some((d, idf)) =>
         val out = mutable.ArrayBuffer.empty[(String, Double)]
         try {
           val blocks = blocksOf(term)
           var bi = 0
-          while (bi < blocks.length && out.length < 200) {
+          while (bi < blocks.length && out.length < RefScore.Cap) {
             val decoded = IndexBuild.decodeBlock(blocks(bi))
             var i = 0
-            while (i < decoded.length && out.length < 200) {
+            while (i < decoded.length && out.length < RefScore.Cap) {
               val (docId, tf) = decoded(i)
-              val url = java.net.URLDecoder.decode(urlOf(docId).trim, "UTF-8")
-              if (url != null && url.nonEmpty && url != "null" &&
-                  !url.contains("\"") && !Searcher.hasControlChar(url)) {
-                val tfn = 0.4 + 0.6 * tf / d.max_tf // exact reference double math
-                out += ((url, tfn * idf * stemFactor))
+              RefScore.cleanUrl(urlOf(docId)).foreach { url =>
+                out += ((url, RefScore.base(tf, d.max_tf, idf) * factor))
               }
               i += 1
             }
@@ -124,7 +107,6 @@ final class Searcher(val n: Int,
         }
         out.toIndexedSeq
     }
-  }
 
   // --------------------------------------------------------------------- BM25
   /** Standard BM25 top-k with block-max early termination over the
@@ -158,9 +140,7 @@ final class Searcher(val n: Int,
     })
 
   def bm25TopK(query: String, k: Int = 10): List[(String, Double)] = {
-    val terms = (Text.parseQuery(query).toSet.flatMap { (t: String) =>
-      Set(t, PorterStemmer.stem(t))
-    }).toSeq.sorted.filter(dict.contains)
+    val terms = Searcher.expansionTerms(query).sorted.filter(dict.contains)
     if (terms.isEmpty) return Nil
 
     def contribution(idf: Double, tf: Int, dl: Long): Double =
@@ -445,16 +425,6 @@ private[query] final class LongDoubleMap(expected: Long) {
 }
 
 object Searcher {
-
-  /** Backend.checkControlChar (Backend.java:317-324): any char < 0x20. */
-  private[query] def hasControlChar(url: String): Boolean = {
-    var i = 0
-    while (i < url.length) {
-      if (url.charAt(i) < 32) return true
-      i += 1
-    }
-    false
-  }
 
   /** Every term either scorer can touch for a query: surface forms plus
     * their Porter stems — the term rule the batch twins ([[QueryOps]],

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Document-partitioned sharded serving — the way a real engine runs the
@@ -30,25 +30,20 @@ import org.apache.spark.sql.functions._
   */
 object ShardedSearch {
 
-  /** Per-term posting cap the reference serving path applies
-    * (Backend.java:262 — first 200 postings in stored order). */
-  val PerTermCap = 200
-
-  /** Score candidate postings `(url, term, tf)` with the reference scorer
+  /** Score candidate postings `(url, term, tf)` with the [[RefScore]] rule
     * against per-term stats `dict` `(term, df, max_tf)` computed over the
-    * FULL corpus. Applies the global per-term 200-cap (tf desc, url asc),
-    * the int-division log₅₀₀ IDF with its idf==0 drop, the 0.4/0.6
-    * augmented TF, the per-query-term factor, and the query-order fold.
-    * Returns (url, score) in rank order (score desc, url asc), ≤ k rows,
-    * raw double scores. Shared by [[topK]] and
+    * FULL corpus ([[statsOf]]). Applies the global per-term cap (tf desc,
+    * url asc), the idf with its idf==0 drop, [[RefScore.baseCol]], the
+    * per-query-term factor, and the query-order fold. Returns (url, score)
+    * in rank order (score desc, url asc), ≤ k rows, raw double scores;
+    * empty `weights` (an empty query) give the empty frame without a job.
+    * Shared by [[topK]], [[ExpandedSearch]] and
     * [[graft.index.StaticPrune]].
     *
     * `dict` is QUERY-TERM-sized by contract (≤ a handful of rows — the
     * stats-service lookup of a real serving tier), so it is collected and
-    * re-broadcast as per-term LITERALS: idf is computed on the driver with
-    * the searcher's own `math.log` (Spark's `log` expression goes through
-    * StrictMath, which differs from Math.log by 1 ulp on some inputs —
-    * enough to break the bit-identity contract with [[Searcher]]). */
+    * re-broadcast as per-term LITERALS: idf is computed on the driver by
+    * [[RefScore.idf]], never by Spark's `log`. */
   private[graft] def scoreCandidates(candidates: DataFrame, dict: DataFrame,
                                      weights: Seq[(String, Double)],
                                      numDocs: Long, k: Int): DataFrame = {
@@ -56,18 +51,9 @@ object ShardedSearch {
     import spark.implicits._
     if (weights.isEmpty)
       return spark.emptyDataset[(String, Double)].toDF("url", "score")
-    val stats = dict.collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getAs[Number](2).intValue()))
-      .toMap
-    // idf_base is the reference's Java INT division n/df; idf==0 terms
-    // (df > n/2) drop out entirely (Backend.java:283)
+    val stats = termStats(dict.collect(), numDocs)
     val w = weights.zipWithIndex.flatMap { case ((t, f), i) =>
-      stats.get(t).flatMap { case (df, maxTf) =>
-        val idfBase = numDocs / df
-        if (idfBase <= 1) None
-        else Some((t, f, i, math.log(idfBase.toDouble) / math.log(500.0),
-          maxTf))
-      }
+      stats.get(t).map { case (idf, maxTf) => (t, f, i, idf, maxTf) }
     }.toDF("term", "factor", "qidx", "idf", "max_tf")
     import org.apache.spark.sql.expressions.Window
     val perTerm = Window.partitionBy("term")
@@ -75,12 +61,8 @@ object ShardedSearch {
     candidates
       .join(broadcast(w), "term")
       .withColumn("rnk", row_number().over(perTerm))
-      .where(col("rnk") <= PerTermCap)
-      // exact reference double math and grouping: (tfn * idf) * factor
-      // (Backend.java:283-307 via Searcher.termTfidf)
-      .withColumn("s",
-        (lit(0.4) + lit(0.6) * col("tf") / col("max_tf")) *
-          col("idf") * col("factor"))
+      .where(col("rnk") <= RefScore.Cap)
+      .withColumn("s", RefScore.baseCol * col("factor"))
       // per-url fold in QUERY-TERM order (qidx) — bit-identical to the
       // reference's sequential accumulation, immune to partition
       // reassociation (same shape as QueryOps.bm25TermOrderedFold)
@@ -91,29 +73,35 @@ object ShardedSearch {
       .limit(k)
   }
 
-  /** Per-term global stats over the full postings table — ONE map-side-
-    * combined agg, restricted to the query's terms (per-term stats depend
-    * only on that term's rows, so the restriction is sound and keeps the
-    * scan term-pruned). */
-  private def statsOf(triples: DataFrame, terms: Seq[String]): DataFrame =
+  /** Per-term global stats over the full postings table `(url, term, tf)`
+    * → `(term, df, max_tf)` — ONE map-side-combined agg, restricted to the
+    * query's terms (per-term stats depend only on that term's rows, so the
+    * restriction is sound and keeps the scan term-pruned). The single stats
+    * query of every triples-based reference tier. */
+  private[graft] def statsOf(triples: DataFrame, terms: Seq[String]): DataFrame =
     triples.where(col("term").isin(terms: _*))
       .groupBy("term")
       .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"))
+
+  /** Collected [[statsOf]] rows (`term`, `df`, `max_tf` first) → term →
+    * ([[RefScore.idf]], max_tf), with dropped terms (idf == 0) left out. */
+  private[graft] def termStats(rows: Array[Row], numDocs: Long): Map[String, (Double, Int)] =
+    rows.flatMap { r =>
+      RefScore.idf(numDocs, r.getLong(1))
+        .map(idf => r.getString(0) -> ((idf, r.getAs[Number](2).intValue())))
+    }.toMap
 
   /** Reference-scored top-k over a document-partitioned index of `shards`
     * shards. `triples` is the postings table (url, term, tf); results are
     * rank-identical to the unsharded scorer. */
   def topK(spark: SparkSession, triples: DataFrame, numDocs: Long,
-           query: String, shards: Int, k: Int = PerTermCap): DataFrame = {
+           query: String, shards: Int, k: Int = RefScore.Cap): DataFrame = {
     require(shards >= 1, s"shards must be >= 1, got $shards")
-    val weights = QueryOps.termWeights(query)
-    import spark.implicits._
-    if (weights.isEmpty)
-      return spark.emptyDataset[(String, Double)].toDF("url", "score")
+    val weights = RefScore.termWeights(query)
     val terms = weights.map(_._1)
     import org.apache.spark.sql.expressions.Window
     // shard-local candidate generation: each shard ranks ITS postings of
-    // each query term and sends at most PerTermCap upward — the per-shard
+    // each query term and sends at most the cap upward — the per-shard
     // serving work, modeled by the (shard, term) window partition
     val local = Window.partitionBy("shard", "term")
       .orderBy(col("tf").desc, col("url").asc)
@@ -121,7 +109,7 @@ object ShardedSearch {
       .where(col("term").isin(terms: _*))
       .withColumn("shard", pmod(xxhash64(col("url")), lit(shards)))
       .withColumn("lrnk", row_number().over(local))
-      .where(col("lrnk") <= PerTermCap)
+      .where(col("lrnk") <= RefScore.Cap)
       .select("url", "term", "tf")
     // merge + score: scoreCandidates re-applies the GLOBAL per-term cap
     // over the ≤ shards×cap merged candidates, then scores with the

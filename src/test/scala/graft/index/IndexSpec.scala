@@ -12,7 +12,8 @@ import graft.query.Searcher
 /** End-to-end index correctness: the distributed Spark build + driver-side
   * serving path must be RANK-IDENTICAL (urls and exact double scores) to the
   * single-threaded oracle on the reference query set, at multiple N values
-  * (exercising the idf==0 int-division drop branch) and at multiple
+  * (exercising the idf==0 int-division drop branch and the n < df −∞ idf
+  * the reference keeps) and at multiple
   * parallelism levels (determinism of the salted/range-partitioned build).
   */
 class IndexSpec extends AnyFunSuite {
@@ -96,8 +97,9 @@ class IndexSpec extends AnyFunSuite {
   test("rank-identical top-k vs oracle on the reference query set") {
     val searcher = Searcher.fromIndex(built, numDocs)
     // n = numDocs exercises the idf==0 drop (head terms have df ≈ N);
-    // n = 300000 is the reference's production setting (README step 7)
-    for (n <- Seq(numDocs, 300000)) {
+    // n = 300000 is the reference's production setting (README step 7);
+    // n = 10 puts head terms' df above n (n/df == 0, idf −∞, kept)
+    for (n <- Seq(numDocs, 300000, 10)) {
       val s = if (n == numDocs) searcher
               else Searcher.fromIndex(built, n)
       for (q <- queries) {
@@ -213,7 +215,7 @@ class IndexSpec extends AnyFunSuite {
       parts = 3, blockSize = 64)
     val qs = Seq("telescope", "observation comet", "nebula gravity", "asteroid",
       "telescope discovery orbit", "expedition", "observation") ++ queries.take(5)
-    for (n <- Seq(pages.length, 300000)) {
+    for (n <- Seq(pages.length, 300000, 10)) {
       val s = Searcher.fromIndex(b, n)
       for (q <- qs)
         assert(s.referenceTopK(q) == Oracle.score(q, n, oracleIdx),
@@ -227,7 +229,7 @@ class IndexSpec extends AnyFunSuite {
     // the DISTRIBUTED Dataset path applies the same filter BEFORE the
     // 200-cap (round-3 gap closure): single-query and batch replay must
     // both equal the driver-side searcher on the adversarial corpus
-    for (n <- Seq(pages.length, 300000)) {
+    for (n <- Seq(pages.length, 300000, 10)) {
       val sr = Searcher.fromIndex(b, n)
       for (q <- qs) {
         val ds = graft.query.QueryOps.referenceTopK(spark, b, q, n)
@@ -244,9 +246,10 @@ class IndexSpec extends AnyFunSuite {
       // the BLOOM hygiene pre-screen (suspect-mark → exact per-term verify →
       // ordered replay) must land on the identical rows — forced here, since
       // this corpus's flagged set is far below the auto-switch cap
-      val byQidBloom = graft.query.QueryOps.batchReferenceTopK(spark, b, qs, n,
-          forceBloomHygiene = true)
-        .collect().groupBy(_.getInt(0))
+      val (bloomPlan, bloomScratch) = graft.query.QueryOps.batchReferenceTopKPlan(
+        spark, b, qs, n, forceBloomHygiene = true)
+      val byQidBloom = bloomPlan.collect().groupBy(_.getInt(0))
+      bloomScratch.foreach(_.unpersist())
       for ((q, qi) <- qs.zipWithIndex) {
         val got = byQidBloom.getOrElse(qi, Array.empty).sortBy(_.getInt(1))
           .map(r => (r.getString(2), r.getDouble(3))).toList

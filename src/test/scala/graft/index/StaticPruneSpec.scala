@@ -59,7 +59,7 @@ class StaticPruneSpec extends AnyFunSuite {
     // The query term must NOT stem-expand (expansion adds a second term
     // and the per-url fold stops being single-posting)
     val q = Seq("search", "index", "system", "station", "planet")
-      .find(w => graft.query.QueryOps.termWeights(w).size == 1)
+      .find(w => graft.query.RefScore.termWeights(w).size == 1)
       .getOrElse(fail("no non-expanding probe term found"))
     val full = graft.query.ShardedSearch.topK(spark, triples, N, q, shards = 1)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap

@@ -48,17 +48,27 @@ class ContainmentSpec extends AnyFunSuite {
     assert(got((8L, 9L)) == (1L, 3L, 1L, 1.0), got.toString)
   }
 
-  test("hashedGrams mode returns the exact string-key results") {
-    import spark.implicits._
+  test("gram-hash keys give the pairs string keys give (plain-Scala expectation)") {
     val docs = Seq(
       1L -> "a b c d e", 2L -> "x y a b c d e z", 3L -> "p q r s",
       4L -> "q r s t u", 5L -> "m n o", 6L -> "m n o w", 7L -> "z m n o",
-      8L -> "a b c a b c", 9L -> "a b c").toDF("doc_id", "text")
-    val str = Containment.pairs(docs, "doc_id", "text", n = 3)
-      .collect().map(_.toSeq).toSet
-    val hsh = Containment.pairs(docs, "doc_id", "text", n = 3,
-        hashedGrams = true)
-      .collect().map(_.toSeq).toSet
-    assert(hsh == str, s"hashed-gram pairs diverge:\n$hsh\nvs\n$str")
+      8L -> "a b c a b c", 9L -> "a b c")
+    // string-keyed reference: distinct word 3-gram sets, grams in more than
+    // maxGramDf docs dropped, containment = shared / min(kept sizes)
+    val maxGramDf = 3L
+    val gramSets = docs.map { case (id, text) =>
+      val toks = text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      id -> (0 to toks.length - 3).map(i => toks.slice(i, i + 3).mkString(" ")).toSet
+    }
+    val df = gramSets.flatMap(_._2).groupBy(identity).map { case (g, gs) => g -> gs.size }
+    val kept = gramSets.map { case (id, gs) => id -> gs.filter(df(_) <= maxGramDf) }
+    val expected = (for {
+      (a, ka) <- kept; (b, kb) <- kept if a < b
+      shared = (ka intersect kb).size.toLong if shared > 0
+      c = shared.toDouble / math.min(ka.size, kb.size) if c >= 0.5
+    } yield (a, b) -> ((shared, ka.size.toLong, kb.size.toLong, c))).toMap
+    assert(expected.size > 3, s"fixture must produce pairs: $expected")
+    val got = run(docs, maxGramDf = maxGramDf)
+    assert(got == expected, s"pairs diverge from string keys:\n$got\nvs\n$expected")
   }
 }

@@ -64,18 +64,32 @@ class DupSpansSpec extends AnyFunSuite {
     assert(run(Seq(15L -> "a b", 16L -> "q w e r t y"), n = 3).isEmpty)
   }
 
-  test("hashedGrams mode returns the exact string-key results") {
-    import spark.implicits._
+  test("gram-hash keys give the spans string keys give (plain-Scala expectation)") {
+    val n = 3
     val docs = Seq(
       1L -> "a b c d e f", 2L -> "x a b c y z", 3L -> "p q r s t",
       4L -> "p q r x x x r s t", 5L -> "h i j k l m",
       6L -> "h i j z z k l m", 7L -> "a b c z w d e f g",
       8L -> "a b c", 9L -> "d e f", 10L -> "e f g",
-      11L -> "m n o w w m n o").toDF("doc_id", "text")
-    val str = DupSpans.spans(docs, "doc_id", "text", 3)
-      .collect().map(_.toSeq).toSet
-    val hsh = DupSpans.spans(docs, "doc_id", "text", 3, hashedGrams = true)
-      .collect().map(_.toSeq).toSet
-    assert(hsh == str, s"hashed-gram spans diverge:\n$hsh\nvs\n$str")
+      11L -> "m n o w w m n o")
+    // string-keyed reference: sliding word n-grams, corpus-wide occurrence
+    // counts (within-doc repeats included), hits at count >= 2, and a new
+    // span wherever a hit starts more than n past the previous hit
+    def grams(text: String): IndexedSeq[String] = {
+      val toks = text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      (0 to toks.length - n).map(i => toks.slice(i, i + n).mkString(" "))
+    }
+    val byDoc = docs.map { case (id, text) => id -> grams(text) }
+    val freq = byDoc.flatMap(_._2).groupBy(identity).map { case (g, gs) => g -> gs.size }
+    val expected = byDoc.flatMap { case (id, gs) =>
+      val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (start, last hit)
+      for (p <- gs.indices if freq(gs(p)) >= 2)
+        if (spans.nonEmpty && p - spans.last._2 <= n) spans(spans.length - 1) = (spans.last._1, p)
+        else spans += ((p, p))
+      spans.map { case (start, last) => (id, start, last + n - 1, last + n - start) }
+    }.toSet
+    assert(expected.size > 5, s"fixture must produce spans: $expected")
+    val got = run(docs, n)
+    assert(got == expected, s"spans diverge from string keys:\n$got\nvs\n$expected")
   }
 }

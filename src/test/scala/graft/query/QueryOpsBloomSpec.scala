@@ -5,12 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
 import graft.index.IndexBuild
 
-/** The Bloom hygiene pre-screen must be bit-identical to the exact-set walk
-  * even when the filter fires FALSE POSITIVES on clean docs — the
-  * suspect-mark → exact-verify → ordered-replay pipeline's whole point.
-  * (IndexSpec covers the end-to-end `forceBloomHygiene` batch; this spec
-  * saturates the filter with clean ids so verified-clean suspects are
-  * guaranteed, not left to fpp chance.) */
+/** The one serving-order walk must return identical rows under an exact
+  * hygiene screen and under a Bloom screen even when the filter fires
+  * FALSE POSITIVES on clean docs — the suspect-mark → exact-verify →
+  * ordered-replay stages' whole point. (IndexSpec reaches the Bloom screen
+  * end to end through `batchReferenceTopKPlan`; this spec saturates the
+  * filter with clean ids so verified-clean suspects are guaranteed, not
+  * left to fpp chance.) */
 class QueryOpsBloomSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -27,8 +28,8 @@ class QueryOpsBloomSpec extends AnyFunSuite {
     val built = IndexBuild.build(spark, spark.createDataset(pages),
       Corpus.lexicon, parts = 3, blockSize = 64)
     val docs = built.docs.collect()
-    val skip = docs.filter(d => QueryOps.classifyUrl(d.url) == 1).map(_.doc_id).toSet
-    val thr = docs.filter(d => QueryOps.classifyUrl(d.url) == 2).map(_.doc_id).toSet
+    val skip = docs.filter(d => QueryOps.classifyUrl(d.url) == QueryOps.Skip).map(_.doc_id).toSet
+    val thr = docs.filter(d => QueryOps.classifyUrl(d.url) == QueryOps.Throw).map(_.doc_id).toSet
     assert(skip.nonEmpty && thr.nonEmpty, "adversarial fixture must flag docs")
     val clean = docs.map(_.doc_id).filterNot(id => skip(id) || thr(id))
 
@@ -48,19 +49,23 @@ class QueryOpsBloomSpec extends AnyFunSuite {
     val dict = built.dictionary.collect().map(d => d.term -> d).toMap
     val qs = Seq("telescope", "observation comet", "nebula gravity", "asteroid",
       "expedition", "galaxy engine search", "the")
-    val stats = qs.flatMap(QueryOps.termWeights(_).map(_._1)).distinct
-      .flatMap(t => dict.get(t).map(d =>
-        t -> (math.log((n / d.df).toDouble) / math.log(500.0), d.max_tf)))
-      .filter(_._2._1 != 0.0).toMap
+    val stats = qs.flatMap(RefScore.termWeights(_).map(_._1)).distinct
+      .flatMap(t => dict.get(t).flatMap(d =>
+        RefScore.idf(n, d.df).map(idf => t -> ((idf, d.max_tf))))).toMap
     val liveTerms = stats.keys.toSeq.sorted
     assert(liveTerms.nonEmpty)
 
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
-    val exact = rows(QueryOps.walkTermPostings(spark, built, liveTerms, stats, skip, thr))
-    val (bloomDf, scratch) = QueryOps.bloomWalkTermPostings(spark, built, liveTerms, stats, screen)
-    val bloom = rows(bloomDf)
-    scratch.unpersist() // the caller's contract: drop the stage-1 cache once consumed
+    def walk(h: QueryOps.Hygiene) = {
+      val (df, scratch) = QueryOps.walkTermPostings(spark, built, liveTerms, stats, h)
+      val rows = df.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+      scratch.foreach(_.unpersist()) // the caller's contract: drop the raw walk once consumed
+      (rows, scratch.isDefined)
+    }
+    val (exact, exactScratch) = walk(QueryOps.ExactSets(skip, thr))
+    val (bloom, bloomScratch) = walk(screen)
+    // only the Bloom screen runs the verify + replay stages over a persisted raw walk
+    assert(!exactScratch && bloomScratch)
     assert(exact.nonEmpty)
     assert(bloom == exact,
       s"bloom-walk drift: missing=${(exact -- bloom).take(3)} extra=${(bloom -- exact).take(3)}")

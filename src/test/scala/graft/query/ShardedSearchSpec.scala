@@ -25,22 +25,28 @@ class ShardedSearchSpec extends AnyFunSuite {
     }.toDF("url", "term", "tf").cache()
   }
 
-  private lazy val searcher: Searcher = Searcher.fromIndex(
-    graft.index.IndexBuild.build(spark,
-      graft.corpus.Corpus.generate(spark, N), graft.corpus.Corpus.lexicon,
-      parts = 4), N)
+  private lazy val built = graft.index.IndexBuild.build(spark,
+    graft.corpus.Corpus.generate(spark, N), graft.corpus.Corpus.lexicon,
+    parts = 4)
 
-  private def sharded(query: String, shards: Int): List[(String, Double)] =
-    ShardedSearch.topK(spark, triples, N, query, shards).collect()
+  private lazy val searcher: Searcher = Searcher.fromIndex(built, N)
+
+  private def sharded(query: String, shards: Int, n: Long = N): List[(String, Double)] =
+    ShardedSearch.topK(spark, triples, n, query, shards).collect()
       .map(r => (r.getString(0), r.getDouble(1))).toList
 
   test("rank- and score-identical to the in-heap searcher") {
-    // stem expansion ("running"→"run"), head-term, multi-term, numbers
-    for (q <- Seq("galaxy engine search", "running", "prince officer soldier",
-                  "the of and", "999 1234")) {
-      val expect = searcher.referenceTopK(q)
-      val got = sharded(q, shards = 4)
-      assert(got == expect, s"query '$q' diverged under 4 shards")
+    // stem expansion ("running"→"run"), head-term, multi-term, numbers;
+    // n = 10 puts the head terms' df above n: n/df == 0, idf = −∞, which
+    // the reference keeps (only idf == 0 drops)
+    for (n <- Seq(N, 10)) {
+      val s = if (n == N) searcher else Searcher.fromIndex(built, n)
+      for (q <- Seq("galaxy engine search", "running", "prince officer soldier",
+                    "the of and", "999 1234")) {
+        val expect = s.referenceTopK(q)
+        val got = sharded(q, shards = 4, n)
+        assert(got == expect, s"query '$q' diverged under 4 shards at N=$n")
+      }
     }
   }
 
