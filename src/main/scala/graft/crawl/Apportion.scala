@@ -1,7 +1,6 @@
 package graft.crawl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Crawl-budget apportionment — split a fixed fetch budget across hosts
@@ -14,10 +13,10 @@ import org.apache.spark.sql.functions._
   *
   * Shape: the input is the per-host COUNT dimension (one row per host —
   * the frontier itself never enters), so this is one scalar total, one
-  * narrow projection, and one window over the host dimension ranked by
-  * remainder. Pairs with [[Frontier]]: apportion decides how much each
-  * host may fetch this cycle, Frontier decides which urls those slots go
-  * to.
+  * narrow projection, and the remainder rank from [[graft.util.GlobalRank]]
+  * (a global window would hold every host in one task). Pairs with
+  * [[Frontier]]: apportion decides how much each host may fetch this
+  * cycle, Frontier decides which urls those slots go to.
   */
 object Apportion {
 
@@ -44,10 +43,9 @@ object Apportion {
       .withColumn("base", expr(s"(n * ${budget}L) div ${total}L"))
       .withColumn("rem", expr(s"(n * ${budget}L) % ${total}L"))
     val leftover = budget - withBase.agg(sum(col("base"))).head().getLong(0)
-    val byRemainder = Window.orderBy(col("rem").desc, col(keyCol))
-    withBase
-      .withColumn("_rk", row_number().over(byRemainder))
-      .withColumn("extra", when(col("_rk") <= leftover, 1L).otherwise(0L))
+    graft.util.GlobalRank
+      .zipWithRank(withBase, Seq(col("rem").desc, col(keyCol).asc), "_rk")
+      .withColumn("extra", when(col("_rk") < leftover, 1L).otherwise(0L))
       .withColumn("allocated", col("base") + col("extra"))
       .select(col(keyCol), col("n"), col("base"), col("extra"), col("allocated"))
   }

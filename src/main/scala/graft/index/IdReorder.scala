@@ -1,9 +1,9 @@
 package graft.index
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.GlobalRank
 
 /** Doc-id reordering for index compression — the accounting that justifies
   * the classic index-engineering move: posting lists store DELTA GAPS
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * the url-sorted assignment vs a portable-hash-random one.
   *
   * (The production index already USES url-ordered dense ids —
-  * [[IndexBuild]] line ~185 — this is the measurement that proves the
+  * [[IndexBuild.build]] — this is the measurement that proves the
   * choice and, at reindex time, prices any proposed re-assignment.)
   *
   * Everything is INTEGER-EXACT: ids are dense ranks, gaps are id
@@ -22,11 +22,9 @@ import org.apache.spark.sql.functions._
   * implicit -1 origin), and varbyte length is a 7-bits-per-byte threshold
   * chain — so any engine replays the byte totals verbatim.
   *
-  * Scale shape: both assignments are the two-phase range-sort +
-  * partition-offset dense rank (one row per PARTITION transits the
-  * driver — [[IndexBuild.partitionOffsets]]), never a single-partition
-  * global window; the gap accounting shuffles (term, id) pairs once per
-  * scheme and folds map-side.
+  * Scale shape: both assignments are a [[graft.util.GlobalRank]] dense
+  * rank; the gap accounting shuffles (term, id) pairs once per scheme and
+  * folds map-side.
   */
 object IdReorder {
 
@@ -39,29 +37,6 @@ object IdReorder {
       .when(g < (1L << 49), 7L).when(g < (1L << 56), 8L)
       .otherwise(9L)
 
-  /** Dense 0-based ids for distinct `url`s in the order of `sortKeys`
-    * (which must totally order the urls), via the two-phase
-    * partition-offset rank. Returns (url, id). */
-  private def denseIds(spark: SparkSession, urls: DataFrame, parts: Int,
-                       sortKeys: Seq[Column]): DataFrame = {
-    import spark.implicits._
-    val keyed = sortKeys.zipWithIndex.map { case (c, i) => c.as(s"_k$i") }
-    val kcols = sortKeys.indices.map(i => col(s"_k$i"))
-    val sorted = urls.select((col("url") +: keyed): _*)
-      .repartitionByRange(parts, kcols: _*)
-      .sortWithinPartitions(kcols: _*)
-      .persist()
-    val (offsets, _) = IndexBuild.partitionOffsets(sorted, parts)
-    val offB = spark.sparkContext.broadcast(offsets)
-    val ids = sorted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var local = 0L
-      it.map { r => val id = offB.value(pid) + local; local += 1; (r.getString(0), id) }
-    }.toDF("url", "id").localCheckpoint() // materialize BEFORE unpersisting
-    sorted.unpersist()
-    ids
-  }
-
   /** Compression accounting over posting triples (`url`, `term`):
     * one row per scheme — (scheme, postings, bytes) with `bytes` the total
     * varbyte cost of all per-term gap sequences under that scheme's id
@@ -71,9 +46,12 @@ object IdReorder {
   def report(spark: SparkSession, triples: DataFrame, parts: Int): DataFrame = {
     val postings = triples.select(col("url"), col("term")).distinct().persist()
     val urls = postings.select(col("url")).distinct()
-    val byUrl = denseIds(spark, urls, parts, Seq(col("url")))
-    val byHash = denseIds(spark, urls, parts,
-      Seq(graft.ml.Sketches.h60(col("url")), col("url")))
+    val byUrl = GlobalRank.zipWithRank(urls, Seq(col("url")), "id", parts)
+    // the hash key is projected once, before the range shuffle
+    val byHash = GlobalRank.zipWithRank(
+        urls.withColumn("_h", graft.ml.Sketches.h60(col("url"))),
+        Seq(col("_h"), col("url")), "id", parts)
+      .select(col("url"), col("id"))
 
     def cost(ids: DataFrame, scheme: String): DataFrame = {
       val w = Window.partitionBy(col("term")).orderBy(col("id"))

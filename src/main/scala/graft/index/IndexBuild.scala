@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.corpus.Page
 import graft.text.Text
+import graft.util.GlobalRank
 
 /** docId → url map entry; `dl` = document length (sum of boosted term
   * counts — the "length" the BM25 path normalizes by). */
@@ -61,10 +62,9 @@ final case class BuiltIndex(docs: Dataset[DocMeta],
   *    the blocks range shuffle — both orders of magnitude smaller than the
   *    raw corpus.
   *  - Dense deterministic doc ids WITHOUT a single-reducer global sort:
-  *    distinct urls are range-partitioned + sorted (tiny relative to data),
-  *    per-partition counts → prefix-sum offsets broadcast → id = offset +
-  *    local index. Ids are reproducible at any parallelism because the url
-  *    order is total.
+  *    the id is the url-ordered rank from [[graft.util.GlobalRank]]'s
+  *    unpinned scan (the index keeps its own cache lifetime). Ids are
+  *    reproducible at any parallelism because the url order is total.
   *  - Head-term skew (Zipf "the" ≈ every doc) never concentrates on one
   *    task: postings are range-partitioned on (term, tf desc, doc_id), so a
   *    hot term's postings SPAN partitions — the range partitioner's sampling
@@ -111,22 +111,6 @@ object IndexBuild {
       .filter(w => Text.isPureAscii(w) && Text.isValidWord(w)).toSeq
     val base = (digits ++ words :+ "").distinct
     (base ++ base.map(graft.text.PorterStemmer.stem)).distinct.sorted.toArray
-  }
-
-  /** Per-partition row counts → exclusive prefix offsets for the dense
-    * doc-id assignment (the ONE copy shared by [[build]],
-    * [[fromUrlTermTf]] and [[IdReorder]]). Returns (offsets indexed by
-    * partition id, total row count). */
-  private[graft] def partitionOffsets(sorted: org.apache.spark.sql.DataFrame,
-                                      parts: Int): (Array[Long], Long) = {
-    val spark = sorted.sparkSession
-    import spark.implicits._
-    val counts = sorted.mapPartitions { it =>
-      Iterator.single((TaskContext.getPartitionId(), it.size.toLong))
-    }.collect().sortBy(_._1)
-    val m = new Array[Long](parts); var acc = 0L
-    for ((pid, c) <- counts) { m(pid) = acc; acc += c }
-    (m, acc)
   }
 
   /** (tid asc, tf desc) packed into ONE radix-sortable long — tid in the
@@ -182,20 +166,13 @@ object IndexBuild {
     // churn, and at 100 TB this is the natural spill point
 
     // dense deterministic doc ids over EMITTING urls (total url order →
-    // reproducible at any parallelism), via per-partition offsets
-    val urls = hashed.filter($"url".isNotNull).select($"h", $"url").distinct()
-      .repartitionByRange(parts, $"url").sortWithinPartitions($"url")
+    // reproducible at any parallelism)
+    val urlRank = GlobalRank.scan(
+      hashed.filter($"url".isNotNull).select($"h", $"url").distinct(),
+      Seq($"url"), lit(1L), "doc_id", parts)
+    val numDocs = urlRank.total
+    val docmap = urlRank.result.select($"doc_id", $"h", $"url")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (offsets, numDocs) = partitionOffsets(urls, parts)
-    val offB = spark.sparkContext.broadcast(offsets)
-    val docmap = urls.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var local = 0L
-      it.map { r =>
-        val id = offB.value(pid) + local; local += 1
-        (id, r.getLong(0), r.getString(1))
-      }
-    }.toDF("doc_id", "h", "url").persist(StorageLevel.MEMORY_AND_DISK)
     // a 64-bit hash collision between two distinct urls would silently merge
     // docs — verify up front, fail loudly (expected collisions ≈ n²/2^65)
     val hDistinct = docmap.select($"h").distinct().count()
@@ -243,7 +220,7 @@ object IndexBuild {
     val docs = docmap.select($"doc_id", $"h", $"url").join(dl, Seq("h"), "left")
       .na.fill(0L, Seq("dl"))
       .select($"doc_id", $"url", $"dl").as[DocMeta]
-    BuiltIndex(docs, dictionary, blocks, scratch = Seq(hashed, urls, docmap))
+    BuiltIndex(docs, dictionary, blocks, scratch = Seq(hashed, urlRank.sorted, docmap))
   }
 
   /** Persist the index artifacts under `dir` as Iceberg-layout tables.
@@ -271,7 +248,7 @@ object IndexBuild {
 
   /** Build a full index from id-free posting triples (url, term, tf) — the
     * shared "global merge" tail used by [[SegmentedIndex.merge]] and the
-    * streaming ingest: dense url-ordered doc ids via partition offsets, then
+    * streaming ingest: dense url-ordered doc ids (see [[build]]), then
     * the standard impact-ordered block/dictionary/docs pipeline.
     * `openVocabulary = true` drops the term-dictionary encoding (no distinct-
     * term collect anywhere) for corpora whose vocabulary is unbounded.
@@ -286,16 +263,10 @@ object IndexBuild {
                     parts: Int, blockSize: Int = DefaultBlockSize,
                     openVocabulary: Boolean = false): BuiltIndex = {
     import spark.implicits._
-    val urls = seg.select($"url").distinct()
-      .repartitionByRange(parts, $"url").sortWithinPartitions($"url")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (offsets, numDocs) = partitionOffsets(urls, parts)
-    val offB = spark.sparkContext.broadcast(offsets)
-    val docmap = urls.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var local = 0L
-      it.map { r => val id = offB.value(pid) + local; local += 1; (id, r.getString(0)) }
-    }.toDF("doc_id", "url")
+    val urlRank = GlobalRank.scan(seg.select($"url").distinct(), Seq($"url"),
+      lit(1L), "doc_id", parts)
+    val numDocs = urlRank.total
+    val docmap = urlRank.result.select($"doc_id", $"url")
 
     // docmap join: broadcast while the map fits executor memory (sub-10M
     // docs ≈ <1 GB); beyond that fall back to a shuffle join (at 10^12 docs
@@ -366,7 +337,7 @@ object IndexBuild {
     val docs = docmap.join(
         postings.groupBy($"doc_id").agg(sum($"tf").as("dl")), Seq("doc_id"), "left")
       .na.fill(0L, Seq("dl")).as[DocMeta]
-    BuiltIndex(docs, dictionary, blocks, scratch = Seq(urls, postings))
+    BuiltIndex(docs, dictionary, blocks, scratch = Seq(urlRank.sorted, postings))
   }
 
   /** Back-compat shim for callers holding primitive (tid, doc, tf) streams. */

@@ -20,14 +20,14 @@ import org.apache.spark.sql.functions._
   * order; the doc variant is embarrassingly parallel and fits the same β.
   *
   * Determinism contract: term ranks are pinned (cf desc, term asc); doc
-  * indices come from the two-phase [[graft.util.GlobalRank]] (url is the
+  * indices come from [[graft.util.GlobalRank]] (url is the
   * unique total order); OLS uses the computational formula
   * (n·Σxy − Σx·Σy)/(n·Σx² − (Σx)²) with the identical literal shape in
   * the oracle, unordered double sums absorbed by round-even 6dp.
   *
   * Scale shape: cf is one map-side-combined agg; top-R is TakeOrdered
   * (the row_number window runs over R rows, never the lexicon); doc
-  * indexing is the two-phase global rank (driver sees partition counts);
+  * indexing is the [[graft.util.GlobalRank]] rank;
   * first-occurrence is a min agg; checkpoint vocabulary counts shuffle
   * (term, first) longs against a broadcast checkpoint list. Nothing
   * data-sized transits the driver and there is no single-task sort.

@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.GlobalRank
 
 /** Token-budget corpus selection — the data-mixing primitive that turns
   * "train on the best N-billion tokens" into a deterministic job: rank
@@ -12,12 +13,10 @@ import org.apache.spark.sql.functions._
   * same set — which is what makes the result expressible as one SQL window
   * for the oracle while the engine runs it distributed.
   *
-  * Scale shape (the same two-phase distributed prefix sum as
-  * [[TextAnalysis.packSequences]] — a global Window.orderBy would funnel
-  * the corpus through ONE partition): range-partition by (quality desc,
-  * id), per-partition token sums (ONE row per partition to the driver),
-  * broadcast offsets, per-partition running sum + filter. The partition id
-  * travels IN THE DATA so a downstream coalesce cannot mis-seed offsets.
+  * Scale shape: the inclusive cumsum is [[graft.util.GlobalRank]]'s
+  * exclusive prefix sum plus the row's own tokens, then a narrow filter —
+  * never a global Window.orderBy, which would funnel the corpus through
+  * ONE partition.
   */
 object CorpusSelect {
 
@@ -27,49 +26,13 @@ object CorpusSelect {
   def selectByBudget(df: DataFrame, idCol: String, quality: Column,
                      tokens: Column, budget: Long, parts: Int = 0): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
     val narrow = df.select(col(idCol).cast("long").as("id"),
-        quality.cast("double").as("quality"),
-        tokens.cast("long").as("n_tokens"))
-      .repartitionByRange(p, col("quality").desc, col("id").asc)
-      .sortWithinPartitions(col("quality").desc, col("id").asc)
-      .withColumn("pid", spark_partition_id())
-      .as[(Long, Double, Long, Int)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // phase 1: one (pid, tokenSum) row per partition; range partition ids
-    // are ordered by key range, so pid order IS quality-desc order
-    val partSums = narrow.mapPartitions { it =>
-      val acc = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-      var curPid = Int.MinValue; var s = 0L
-      for ((_, _, n, pid) <- it) {
-        if (pid != curPid) { if (curPid != Int.MinValue) acc += ((curPid, s)); curPid = pid; s = 0L }
-        s += n
-      }
-      if (curPid != Int.MinValue) acc += ((curPid, s))
-      acc.iterator
-    }.collect().sortBy(_._1)
-    val offsets = {
-      var acc = 0L
-      partSums.map { case (pid, s) => val o = acc; acc += s; pid -> o }.toMap
-    }
-    val ob = spark.sparkContext.broadcast(offsets)
-    // phase 2: running sum re-seeded from the broadcast offsets at every
-    // pid change IN THE DATA; localCheckpoint so the corpus-sized cache
-    // can drop now and an eviction can never recompute the range
-    // partitioning with resampled boundaries under stale offsets
-    val result = narrow.mapPartitions { it =>
-      var curPid = Int.MinValue
-      var running = 0L
-      it.flatMap { case (id, q, n, pid) =>
-        if (pid != curPid) { curPid = pid; running = ob.value.getOrElse(pid, 0L) }
-        running += n
-        if (running <= budget) Some((id, q, n, running)) else None
-      }
-    }.toDF(idCol, "quality", "n_tokens", "cum_tokens")
-      .localCheckpoint()
-    narrow.unpersist()
-    result
+      quality.cast("double").as("quality"),
+      tokens.cast("long").as("n_tokens"))
+    GlobalRank.prefixSum(narrow, Seq(col("quality").desc, col("id").asc),
+        col("n_tokens"), "before", parts)
+      .select(col("id").as(idCol), col("quality"), col("n_tokens"),
+        (col("before") + col("n_tokens")).as("cum_tokens"))
+      .filter(col("cum_tokens") <= budget)
   }
 }

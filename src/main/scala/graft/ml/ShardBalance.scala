@@ -12,11 +12,9 @@ import org.apache.spark.sql.functions._
   * different shards, and the per-shard total is within one maximum item
   * of the mean for the classic adversarial inputs.
   *
-  * Scale shape: the global size rank uses the SAME two-phase
-  * range-partition prefix pattern as [[CorpusSelect]]/[[TextAnalysis.packSequences]]
-  * (per-partition COUNTS to the driver, broadcast offsets) — never a
-  * single-partition Window.orderBy. The assignment is a narrow map after
-  * one range shuffle.
+  * Scale shape: the global size rank is [[graft.util.GlobalRank]] —
+  * never a single-partition Window.orderBy — and the assignment is a
+  * narrow map over it.
   */
 object ShardBalance {
 

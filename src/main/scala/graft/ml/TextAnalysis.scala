@@ -204,71 +204,17 @@ object TextAnalysis {
     * inside pack p may spill into p+1, the standard concat-and-split
     * layout). Output per doc: `pack_id` = tokensBefore / maxTokens and
     * `pack_offset` = tokensBefore % maxTokens, where tokensBefore is the
-    * EXACT global running token count in id order.
-    *
-    * Scale shape: a global ordered prefix sum must NOT be a global window
-    * (one task). This is the textbook two-phase scan: range-repartition on
-    * id + in-partition sort, a first pass reduces each partition to ONE
-    * (partition, tokenSum) row (the only driver transit — one row per
-    * partition), exclusive prefix offsets broadcast back, and a second
-    * narrow pass assigns positions. Both passes stream the same persisted
-    * sorted partitions. */
+    * EXACT global running token count in id order: the
+    * [[graft.util.GlobalRank]] prefix sum of tokens. */
   def packSequences(df: DataFrame, idCol: String, tokenCol: Column,
                     maxTokens: Long, parts: Int = 0): DataFrame = {
     require(maxTokens > 0, s"maxTokens must be positive, got $maxTokens")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val p = if (parts > 0) parts else spark.sparkContext.defaultParallelism
-    // the range-partition id travels IN THE DATA (stamped when the cache
-    // materializes under phase 1's direct action), NOT via TaskContext:
-    // a downstream narrow transform like coalesce() fuses phase 2 into its
-    // own task, where the task's partition id is the COALESCED one and a
-    // TaskContext-keyed offset lookup silently mis-seeds every partition
     val narrow = df.select(col(idCol).cast("long").as("id"),
-        tokenCol.cast("long").as("n_tokens"))
-      .repartitionByRange(p, col("id"))
-      .sortWithinPartitions("id")
-      .withColumn("pid", spark_partition_id())
-      .as[(Long, Long, Int)]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // phase 1: one (pid, tokenSum) row per partition (rows of one pid are
-    // consecutive — cached partitions replay in stamped order). Range
-    // partition ids are ordered by key range, so pid order IS id order.
-    val partSums = narrow.mapPartitions { it =>
-      val acc = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-      var curPid = Int.MinValue; var s = 0L
-      for ((_, n, pid) <- it) {
-        if (pid != curPid) { if (curPid != Int.MinValue) acc += ((curPid, s)); curPid = pid; s = 0L }
-        s += n
-      }
-      if (curPid != Int.MinValue) acc += ((curPid, s))
-      acc.iterator
-    }.collect().sortBy(_._1)
-    val offsets = {
-      var acc = 0L
-      partSums.map { case (pid, s) => val o = acc; acc += s; pid -> o }.toMap
-    }
-    val ob = spark.sparkContext.broadcast(offsets)
-    // phase 2: running count re-seeded from the broadcast offsets at every
-    // pid change in the DATA — correct whether this stage runs one task
-    // per partition or fused/concatenated under a downstream coalesce.
-    // The result is eagerly localCheckpoint-ed so (a) the corpus-sized
-    // `narrow` cache can be dropped HERE instead of lingering until the
-    // ContextCleaner notices, and (b) a later cache eviction can never
-    // recompute the range partitioning with resampled boundaries under
-    // stale offsets — the materialized result is immutable.
-    val result = narrow.mapPartitions { it =>
-      var curPid = Int.MinValue
-      var running = 0L
-      it.map { case (id, n, pid) =>
-        if (pid != curPid) { curPid = pid; running = ob.value.getOrElse(pid, 0L) }
-        val before = running
-        running += n
-        (id, n, before / maxTokens, before % maxTokens)
-      }
-    }.toDF(idCol, "n_tokens", "pack_id", "pack_offset")
-      .localCheckpoint()
-    narrow.unpersist()
-    result
+      tokenCol.cast("long").as("n_tokens"))
+    graft.util.GlobalRank.prefixSum(narrow, Seq(col("id").asc), col("n_tokens"),
+        "before", parts)
+      .select(col("id").as(idCol), col("n_tokens"),
+        expr(s"before div ${maxTokens}L").as("pack_id"),
+        (col("before") % maxTokens).as("pack_offset"))
   }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,91 +39,50 @@ object Quantiles {
       .select(col(groupCol).as("_g"), col(valueCol).cast("double").as("_v"))
       .withColumn("_rn", row_number().over(byGroup.orderBy(col("_v").asc)))
       .withColumn("_n", count(lit(1)).over(byGroup))
-    // Explode the (tiny, literal) p-list against each ranked row and keep
-    // only the ≤2 rank-adjacent rows per (group, p) — the explode+filter
-    // fuses into one codegen stage, so the intermediate is never
-    // materialized at |rows|·|ps|.
-    val hit = ranked
+    interpolate(ranked, ps, col("_g")).withColumnRenamed("_g", groupCol)
+  }
+
+  /** (keys…, p, q) from rows carrying the value `_v`, its 1-based rank
+    * `_rn` and the count `_n` within `keys`. Explodes the (tiny, literal)
+    * p-list against each ranked row and keeps only the ≤2 rank-adjacent
+    * rows per (keys, p) — the explode+filter fuses into one codegen stage,
+    * so the intermediate is never materialized at |rows|·|ps|. */
+  private def interpolate(ranked: DataFrame, ps: Seq[Double], keys: Column*): DataFrame =
+    ranked
       .withColumn("p", explode(array(ps.map(lit): _*)))
       .withColumn("_pos", col("p") * (col("_n") - 1) + 1)
       .filter(col("_rn") === floor(col("_pos")) ||
         col("_rn") === ceil(col("_pos")))
-    hit.groupBy(col("_g"), col("p"))
+      .groupBy(keys :+ col("p"): _*)
       .agg(
         max(when(col("_rn") === floor(col("_pos")), col("_v"))).as("_lo"),
         max(when(col("_rn") === ceil(col("_pos")), col("_v"))).as("_hi"),
         max(col("_pos")).as("_pos"))
-      .select(col("_g").as(groupCol), col("p"),
-        (col("_lo") + (col("_hi") - col("_lo")) *
-          (col("_pos") - floor(col("_pos")))).as("q"))
-  }
+      .select(keys :+ col("p") :+ (col("_lo") + (col("_hi") - col("_lo")) *
+        (col("_pos") - floor(col("_pos")))).as("q"): _*)
 
   /** GLOBAL exact quantiles — the single-group case [[exact]] must not be
     * used for: `exact` sorts each group inside one window partition, so one
-    * group = one task sorting the whole column. This variant range-
-    * partitions the sort (each task sorts 1/P of the values), then derives
-    * GLOBAL ranks with the same two-phase prefix-sum `packSequences` uses —
-    * per-partition counts (P rows) to the driver, offsets broadcast back —
-    * and rank-targets the interpolation rows exactly as `exact` does.
-    * Returns one row per p: (p, q). */
+    * group = one task sorting the whole column. This variant takes global
+    * ranks from [[graft.util.GlobalRank]] (ties among equal values rank in
+    * any order: they interpolate to the same q) and rank-targets the
+    * interpolation rows exactly as `exact` does. Returns one row per p:
+    * (p, q). */
   def exactGlobal(df: DataFrame, valueCol: String,
                   ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"quantile fractions must be in [0,1]: $ps")
     val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // no sortWithinPartitions here: phase 1 only counts, and phase 2's
-    // window re-shuffles by _pid and sorts by _v itself — a pre-sort would
-    // be thrown away
-    val sorted = df
-      .filter(col(valueCol).isNotNull) // percentile_cont ignores NULLs
-      .select(col(valueCol).cast("double").as("_v"))
-      .repartitionByRange(parts, col("_v"))
-      .select(col("_v"), spark_partition_id().as("_pid"))
-    sorted.persist()
-    try {
-      // phase 1: one count row per partition -> rank offsets (driver
-      // transit = P rows, independent of data size)
-      val counts = sorted.groupBy("_pid").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-      val n = counts.map(_._2).sum
-      require(n > 0, "exactGlobal over an empty input")
-      val offsets = counts.map(_._1).zip(
-        counts.map(_._2).scanLeft(0L)(_ + _)).toMap
-      val offDf = broadcast(spark.createDataFrame(
-        offsets.toSeq.map(o => org.apache.spark.sql.Row(o._1, o._2)).asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("_pid",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("_off",
-            org.apache.spark.sql.types.LongType)))))
-      // phase 2: local rank + broadcast offset = global rank; then the
-      // same rank-targeted interpolation as `exact`
-      val ranked = sorted
-        .withColumn("_lrn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("_pid").orderBy(col("_v").asc)))
-        .join(offDf, Seq("_pid"))
-        .select(col("_v"), (col("_off") + col("_lrn")).as("_rn"))
-      val hit = ranked
-        .withColumn("p", explode(array(ps.map(lit): _*)))
-        .withColumn("_pos", col("p") * (lit(n) - 1) + 1)
-        .filter(col("_rn") === floor(col("_pos")) ||
-          col("_rn") === ceil(col("_pos")))
-      val res = hit.groupBy(col("p"))
-        .agg(
-          max(when(col("_rn") === floor(col("_pos")), col("_v"))).as("_lo"),
-          max(when(col("_rn") === ceil(col("_pos")), col("_v"))).as("_hi"),
-          max(col("_pos")).as("_pos"))
-        .select(col("p"),
-          (col("_lo") + (col("_hi") - col("_lo")) *
-            (col("_pos") - floor(col("_pos")))).as("q"))
-      // materialize the |ps|-row result WHILE the sorted scan is pinned:
-      // the broadcast offsets were computed from THIS materialization of
-      // the range partitioning — a lazy result re-deriving `sorted` after
-      // unpersist could re-sample different range boundaries and pair
-      // stale offsets with fresh partitions
-      spark.createDataFrame(res.collect().toSeq.asJava, res.schema)
-    } finally sorted.unpersist()
+    val ranked = graft.util.GlobalRank.zipWithRank(
+      df.filter(col(valueCol).isNotNull) // percentile_cont ignores NULLs
+        .select(col(valueCol).cast("double").as("_v")),
+      Seq(col("_v").asc), "_rk",
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val n = ranked.count()
+    require(n > 0, "exactGlobal over an empty input")
+    val res = interpolate(
+      ranked.withColumn("_rn", col("_rk") + 1).withColumn("_n", lit(n)), ps)
+    // a local |ps|-row result: nothing downstream re-reads the pinned ranks
+    spark.createDataFrame(res.collect().toSeq.asJava, res.schema)
   }
 }

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * (row_number over mean asc, replica asc; lo = ⌈0.025·B⌉, hi =
   * ⌈0.975·B⌉) — no interpolation convention to disagree on.
   *
-  * Scale shape: query indexing is the two-phase [[graft.util.GlobalRank]];
+  * Scale shape: query indexing is [[graft.util.GlobalRank]];
   * the resample grid is B×n (replica, pick) id rows joined against the
   * delta table on the index — narrow longs/doubles, map-side agg per
   * replica; the driver sees B replicate means at most (and only the one

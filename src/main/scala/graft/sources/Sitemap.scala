@@ -81,7 +81,7 @@ object Sitemap {
     * allows date or datetime forms). */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.xml")
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.xml").load(dir)
       .select(col("content"))
       .as[Array[Byte]]
       .flatMap(b => parseUrlset(new String(b, UTF_8)))

@@ -123,7 +123,7 @@ Content-Length: ${html.length}\r
     * task per segment via the binaryFile source. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.warc")
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.warc").load(dir)
       .select(col("content"))
       .as[Array[Byte]]
       .flatMap(parseSegment)
@@ -139,7 +139,7 @@ Content-Length: ${html.length}\r
     * single ranged read. */
   def cdxIndex(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(s"$dir/*.warc")
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.warc").load(dir)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>

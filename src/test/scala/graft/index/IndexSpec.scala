@@ -174,6 +174,32 @@ class IndexSpec extends AnyFunSuite {
       assert(sOpen.referenceTopK(q) == sEnc.referenceTopK(q), s"open-vocab '$q'")
   }
 
+  test("fromUrlTermTf doc ids stay dense and identical under a downstream coalesce") {
+    import spark.implicits._
+    val n = 400
+    val triples = (0 until n).flatMap { i =>
+      val url = f"http://h${i % 13}.example/p/$i%04d"
+      Seq((url, "alpha", 1 + i % 3), (url, s"t${i % 17}", 2))
+    }.toDF("url", "term", "tf")
+    for (p <- Seq(3, 5)) {
+      val b = IndexBuild.fromUrlTermTf(spark, triples, parts = p, blockSize = 64)
+      def idsOf(docs: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+        val rows = docs.select($"url", $"doc_id").as[(String, Long)].collect()
+        assert(rows.length == n, s"parts=$p: ${rows.length} rows")
+        rows.toMap
+      }
+      val plain = idsOf(b.docs.toDF())
+      // a coalesce fuses the docmap pass into one task
+      val fused = idsOf(b.docs.toDF().coalesce(1))
+      assert(plain.values.toSeq.sorted == (0L until n.toLong),
+        s"parts=$p: ids are not 0 until $n")
+      val distinct = fused.values.toSet.size
+      assert(distinct == n, s"parts=$p: $distinct distinct ids under coalesce(1)")
+      assert(fused == plain, s"parts=$p: coalesce changed the url -> doc_id map")
+      b.release()
+    }
+  }
+
   test("build is deterministic across parallelism levels") {
     val built8 = IndexBuild.build(spark, Corpus.generate(spark, numDocs),
       Corpus.lexicon, parts = 11, blockSize = 64)

@@ -36,6 +36,9 @@ class SitemapSpec extends AnyFunSuite {
     val n = Sitemap.write(entries.toDF("url", "lastmod")
       .as[(String, String)].repartition(5), dir)
     assert(n == 5)
+    // a non-sitemap file in the directory is not read
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "robots.txt"),
+      "<urlset><url><loc>http://stray.example/</loc></url></urlset>".getBytes("UTF-8"))
     val back = Sitemap.read(spark, dir).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(back == entries.toSet)

@@ -43,6 +43,9 @@ class WarcSpec extends AnyFunSuite {
     val pages = Corpus.generate(spark, 200).repartition(5)
     val segments = Warc.writeSegments(pages, dir)
     assert(segments >= 2, s"expected multiple segments, got $segments")
+    // a non-segment file in the directory is not read
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "notes.txt"),
+      "WARC/1.0 not a segment".getBytes(UTF_8))
     val back = Warc.read(spark, dir)
       .select($"url", $"warc_date", org.apache.spark.sql.functions.md5($"html").as("h"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
