@@ -315,9 +315,13 @@ object IndexBuild {
         // loud-cliff discipline as the Fnv / 2^31-doc guards).
         val termArr = postings.select($"term").distinct().orderBy($"term")
           .as[String].take(VocabularyCap + 1)
-        require(termArr.length <= VocabularyCap,
-          s"closed-vocabulary build saw more than $VocabularyCap distinct terms — " +
-          "the term dictionary no longer fits the driver; rebuild with openVocabulary = true")
+        if (termArr.length > VocabularyCap) {
+          // no BuiltIndex reaches the caller to release() what this build pinned
+          postings.unpersist(); urlRank.sorted.unpersist()
+          throw new IllegalArgumentException(
+            s"closed-vocabulary build saw more than $VocabularyCap distinct terms — " +
+            "the term dictionary no longer fits the driver; rebuild with openVocabulary = true")
+        }
         val termOf = spark.sparkContext.broadcast(termArr)
         val termDim = spark.createDataFrame(
           termArr.toIndexedSeq.zipWithIndex).toDF("term", "tid")

@@ -86,6 +86,19 @@ object Varbyte {
 
   def encodeInts(values: Array[Int]): Array[Byte] = encode(values.map(_.toLong))
 
-  def decodeInts(bytes: Array[Byte], n: Int): Array[Int] =
-    decode(bytes, n).map(_.toInt)
+  /** [[decode]] straight into an `Array[Int]` (tf and perm blocks): no
+    * intermediate `Array[Long]`. Int shifts keep exactly the low 32 bits of
+    * the Long decode, so the result equals `decode(bytes, n).map(_.toInt)`. */
+  def decodeInts(bytes: Array[Byte], n: Int): Array[Int] = {
+    val out = new Array[Int](n)
+    var i = 0; var k = 0
+    while (k < n) {
+      var v = 0
+      var b = bytes(i)
+      while ((b & 0x80) == 0) { v = (v << 7) | b; i += 1; b = bytes(i) }
+      out(k) = (v << 7) | (b & 0x7F)
+      i += 1; k += 1
+    }
+    out
+  }
 }

@@ -109,20 +109,6 @@ final class Searcher(val n: Int,
     }
 
   // --------------------------------------------------------------------- BM25
-  /** Standard BM25 top-k with block-max early termination over the
-    * impact-ordered blocks. Safe stop rule: processing blocks in impact
-    * order per term, any doc's best reachable score is its accumulated
-    * score + the sum of remaining per-term upper bounds (block-max tf at the
-    * corpus-min dl); terminate when that cannot displace the current k-th
-    * best. Decodes in stored doc order (no serving-order walk needed).
-    *
-    * Scores are EXACT (identical to exhaustive BM25), not lower bounds:
-    * after the stop rule fires, the guaranteed-final top-k candidate set is
-    * finished against every remaining block (accumulating only survivor
-    * ids), so both the returned set AND the returned scores/order equal the
-    * exhaustive computation. The stop rule's strict inequality guarantees no
-    * non-survivor can reach the k-th final score, so the early exit only
-    * skips accumulator work for docs that cannot appear in the result. */
   /** Decoded-block LRU shared ACROSS queries: the index is immutable for a
     * Searcher's lifetime, so a block's doc-order (ids, tfs) arrays are
     * reusable serving state — the same class of cache as the Direct tier's
@@ -139,6 +125,36 @@ final class Searcher(val n: Int,
         size() > 1024
     })
 
+  /** One [[Bm25Accumulator]] per thread, made on the thread's first
+    * [[bm25TopK]] call (reference-only serving never allocates one) and
+    * reset after every query, so concurrent queries over one Searcher never
+    * share scores. Doc ids index it directly, the same dense-id bound as the
+    * tiers' dl arrays. */
+  private val accumulators = ThreadLocal.withInitial[Bm25Accumulator] { () =>
+    require(numDocs < Int.MaxValue,
+      s"BM25 accumulates into a dense per-doc array and is bounded at ${Int.MaxValue} docs " +
+      s"(index has $numDocs)")
+    new Bm25Accumulator(numDocs.toInt)
+  }
+
+  /** Standard BM25 top-k with block-max early termination over the
+    * impact-ordered blocks. Safe stop rule: processing blocks in impact
+    * order per term, any doc's best reachable score is its accumulated
+    * score + the sum of remaining per-term upper bounds (block-max tf at the
+    * corpus-min dl); terminate when that cannot displace the current k-th
+    * best. Decodes in stored doc order (no serving-order walk needed).
+    *
+    * Scores are EXACT (identical to exhaustive BM25), not lower bounds:
+    * after the stop rule fires, the guaranteed-final top-k candidate set is
+    * finished against every remaining block (accumulating only survivor
+    * ids), so both the returned set AND the returned scores/order equal the
+    * exhaustive computation. The stop rule's strict inequality guarantees no
+    * non-survivor can reach the k-th final score, so the early exit only
+    * skips accumulator work for docs that cannot appear in the result.
+    *
+    * Scores accumulate in the calling thread's dense [[Bm25Accumulator]]
+    * (no per-query allocation, no hashing in the hot loop); the stop
+    * rule's k-th-score check scans only the ids this query touched. */
   def bm25TopK(query: String, k: Int = 10): List[(String, Double)] = {
     val terms = Searcher.expansionTerms(query).sorted.filter(dict.contains)
     if (terms.isEmpty) return Nil
@@ -166,211 +182,167 @@ final class Searcher(val n: Int,
       }
     }
 
-    // primitive open-addressing accumulator (no boxing in the hot loop);
-    // capacity hint from the dictionary's df sum — Long math (a web-scale df
-    // sum overflows Int), clamped: the map resizes itself past the hint
-    val dfSum = terms.iterator.map(t => dict(t).df).sum
-    val acc = new LongDoubleMap(dfSum)
-
-    var maxAcc = 0.0
-    var blocksSinceCheck = 0
-    var done = false
-    while (!done) {
-      // process the highest-bound pending block (impact order across terms)
-      var best = -1; var bestBound = 0.0
-      var i = 0
-      while (i < states.length) {
-        val bd = states(i).bound
-        if (bd > bestBound) { bestBound = bd; best = i }
-        i += 1
-      }
-      if (best < 0) done = true
-      else {
-        val st = states(best)
-        val idx = st.next
-        st.next += 1
-        val (ids, tfs) = decodedDocOrder(st, idx)
-        var j = 0
-        while (j < ids.length) {
-          val v = acc.add(ids(j), contribution(st.idf, tfs(j), dlOf(ids(j))))
-          if (v > maxAcc) maxAcc = v
-          j += 1
+    val acc = accumulators.get()
+    try {
+      var maxAcc = 0.0
+      var blocksSinceCheck = 0
+      var done = false
+      while (!done) {
+        // process the highest-bound pending block (impact order across terms)
+        var best = -1; var bestBound = 0.0
+        var i = 0
+        while (i < states.length) {
+          val bd = states(i).bound
+          if (bd > bestBound) { bestBound = bd; best = i }
+          i += 1
         }
-        blocksSinceCheck += 1
-        // adaptive cadence: the kth scan is O(acc.size), so on head-term
-        // queries (hundreds of thousands of accumulated docs) checking
-        // every 8 blocks spends more time scanning than decoding — scale
-        // the interval so one scan costs at most ~a few blocks' decode.
-        // Checks are only STOP OPPORTUNITIES: a later stop does extra
-        // (exact) work, never changes results.
-        val checkEvery = 8 + (acc.size >> 13)
-        if (acc.size >= k && blocksSinceCheck >= checkEvery) {
-          blocksSinceCheck = 0
-          val remaining = states.foldLeft(0.0)(_ + _.bound)
-          if (remaining == 0.0) done = true
-          // cheap precheck: kth ≤ maxAcc, so remaining ≥ maxAcc can never prune
-          else if (remaining < maxAcc) {
-            val (kth, belowKth) = acc.kthAndNext(k)
-            if (belowKth + remaining < kth) done = true
+        if (best < 0) done = true
+        else {
+          val st = states(best)
+          val idx = st.next
+          st.next += 1
+          val (ids, tfs) = decodedDocOrder(st, idx)
+          var j = 0
+          while (j < ids.length) {
+            val v = acc.add(ids(j), contribution(st.idf, tfs(j), dlOf(ids(j))))
+            if (v > maxAcc) maxAcc = v
+            j += 1
+          }
+          blocksSinceCheck += 1
+          // adaptive cadence: the kth scan is O(acc.size), so on head-term
+          // queries (hundreds of thousands of accumulated docs) checking
+          // every 8 blocks spends more time scanning than decoding — scale
+          // the interval so one scan costs at most ~a few blocks' decode.
+          // Checks are only STOP OPPORTUNITIES: a later stop does extra
+          // (exact) work, never changes results.
+          val checkEvery = 8 + (acc.size >> 13)
+          if (acc.size >= k && blocksSinceCheck >= checkEvery) {
+            blocksSinceCheck = 0
+            val remaining = states.foldLeft(0.0)(_ + _.bound)
+            if (remaining == 0.0) done = true
+            // cheap precheck: kth ≤ maxAcc, so remaining ≥ maxAcc can never prune
+            else if (remaining < maxAcc) {
+              val (kth, belowKth) = acc.kthAndNext(k)
+              if (belowKth + remaining < kth) done = true
+            }
           }
         }
       }
-    }
-    // ---- finish pass: exact scores for the guaranteed top-k set ----
-    // The stop rule proved every doc outside the current top-k stays below
-    // the k-th FINAL score, so the result SET is fixed — but members of it
-    // may still have pending postings in undecoded blocks. Decode every
-    // remaining block, accumulating only survivor ids (sorted-array binary
-    // search, no boxing): scores become exactly the exhaustive BM25 values.
-    //
-    // SINGLE-TERM skip: a doc holds at most one posting per term, so with
-    // one query term every accumulated score is already exact and no
-    // not-yet-seen doc can be a survivor (score 0 < k-th) — the remaining
-    // blocks (all of a head term's tail) need no decode at all. This was
-    // the p95 driver for one-term head queries ("the"), whose finish pass
-    // re-touched every tail block for provably-complete scores.
-    if (states.length > 1 && states.exists(st => st.next < st.blocks.length)) {
-      val survCut = if (acc.size <= k) Double.NegativeInfinity else acc.kthAndNext(k)._1
-      val survivors = acc.collectAtLeast(survCut).map(_._1).toArray
-      java.util.Arrays.sort(survivors)
-      val survMin = survivors(0)
-      val survMax = survivors(survivors.length - 1)
-      var si = 0
-      while (si < states.length) {
-        val st = states(si)
-        while (st.next < st.blocks.length) {
-          val idx = st.next
-          st.next += 1
-          val cached = decodedCache.get((st.term, idx))
-          if (cached != null) {
-            val (ids, tfs) = cached
-            var j = 0
-            while (j < ids.length) {
-              val id = ids(j)
-              if (id >= survMin && id <= survMax &&
-                  java.util.Arrays.binarySearch(survivors, id) >= 0)
-                acc.add(id, contribution(st.idf, tfs(j), dlOf(id)))
-              j += 1
-            }
-          } else {
-            // ids-first decode: doc ids are ascending, so a block whose id
-            // range misses the survivor span is skipped without touching
-            // its tf bytes; tf decode happens only on a survivor hit
-            val blk = st.blocks(idx)
-            val ids = Varbyte.decodeDeltas(blk.docs_vb, blk.n)
-            if (ids.length > 0 && ids(ids.length - 1) >= survMin && ids(0) <= survMax) {
-              var hit = false
+      // ---- finish pass: exact scores for the guaranteed top-k set ----
+      // The stop rule proved every doc outside the current top-k stays below
+      // the k-th FINAL score, so the result SET is fixed — but members of it
+      // may still have pending postings in undecoded blocks. Decode every
+      // remaining block, accumulating only survivor ids (sorted-array binary
+      // search, no boxing): scores become exactly the exhaustive BM25 values.
+      //
+      // SINGLE-TERM skip: a doc holds at most one posting per term, so with
+      // one query term every accumulated score is already exact and no
+      // not-yet-seen doc can be a survivor (score 0 < k-th) — the remaining
+      // blocks (all of a head term's tail) need no decode at all. This was
+      // the p95 cause for one-term head queries ("the"), whose finish pass
+      // re-touched every tail block for provably-complete scores.
+      if (states.length > 1 && states.exists(st => st.next < st.blocks.length)) {
+        val survCut = if (acc.size <= k) Double.NegativeInfinity else acc.kthAndNext(k)._1
+        val survivors = acc.collectAtLeast(survCut).map(_._1).toArray
+        java.util.Arrays.sort(survivors)
+        val survMin = survivors(0)
+        val survMax = survivors(survivors.length - 1)
+        var si = 0
+        while (si < states.length) {
+          val st = states(si)
+          while (st.next < st.blocks.length) {
+            val idx = st.next
+            st.next += 1
+            val cached = decodedCache.get((st.term, idx))
+            if (cached != null) {
+              val (ids, tfs) = cached
               var j = 0
-              while (j < ids.length && !hit) {
+              while (j < ids.length) {
                 val id = ids(j)
-                hit = id >= survMin && id <= survMax &&
-                  java.util.Arrays.binarySearch(survivors, id) >= 0
+                if (id >= survMin && id <= survMax &&
+                    java.util.Arrays.binarySearch(survivors, id) >= 0)
+                  acc.add(id, contribution(st.idf, tfs(j), dlOf(id)))
                 j += 1
               }
-              if (hit) {
-                val tfs = Varbyte.decodeInts(blk.tfs_vb, blk.n)
-                decodedCache.put((st.term, idx), (ids, tfs))
-                var p = 0
-                while (p < ids.length) {
-                  val id = ids(p)
-                  if (id >= survMin && id <= survMax &&
-                      java.util.Arrays.binarySearch(survivors, id) >= 0)
-                    acc.add(id, contribution(st.idf, tfs(p), dlOf(id)))
-                  p += 1
+            } else {
+              // ids-first decode: doc ids are ascending, so a block whose id
+              // range misses the survivor span is skipped without touching
+              // its tf bytes; tf decode happens only on a survivor hit
+              val blk = st.blocks(idx)
+              val ids = Varbyte.decodeDeltas(blk.docs_vb, blk.n)
+              if (ids.length > 0 && ids(ids.length - 1) >= survMin && ids(0) <= survMax) {
+                var hit = false
+                var j = 0
+                while (j < ids.length && !hit) {
+                  val id = ids(j)
+                  hit = id >= survMin && id <= survMax &&
+                    java.util.Arrays.binarySearch(survivors, id) >= 0
+                  j += 1
+                }
+                if (hit) {
+                  val tfs = Varbyte.decodeInts(blk.tfs_vb, blk.n)
+                  decodedCache.put((st.term, idx), (ids, tfs))
+                  var p = 0
+                  while (p < ids.length) {
+                    val id = ids(p)
+                    if (id >= survMin && id <= survMax &&
+                        java.util.Arrays.binarySearch(survivors, id) >= 0)
+                      acc.add(id, contribution(st.idf, tfs(p), dlOf(id)))
+                    p += 1
+                  }
                 }
               }
             }
           }
+          si += 1
         }
-        si += 1
       }
-    }
 
-    // select candidates ≥ k-th score first (primitive pass), THEN sort the
-    // small survivor set with the url tie-break — avoids sorting the full
-    // accumulator table
-    val cutoff = if (acc.size <= k) Double.NegativeInfinity else acc.kthAndNext(k)._1
-    acc.collectAtLeast(cutoff)
-      .sortBy { case (id, s) => (-s, urlOf(id)) }
-      .take(k)
-      .map { case (id, s) => (urlOf(id), s) }
-      .toList
+      // select candidates ≥ k-th score first (primitive pass), THEN sort the
+      // small survivor set with the url tie-break — avoids sorting the full
+      // accumulator table
+      val cutoff = if (acc.size <= k) Double.NegativeInfinity else acc.kthAndNext(k)._1
+      acc.collectAtLeast(cutoff)
+        .sortBy { case (id, s) => (-s, urlOf(id)) }
+        .take(k)
+        .map { case (id, s) => (urlOf(id), s) }
+        .toList
+    } finally acc.reset()
   }
 }
 
-/** Minimal open-addressing long→double accumulator (linear probing,
-  * power-of-two capacity, no boxing) for the BM25 hot loop.
-  *
-  * `expected` is a HINT, taken as a Long because at web scale a df sum
-  * exceeds Int.MaxValue — the old `dfSum.toInt` sizing overflowed to a tiny
-  * capacity there, and a full fixed-size table turned the linear probe into
-  * an infinite loop. Capacity is now clamped to [64, 2^30] and the table
-  * RESIZES (doubling rehash) at 70% load, so any expected value is safe; a
-  * genuinely >2^30-entry accumulation throws instead of spinning. */
-private[query] final class LongDoubleMap(expected: Long) {
-  private val MaxCapacity = 1 << 30
-  // pre-size only up to 2^20 slots — beyond that let the resize path grow on
-  // demand (a huge df-sum hint must not eagerly allocate gigabytes)
-  private var capacity: Int = {
-    val target = math.min(math.max(expected, 32L) * 2L, (1 << 20).toLong)
-    var c = 64
-    while (c < target) c <<= 1
-    c
-  }
-  private var mask = capacity - 1
-  // Fibonacci hashing over the TOP log2(capacity) bits: the shift must track
-  // capacity — a fixed shift (the old `>>> 40`) caps home slots at 2^24, so
-  // past that capacity every key homed into the first 16M slots and the
-  // linear probe degenerated into one cluster at exactly the web scale this
-  // class exists for
-  private var shift = 64 - java.lang.Long.numberOfTrailingZeros(capacity.toLong)
-  private var keys = new Array[Long](capacity)
-  private var vals = new Array[Double](capacity)
-  private var used = new Array[Boolean](capacity)
-  private var slots = new Array[Int](capacity) // dense list of used slots
+/** Dense BM25 score accumulator over the doc-id space `0 until numDocs`
+  * (doc ids are the build's dense url-ordered ids), reused by one thread
+  * across queries: a score array, a seen mark per doc and the list of ids
+  * touched by the current query, in first-touch order. [[reset]] clears
+  * only the touched ids, so a query costs O(touched), not O(numDocs). */
+private[query] final class Bm25Accumulator(numDocs: Int) {
+  private val scores = new Array[Double](numDocs)
+  private val seen = new Array[Boolean](numDocs)
+  private var touched = new Array[Int](math.min(numDocs, 4096))
   var size = 0
-
-  private def grow(): Unit = {
-    if (capacity == MaxCapacity)
-      throw new IllegalStateException(
-        s"LongDoubleMap full at max capacity $MaxCapacity — accumulator set too large for one node")
-    val oldKeys = keys; val oldVals = vals; val oldSlots = slots; val oldSize = size
-    capacity <<= 1; mask = capacity - 1
-    shift = 64 - java.lang.Long.numberOfTrailingZeros(capacity.toLong)
-    keys = new Array[Long](capacity)
-    vals = new Array[Double](capacity)
-    used = new Array[Boolean](capacity)
-    slots = new Array[Int](capacity)
-    size = 0
-    var s = 0
-    while (s < oldSize) {
-      val oi = oldSlots(s)
-      insertFresh(oldKeys(oi), oldVals(oi))
-      s += 1
-    }
-  }
-
-  private def insertFresh(id: Long, v: Double): Unit = {
-    var i = ((id * 0x9E3779B97F4A7C15L) >>> shift).toInt & mask
-    while (used(i)) i = (i + 1) & mask
-    used(i) = true; keys(i) = id; vals(i) = v; slots(size) = i; size += 1
-  }
 
   /** Adds c to the accumulator for id; returns the new value. */
   def add(id: Long, c: Double): Double = {
-    var i = ((id * 0x9E3779B97F4A7C15L) >>> shift).toInt & mask
-    while (used(i) && keys(i) != id) i = (i + 1) & mask
-    if (!used(i)) {
-      if ((size + 1) * 10L > capacity * 7L) { // 70% load → double + rehash
-        grow()
-        return add(id, c)
-      }
-      used(i) = true; keys(i) = id; vals(i) = c; slots(size) = i; size += 1; c
-    } else { vals(i) += c; vals(i) }
+    val i = id.toInt
+    if (seen(i)) { scores(i) += c; scores(i) }
+    else {
+      if (size == touched.length)
+        touched = java.util.Arrays.copyOf(touched, math.min(numDocs, size * 2))
+      seen(i) = true; scores(i) = c; touched(size) = i; size += 1; c
+    }
+  }
+
+  /** Forget every touched id: the next query starts from all-unseen. */
+  def reset(): Unit = {
+    var s = 0
+    while (s < size) { seen(touched(s)) = false; s += 1 }
+    size = 0
   }
 
   /** (k-th largest value, (k+1)-th largest or 0) via a primitive size-(k+1)
-    * min-heap — O(A) scan, heap ops only for values above the current min. */
+    * min-heap — O(touched) scan, heap ops only for values above the current
+    * min. */
   def kthAndNext(k: Int): (Double, Double) = {
     val cap = k + 1
     val heap = new Array[Double](cap)
@@ -396,8 +368,8 @@ private[query] final class LongDoubleMap(expected: Long) {
       }
     }
     var s = 0
-    while (s < size) { // dense slot list: O(size), not O(capacity)
-      val v = vals(slots(s))
+    while (s < size) {
+      val v = scores(touched(s))
       if (hSize < cap) { heap(hSize) = v; siftUp(hSize); hSize += 1 }
       else if (v > heap(0)) { heap(0) = v; siftDown() }
       s += 1
@@ -410,14 +382,13 @@ private[query] final class LongDoubleMap(expected: Long) {
     }
   }
 
-  def toBuffer: mutable.ArrayBuffer[(Long, Double)] = collectAtLeast(Double.NegativeInfinity)
-
+  /** (id, score) of every touched id scoring ≥ cutoff, in first-touch order. */
   def collectAtLeast(cutoff: Double): mutable.ArrayBuffer[(Long, Double)] = {
     val out = new mutable.ArrayBuffer[(Long, Double)]()
     var s = 0
     while (s < size) {
-      val i = slots(s)
-      if (vals(i) >= cutoff) out += ((keys(i), vals(i)))
+      val i = touched(s)
+      if (scores(i) >= cutoff) out += ((i.toLong, scores(i)))
       s += 1
     }
     out

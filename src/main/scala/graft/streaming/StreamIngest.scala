@@ -21,6 +21,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamIngest {
 
+  /** Directory under `segmentsDir` of [[indexIngest]]'s per-url batch
+    * markers (`url_markers/batch=<id>/`), beside the `batch=<id>/` segments. */
+  private[streaming] val UrlMarkers = "url_markers"
+
   /** Streaming hourly event aggregation with watermarking (late data beyond
     * the watermark is dropped). Returns the started query (memory sink). */
   def eventsHourly(spark: SparkSession, sourceDir: String, queryName: String,
@@ -93,10 +97,11 @@ object StreamIngest {
         // per-url batch MARKER, independent of how many postings tokenize
         // emitted: a re-crawl whose tokens all fail the lexicon filter
         // produces ZERO posting rows, and deriving "latest batch per url"
-        // from postings would keep serving the stale crawl. The `_urls`
-        // prefix hides the sidecar from the main segments read.
+        // from postings would keep serving the stale crawl. mergeStreamed
+        // reads only the `batch=` dirs as segments, so this sidecar stays
+        // out of the postings read.
         pages.select(col("url")) // `batch` comes from the partition dir name
-          .write.mode("overwrite").parquet(s"$segmentsDir/_urls/batch=$batchId")
+          .write.mode("overwrite").parquet(s"$segmentsDir/$UrlMarkers/batch=$batchId")
         pages.unpersist()
         ()
       }
@@ -119,12 +124,20 @@ object StreamIngest {
 
   def mergeStreamed(spark: SparkSession, segmentsDir: String, parts: Int = 8,
                     blockSize: Int = graft.index.IndexBuild.DefaultBlockSize): graft.index.BuiltIndex = {
-    val raw = spark.read.parquet(segmentsDir)
+    // the segment dirs only, listed explicitly: the marker sidecar shares
+    // `segmentsDir`, and a `_`-prefixed name Spark would hide itself makes
+    // the markers read below log "All paths were ignored"
+    val segPath = new org.apache.hadoop.fs.Path(segmentsDir)
+    val batchDirs = segPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(segPath)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
+      .map(_.getPath.toString)
+    val raw = spark.read.option("basePath", segmentsDir).parquet(batchDirs.toIndexedSeq: _*)
       .select(col("url"), col("term"), col("tf"), col("batch").cast("long").as("batch"))
     // latest batch per url from the PAGE markers, not the posting rows: a
     // re-crawl whose content tokenizes to zero postings must still supersede
     // the old crawl (its marker exists; its posting set is empty)
-    val latest = spark.read.parquet(s"$segmentsDir/_urls")
+    val latest = spark.read.parquet(s"$segmentsDir/$UrlMarkers")
       .groupBy(col("url")).agg(max(col("batch").cast("long")).as("batch"))
     val seg = raw.join(latest, Seq("url", "batch")).select("url", "term", "tf")
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)

@@ -45,11 +45,16 @@ class IndexSpec extends AnyFunSuite {
     ).toDF("url", "term", "tf")
     sys.props("graft.vocab.cap") = "4"
     try {
+      val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
       val e = intercept[IllegalArgumentException] {
         IndexBuild.fromUrlTermTf(spark, triples, parts = 2)
       }
       assert(e.getMessage.contains("openVocabulary"),
         s"guard must point at the open-vocabulary path, got: ${e.getMessage}")
+      // the failed build returns no BuiltIndex to release(), so it must not
+      // leave its postings or url-rank scan input cached
+      assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore,
+        s"failed build left RDDs persisted: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
       // the pointed-at remediation works on the same input under the cap
       val open = IndexBuild.fromUrlTermTf(spark, triples, parts = 2,
         openVocabulary = true)
@@ -73,7 +78,11 @@ class IndexSpec extends AnyFunSuite {
       if (sorted.nonEmpty)
         assert(Varbyte.decodeDeltas(Varbyte.encodeDeltas(sorted), sorted.length)
           .sameElements(sorted))
+      val ints = Array.fill(n)(rng.nextInt(Int.MaxValue) >>> rng.nextInt(31))
+      assert(Varbyte.decodeInts(Varbyte.encodeInts(ints), ints.length).sameElements(ints))
     }
+    val intEdges = Array(0, 1, 127, 128, 16383, 16384, (1 << 21) - 1, 1 << 28, Int.MaxValue)
+    assert(Varbyte.decodeInts(Varbyte.encodeInts(intEdges), intEdges.length).sameElements(intEdges))
   }
 
   test("engine postings are identical to oracle postings (order, tf, tfn)") {

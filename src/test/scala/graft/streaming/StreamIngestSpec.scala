@@ -51,9 +51,10 @@ class StreamIngestSpec extends AnyFunSuite {
     // per-url page markers (what indexIngest's sink writes): url C was
     // RE-CRAWLED in batch 1 but its new content emitted ZERO postings —
     // only the marker proves the re-crawl, and C must drop from the index
-    Seq("http://a/", "http://c/").toDF("url").write.parquet(s"$segDir/_urls/batch=0")
+    Seq("http://a/", "http://c/").toDF("url")
+      .write.parquet(s"$segDir/${StreamIngest.UrlMarkers}/batch=0")
     Seq("http://a/", "http://b/", "http://c/").toDF("url")
-      .write.parquet(s"$segDir/_urls/batch=1")
+      .write.parquet(s"$segDir/${StreamIngest.UrlMarkers}/batch=1")
 
     val built = StreamIngest.mergeStreamed(spark, segDir, parts = 2, blockSize = 64)
     val dict = built.dictionary.collect().map(e => e.term -> e.df).toMap
