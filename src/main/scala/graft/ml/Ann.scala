@@ -3,38 +3,19 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over an embedding column.
-  *
-  * Baseline: brute-force cosine top-k — one narrow map over the vectors plus
-  * a k-row global top-k (Spark's sort-limit is a per-partition top-k merge,
-  * not a full sort, so this scales linearly).
-  *
-  * Scale path: IVF (inverted-file) routing — vectors are assigned to the
-  * nearest of C seeded centroids at write time (cheap k-means-- with fixed
-  * seeds keeps it deterministic); a query probes only the nProbe nearest
-  * centroid partitions, turning a 10^12-vector scan into a
-  * (nProbe/C)-fraction scan. Parquet partitioning by centroid id gives
-  * partition pruning on the probe set.
+/** Approximate-nearest-neighbor routing over an embedding column: IVF
+  * (inverted-file) — vectors are assigned to the nearest of C seeded
+  * centroids at write time (cheap k-means-- with fixed seeds keeps it
+  * deterministic); a query probes only the nProbe nearest centroid
+  * partitions, turning a 10^12-vector scan into a (nProbe/C)-fraction scan.
+  * Parquet partitioning by centroid id gives partition pruning on the probe
+  * set. Ranking the probed rows is the caller's cosine top-k (q26 scans the
+  * written layout filtered to [[probeSet]]).
   */
 object Ann {
 
-  /** Brute-force cosine top-k for one query vector (codegen'd expression,
-    * no UDF; vectors cast to double so the fold is exact + stable). */
-  def bruteTopK(df: DataFrame, idCol: String, vecCol: String,
-                query: Seq[Double], k: Int): DataFrame = {
-    val qLit = typedLit(query)
-    df.select(col(idCol),
-        Dedup.cosineCol(col(vecCol).cast("array<double>"), qLit).as("cosine"))
-      // zero-norm vectors (or a zero-norm query) make cosine NaN, and Spark
-      // sorts NaN ABOVE every double — without this filter a padding vector
-      // would take rank 1; cosine is undefined there, so the row is excluded
-      .filter(!isnan(col("cosine")))
-      .orderBy(col("cosine").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** L2-normalize (zero-norm vectors pass through as zeros — they are
-    * excluded from cosine ranking anyway, so their routing is moot). The
+  /** L2-normalize (zero-norm vectors pass through as zeros — their cosine
+    * is undefined (NaN), so their routing is moot). The
     * final metric is COSINE, so all ROUTING distances run on unit vectors:
     * cosine order ≡ L2 order on the unit sphere, whereas unnormalized L2
     * routing sends a direction-aligned but longer vector to a far centroid
@@ -141,14 +122,6 @@ object Ann {
     }.take(nProbe).map(_._2).toIndexedSeq
   }
 
-  /** IVF query: probe the nProbe nearest centroid partitions only. */
-  def ivfTopK(assigned: DataFrame, idCol: String, query: Array[Double],
-              cents: Array[Array[Double]], k: Int, nProbe: Int): DataFrame = {
-    val probes = probeSet(cents, query, nProbe)
-    bruteTopK(assigned.filter(col("centroid").isin(probes: _*)),
-      idCol, "vec", query.toIndexedSeq, k)
-  }
-
   /** Persist the routing table PARTITIONED BY CENTROID — the write-time
     * layout that turns probing into real partition pruning: a query lists
     * only the nProbe centroid directories, so the scan fraction is
@@ -196,16 +169,5 @@ object Ann {
     if (inner.isEmpty) Array.empty
     else inner.stripPrefix("[").stripSuffix("]").split("\\],\\[")
       .map(_.split(",").map(_.toDouble))
-  }
-
-  /** IVF query over the on-disk partitioned routing table. The centroid
-    * In-filter is a partition filter (MlSpec asserts `PartitionFilters`
-    * in the physical plan), so non-probed partitions are never read. */
-  def ivfTopKOnDisk(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    idCol: String, query: Array[Double],
-                    cents: Array[Array[Double]], k: Int, nProbe: Int): DataFrame = {
-    val probes = probeSet(cents, query, nProbe)
-    bruteTopK(spark.read.parquet(dir).filter(col("centroid").isin(probes: _*)),
-      idCol, "vec", query.toIndexedSeq, k)
   }
 }

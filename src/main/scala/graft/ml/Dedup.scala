@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   * otherwise go quadratic — 10⁶ identical docs ⇒ 10¹² join rows. Buckets
   * over the cap are DROPPED from candidate generation (their members are
   * by definition near-identical to thousands of others; the exact-dedup
-  * pass catches the identical ones, and capped-out docs are reported via
-  * [[overflowBuckets]] so pipelines can route them to exact dedup).
+  * pass catches the identical ones).
   */
 object Dedup {
 
@@ -93,13 +92,6 @@ object Dedup {
       }.toDF(idCol, "band", "band_hash")
   }
 
-  /** Bucket keys whose member count exceeds `maxBucket` — the degenerate
-    * buckets candidate generation drops (route these docs to exact dedup). */
-  def overflowBuckets(bucketed: DataFrame, keyCols: Seq[String], maxBucket: Int): DataFrame =
-    bucketed.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n") > maxBucket)
-
   /** Rows of `bucketed` whose bucket is within the cap (map-side-combined
     * count + broadcast-friendly join back; no text moves).
     *
@@ -117,19 +109,6 @@ object Dedup {
       .filter(col("bucket_n") <= maxBucket)
       .drop("bucket_n")
     cached.join(sizes, keyCols)
-  }
-
-  /** Candidate near-dup pairs: docs sharing any LSH band bucket.
-    * Self-join on (band, band_hash); id1 < id2 dedupes the pair space.
-    * Buckets larger than `maxBucket` are dropped (quadratic-blowup guard). */
-  def minhashCandidates(bandsDf: DataFrame, idCol: String,
-                        maxBucket: Int = 1000): DataFrame = {
-    val capped = capBuckets(bandsDf, Seq("band", "band_hash"), maxBucket)
-    val a = capped.select(col(idCol).as("id1"), col("band"), col("band_hash"))
-    val b = capped.select(col(idCol).as("id2"), col("band"), col("band_hash"))
-    a.join(b, Seq("band", "band_hash"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
   }
 
   /** Incremental near-dup ADMISSION — the ingest-time twin of batch dedup:
@@ -241,36 +220,6 @@ object Dedup {
       .toDF(idCol, "simhash")
   }
 
-  /** Near-dup pairs by Hamming distance ≤ maxDist via the pigeonhole band
-    * trick: split 60 bits into maxDist+1 bands; any pair within distance
-    * shares at least one exact band → join per band, verify distance.
-    * Degenerate band buckets above `maxBucket` are dropped. */
-  def simhashPairs(sims: DataFrame, idCol: String, maxDist: Int = 3,
-                   maxBucket: Int = 1000): DataFrame = {
-    val nBands = maxDist + 1
-    val width = 60 / nBands
-    val spark = sims.sparkSession
-    import spark.implicits._
-    val banded = sims.select(col(idCol).cast("long"), col("simhash")).as[(Long, Long)]
-      .flatMap { case (id, sh) =>
-        (0 until nBands).iterator.map { b =>
-          val lo = b * width
-          val w = if (b == nBands - 1) 60 - lo else width
-          val mask = (1L << w) - 1
-          (id, sh, b, (sh >>> lo) & mask)
-        }
-      }.toDF(idCol, "simhash", "band", "band_bits")
-    val capped = capBuckets(banded, Seq("band", "band_bits"), maxBucket)
-    val a = capped.select(col(idCol).as("id1"), col("simhash").as("sh1"), col("band"), col("band_bits"))
-    val b = capped.select(col(idCol).as("id2"), col("simhash").as("sh2"), col("band"), col("band_bits"))
-    a.join(b, Seq("band", "band_bits"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        bit_count(col("sh1").bitwiseXOR(col("sh2"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxDist)
-  }
-
   // ----------------------------------------------------- embedding near-dup
   /** Cosine similarity of two double-array columns: a NATIVE Catalyst
     * expression with whole-stage codegen ([[graft.functions.CosineSimilarity]]
@@ -371,8 +320,20 @@ object Dedup {
     // change-count foreach below, so the round runs ONE job instead of two
     // (the old shape ran an eager checkpoint job, then a join-based change
     // count re-reading both rounds)
+    // reliable rounds persist BEFORE checkpointing so the checkpoint-writer
+    // job reads the round from cache instead of re-executing it; that cache
+    // is dropped once the files exist (PageRank.converge's discipline)
+    var preCheckpointCache: Option[DataFrame] = None
     def truncateLazy(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(false) else df.localCheckpoint(false)
+      if (checkpointDir.isDefined) {
+        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        preCheckpointCache = Some(cached)
+        cached.checkpoint(false)
+      } else df.localCheckpoint(false)
+    def dropPreCheckpointCache(): Unit = {
+      preCheckpointCache.foreach(_.unpersist())
+      preCheckpointCache = None
+    }
     val a = col(aCol).cast("long")
     val b = col(bCol).cast("long")
     val edges = pairs.select(a.as("x"), b.as("y"))
@@ -382,6 +343,7 @@ object Dedup {
     var ck = truncateLazy(sym.select(col("x").as("id")).distinct()
       .withColumn("comp", col("id")))
     ck.count() // materialize round 0
+    dropPreCheckpointCache()
     var comp = ck
     var iter = 0
     var converged = false
@@ -406,6 +368,7 @@ object Dedup {
       nextCk.select(col("comp"), col("ocomp")).foreach { r =>
         if (r.getLong(0) != r.getLong(1)) changedAcc.add(1L)
       }
+      dropPreCheckpointCache()
       // the superseded round's checkpoint is dead once the new one is
       // materialized — drop it NOW (PageRank.run's per-round discipline),
       // not when the ContextCleaner eventually notices

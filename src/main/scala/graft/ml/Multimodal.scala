@@ -1,7 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 /** A multimodal asset: opaque media bytes + typed metadata (the Spark-side
   * schema for image/audio/video columns at corpus scale). */
@@ -90,60 +89,4 @@ object Multimodal {
       }
     }
   }
-
-  /** STUB resize — deterministic fake in place of a real image scaler:
-    * rewrites the fake header to the target dims and subsamples the payload
-    * proportionally. Real implementation would decode→scale→re-encode. */
-  def resizeStub(media: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.wrap(media)
-    val kind = bb.getInt(0); val ow = bb.getInt(4); val oh = bb.getInt(8)
-    val sr = bb.getInt(12)
-    val payload = media.drop(16)
-    // Long arithmetic: w*h overflows Int at ~46k x 46k (65536^2 == 0!)
-    val scaled = (payload.length.toLong * (w.toLong * h) / math.max(1L, ow.toLong * oh)).toInt
-    val keep = math.min(math.max(1, scaled), payload.length)
-    val out = java.nio.ByteBuffer.allocate(16 + keep)
-    out.putInt(kind).putInt(w).putInt(h).putInt(sr)
-    out.put(payload, 0, keep)
-    out.array()
-  }
-
-  /** Resize a whole asset table (partition-batched, like extractFeatures). */
-  def resizeAll(assets: Dataset[MediaAsset], w: Int, h: Int): Dataset[MediaAsset] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.mapPartitions(_.map(a =>
-      a.copy(media = resizeStub(a.media, w, h), width = w, height = h)))
-  }
-
-  /** STUB frame sampling — deterministic fake in place of a video/audio
-    * frame extractor: cuts the payload into `frames` equal strips and
-    * returns one pseudo-frame row per strip (the Spark-side shape of
-    * mapInPandas-style frame explosion: one input row → many frame rows). */
-  def sampleFrames(assets: Dataset[MediaAsset], frames: Int): Dataset[(Long, Int, Array[Byte])] = {
-    require(frames > 0, s"frames must be positive, got $frames")
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.flatMap { a =>
-      val payload = a.media.drop(16)
-      val stride = math.max(1, payload.length / frames)
-      (0 until frames).iterator.map { f =>
-        val lo = math.min(f * stride, payload.length)
-        // the LAST strip takes the division remainder — every payload byte
-        // lands in exactly one frame (a real decoder must see the tail)
-        val hi = if (f == frames - 1) payload.length
-                 else math.min(lo + stride, payload.length)
-        (a.asset_id, f, java.util.Arrays.copyOfRange(payload, lo, hi))
-      }
-    }
-  }
-
-  /** Metadata-only stats (media column pruned — the scan must not read the
-    * bytes; verified in MultimodalSpec via the physical plan's ReadSchema
-    * when the table is on parquet). */
-  def kindStats(assets: DataFrame): DataFrame =
-    assets.groupBy(col("kind"))
-      .agg(count(lit(1)).as("n"),
-           round(avg(col("width")), 4).as("avg_w"),
-           round(avg(col("height")), 4).as("avg_h"))
 }

@@ -2,7 +2,6 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.util.hashing.MurmurHash3
 
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, document fingerprinting. Column-first
@@ -78,26 +77,8 @@ object TextAnalysis {
   }
 
   // ------------------------------------------------------------ fingerprint
-  /** Karp–Rabin rolling hash over whitespace tokens: position-sensitive
-    * 64-bit document fingerprint (same token multiset in different order →
-    * different print, unlike a bag-of-words hash). */
-  def rollingFingerprint(text: String): Long = {
-    if (text == null) return 0L // null text -> empty-document fingerprint
-    val B = 1000000007L
-    var h = 0L
-    for (tok <- text.trim.split("\\s+") if tok.nonEmpty)
-      h = h * B + (MurmurHash3.stringHash(tok).toLong & 0xFFFFFFFFL)
-    h
-  }
-
-  def withFingerprint(df: DataFrame, textCol: String, out: String = "fingerprint"): DataFrame = {
-    val f = udf(rollingFingerprint _)
-    df.withColumn(out, f(col(textCol)))
-  }
-
   /** Whitespace-normalized content hash (SQL-expressible fingerprint used
-    * by the oracle-checked queries; rollingFingerprint is the stronger,
-    * order-sensitive variant). */
+    * by the oracle-checked queries). */
   def normalizedHash(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
 

@@ -10,8 +10,8 @@ import graft.text.{PorterStemmer, Text}
   * ([[Searcher.referenceTopK]]), the Dataset twin
   * ([[QueryOps.batchReferenceTopK]]), the sharded, pruned and expanded
   * tiers ([[ShardedSearch]], [[graft.index.StaticPrune]],
-  * [[ExpandedSearch]]). `oracle.Oracle` is the independent replica it is
-  * tested against and keeps its own copy on purpose.
+  * [[ExpandedSearch]]). The test-source `oracle.Oracle` is the independent
+  * replica it is tested against and keeps its own copy on purpose.
   *
   * Rank identity needs bit-identical scores, so [[base]] and its Column
   * twin keep one operation order — `(0.4 + 0.6·tf/max_tf) · idf`, the

@@ -10,7 +10,7 @@ import graft.corpus.Page
   * over it. Host rank is what crawl scheduling actually consumes (host
   * budgets, spam-host demotion) and it is ~10³-10⁴× smaller than the page
   * graph — at 10¹² pages the host graph (~10⁸ nodes) iterates in seconds
-  * where the page graph needs the full hashed path.
+  * where the page graph needs the full page-level iteration.
   *
   * Graph derivation (deterministic at any parallelism):
   *  - a page's node is the authority of its [[RefUrl.selfNormalize]]d url

@@ -8,17 +8,6 @@ import graft.corpus.Page
 /** Per-node PageRank state (url = reference-normalized node id). */
 final case class RankState(url: String, rank: Double, prev: Double, links: Seq[String])
 
-/** [[PageRank.runHashed]] state: 64-bit hashed node ids instead of url
-  * strings — the per-round shuffle carries 8-byte keys, not ~60-byte urls. */
-final case class HashedRankState(id: Long, rank: Double, prev: Double, links: Array[Long])
-
-/** [[PageRank.runHashed128]] state: 128-bit hashed node ids as (hi, lo)
-  * limb pairs — 16-byte shuffle keys, collision-safe past the 64-bit
-  * family's ~10^11-key cliff (expected collisions ≈ n²/2^129: ~10^-15 at
-  * 10^7 nodes, still ≪ 1 at the north rule's 10^12). */
-final case class Hashed128RankState(id: (Long, Long), rank: Double, prev: Double,
-                                    links: Array[(Long, Long)])
-
 final case class PageRankResult(url: String, rank: Double)
 
 /** The reference's PageRank as a Dataset iterative join-aggregate
@@ -86,9 +75,8 @@ object PageRank {
           checkpointEvery: Int = 5,
           checkpointDir: Option[String] = None): (Dataset[PageRankResult], Int) = {
     import spark.implicits._
-    val (state, cnt) = converge[RankState, String](spark, state0, "url",
-      s => contribsOf(s.url, s.rank, s.links),
-      threshold, percent, maxIter, checkpointEvery, checkpointDir)
+    val (state, cnt) = converge(spark, state0, threshold, percent, maxIter,
+      checkpointEvery, checkpointDir)
     (state.map(s => PageRankResult(s.url, s.rank)), cnt)
   }
 
@@ -118,22 +106,19 @@ object PageRank {
   }
 
   /** Keep-alive + 0.85·rank/outdeg per outlink — one node's contribution
-    * rows (reference PageRank.java:90-104), generic over the key type. */
-  private def contribsOf[K](key: K, rank: Double, links: Seq[K]): Iterator[(K, Double)] = {
-    val keepAlive = Iterator.single((key, 0.0))
+    * rows (reference PageRank.java:90-104). */
+  private def contribsOf(s: RankState): Iterator[(String, Double)] = {
+    val keepAlive = Iterator.single((s.url, 0.0))
     val out =
-      if (links.isEmpty) Iterator.empty
+      if (s.links.isEmpty) Iterator.empty
       else {
-        val v = 0.85 * rank / links.length
-        links.iterator.map(l => (l, v))
+        val v = 0.85 * s.rank / s.links.length
+        s.links.iterator.map(l => (l, v))
       }
     keepAlive ++ out
   }
 
-  /** The ONE convergence loop [[run]] and [[runHashed]] share — identical
-    * algebra over a generic node-key type (url strings / 64-bit hashes).
-    * State rows must be (key, rank, prev, links); `keyName` is S's key
-    * field so the round's DataFrame can land back in `.as[S]`.
+  /** The convergence loop [[run]] (and through it [[warmStart]]) drives.
     *
     * Per round: contribution shuffle + sum, dangling-drop inner join
     * (reference PageRank.java:106), +0.15; ONE action computes both
@@ -144,18 +129,15 @@ object PageRank {
     * dropped once the files exist); localCheckpoint rounds keep the
     * persist-after shape — local checkpoints ARE the cached blocks. The
     * caller's state0 cache is adopted, never evicted. */
-  private def converge[S, K](spark: SparkSession, state0: Dataset[S],
-      keyName: String, toContribs: S => Iterator[(K, Double)],
+  private def converge(spark: SparkSession, state0: Dataset[RankState],
       threshold: Double, percent: Double, maxIter: Int,
-      checkpointEvery: Int, checkpointDir: Option[String])(
-      implicit se: org.apache.spark.sql.Encoder[S],
-      ke: org.apache.spark.sql.Encoder[(K, Double)]): (Dataset[S], Int) = {
+      checkpointEvery: Int, checkpointDir: Option[String]): (Dataset[RankState], Int) = {
     import spark.implicits._
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     // each round reads `state` twice (contribs flatMap + the join), so the
     // initial state is persisted — but only when the CALLER hasn't already:
     // the loop unpersists the states it owns, and dropping a cache the
-    // caller set up (e.g. one init reused across run/runHashed) would
+    // caller set up (e.g. one init reused across several runs) would
     // silently force their pipeline to recompute cold
     val adoptState0 = state0.storageLevel == StorageLevel.NONE
     var state = if (adoptState0) state0.persist(StorageLevel.MEMORY_AND_DISK) else state0
@@ -164,15 +146,15 @@ object PageRank {
     var converged = false
     while (!converged && cnt < maxIter) {
       cnt += 1
-      val contribs = state.flatMap(toContribs).toDF("k", "contrib")
+      val contribs = state.flatMap(contribsOf).toDF("k", "contrib")
       val aggregated = contribs.groupBy($"k").agg(sum($"contrib").as("mass"))
       // inner join drops dangling-target mass (reference PageRank.java:106)
       val newState = aggregated
         .join(state.toDF("sk", "rank", "prev", "links"), $"k" === $"sk", "inner")
-        .select($"k".as(keyName), ($"mass" + 0.15).as("rank"), $"rank".as("prev"), $"links")
-        .as[S]
+        .select($"k".as("url"), ($"mass" + 0.15).as("rank"), $"rank".as("prev"), $"links")
+        .as[RankState]
 
-      var preCheckpointCache: Option[Dataset[S]] = None
+      var preCheckpointCache: Option[Dataset[RankState]] = None
       val next =
         if (cnt % checkpointEvery == 0 && checkpointDir.isDefined) {
           val cached = newState.persist(StorageLevel.MEMORY_AND_DISK)
@@ -210,100 +192,4 @@ object PageRank {
   def compute(spark: SparkSession, pages: Dataset[Page], threshold: Double = 0.01,
               percent: Double = 0.8, maxIter: Int = 100): (Dataset[PageRankResult], Int) =
     run(spark, init(spark, pages), threshold, percent, maxIter)
-
-  /** The node-id hash for [[runHashed]] — the shared [[graft.util.Fnv]]
-    * 64-bit FNV-1a family. */
-  def fnv1a64(s: String): Long = graft.util.Fnv.hash64(s)
-
-  /** Same algebra as [[run]] with 64-bit-hashed node ids: the per-round
-    * shuffle (the heavy op) carries 8-byte keys instead of url strings —
-    * ~5-10× smaller shuffle rows on realistic url lengths. Ranks are
-    * identical to [[run]] modulo double-summation reassociation (which both
-    * paths already have). A hash collision would merge two nodes, so ids are
-    * verified collision-free up front and the job fails loudly otherwise
-    * (expected collisions ≈ n²/2^65: ~0.03 at 10^9 nodes; beyond 10^11 nodes
-    * switch the id to 128 bits). Final output maps ids back to urls. */
-  def runHashed(spark: SparkSession, state0: Dataset[RankState], threshold: Double,
-                percent: Double, maxIter: Int = 100, checkpointEvery: Int = 5,
-                checkpointDir: Option[String] = None): (Dataset[PageRankResult], Int) = {
-    import spark.implicits._
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // persisted: the id map, the collision check, and the hashed-state
-    // derivation below all read it — without the cache the whole upstream
-    // init pipeline (page scan, link extraction) executes once per consumer
-    // adopt the caller's cache if they set one up (see run())
-    val adoptSrc = state0.storageLevel == StorageLevel.NONE
-    val src = if (adoptSrc) state0.persist(StorageLevel.MEMORY_AND_DISK) else state0
-    // materialized (count) while src is still cached, so the final id→url
-    // join never re-runs the upstream init pipeline cold
-    val ids = src.map(s => (fnv1a64(s.url), s.url)).toDF("id", "url")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ids.count()
-    // collision check covers NODES AND LINK TARGETS: a dangling target that
-    // collides with a node would silently inject mass every iteration (the
-    // string-keyed run() drops it via the inner join), so the loud-failure
-    // guarantee must hold over every url whose hash enters the shuffle
-    val allUrls = src.flatMap(s => Iterator.single(s.url) ++ s.links.iterator).distinct()
-    val nUrls = allUrls.count()
-    val nIds = allUrls.map(fnv1a64).distinct().count()
-    require(nIds == nUrls,
-      s"fnv1a64 id collision: $nUrls urls -> $nIds ids; use runHashed128 at this scale")
-
-    val hashed0 = src
-      .map(s => HashedRankState(fnv1a64(s.url), s.rank, s.prev, s.links.map(fnv1a64).toArray))
-    val (state, cnt) = converge[HashedRankState, Long](spark, hashed0, "id",
-      s => contribsOf(s.id, s.rank, s.links.toIndexedSeq),
-      threshold, percent, maxIter, checkpointEvery, checkpointDir)
-    if (adoptSrc) src.unpersist()
-    // eager localCheckpoint materializes the joined output so the ids cache
-    // can be released HERE instead of leaking for the session lifetime (the
-    // loop is already action-per-round eager — this adds one job over two
-    // cached inputs; same discipline as TextAnalysis.packSequences)
-    val out = state.toDF("id", "rank", "prev", "links")
-      .join(ids, Seq("id"))
-      .select($"url", $"rank").as[PageRankResult]
-      .localCheckpoint()
-    ids.unpersist()
-    (out, cnt)
-  }
-
-  /** The 128-bit node-id hash — [[graft.util.Fnv.hash128]] as (hi, lo). */
-  def fnv1a128(s: String): (Long, Long) = graft.util.Fnv.hash128(s)
-
-  /** [[runHashed]] past the 64-bit cliff: identical algebra through the SAME
-    * generic [[converge]] loop, keyed on 128-bit FNV-1a ids (a (hi, lo)
-    * struct — 16-byte shuffle keys, still ~4× smaller than realistic urls).
-    * This is the documented answer to "use 128-bit ids at this scale": at
-    * 10^12 nodes the 64-bit family expects ~27 collisions while this one
-    * expects ~10^-15. The up-front guard is kept as a cheap invariant (two
-    * map-side-combined distinct counts) and the failure stays loud. */
-  def runHashed128(spark: SparkSession, state0: Dataset[RankState], threshold: Double,
-                   percent: Double, maxIter: Int = 100, checkpointEvery: Int = 5,
-                   checkpointDir: Option[String] = None): (Dataset[PageRankResult], Int) = {
-    import spark.implicits._
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    val adoptSrc = state0.storageLevel == StorageLevel.NONE
-    val src = if (adoptSrc) state0.persist(StorageLevel.MEMORY_AND_DISK) else state0
-    val ids = src.map(s => (fnv1a128(s.url), s.url)).toDF("id", "url")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ids.count() // materialize while src is cached (see runHashed)
-    val allUrls = src.flatMap(s => Iterator.single(s.url) ++ s.links.iterator).distinct()
-    val nUrls = allUrls.count()
-    val nIds = allUrls.map(fnv1a128).distinct().count()
-    require(nIds == nUrls,
-      s"fnv1a128 id collision: $nUrls urls -> $nIds ids")
-
-    val hashed0 = src.map(s =>
-      Hashed128RankState(fnv1a128(s.url), s.rank, s.prev, s.links.map(fnv1a128).toArray))
-    val (state, cnt) = converge[Hashed128RankState, (Long, Long)](spark, hashed0, "id",
-      s => contribsOf(s.id, s.rank, s.links.toIndexedSeq),
-      threshold, percent, maxIter, checkpointEvery, checkpointDir)
-    if (adoptSrc) src.unpersist()
-    val out = state.toDF("id", "rank", "prev", "links")
-      .join(ids, Seq("id"))
-      .select($"url", $"rank").as[PageRankResult]
-      .localCheckpoint() // eager: lets the ids cache release (see runHashed)
-    ids.unpersist()
-    (out, cnt)
-  }
 }

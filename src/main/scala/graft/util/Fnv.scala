@@ -1,12 +1,10 @@
 package graft.util
 
 /** FNV-1a over UTF-8 bytes — the ONE shared implementation of the engine's
-  * string-id hash family (stable across JVMs, dependency-free, identical on
-  * driver and executors). Consumers: [[graft.index.IndexBuild]]'s urlHash /
-  * open-vocabulary term ids (64-bit, loud collision guards) and
-  * [[graft.rank.PageRank.runHashed]] / `runHashed128`'s node ids. 64-bit ids
-  * expect ≈ n²/2^65 collisions (~0.03 at 10^9 keys) — past ~10^11 keys use
-  * [[hash128]], whose expected collisions stay ≪ 1 even at 10^12. */
+  * 64-bit string-id hash (stable across JVMs, dependency-free, identical on
+  * driver and executors). Consumer: [[graft.index.IndexBuild]]'s url hash,
+  * behind a loud collision guard. 64-bit ids expect ≈ n²/2^65 collisions
+  * (~0.03 at 10^9 keys). */
 object Fnv {
   def hash64(s: String): Long = {
     var h = 0xcbf29ce484222325L
@@ -14,33 +12,5 @@ object Fnv {
     var i = 0
     while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
     h
-  }
-
-  /** Unsigned high 64 bits of a×b (Java 17 has only the signed
-    * `Math.multiplyHigh`; the two correction terms lift it to unsigned). */
-  @inline private def unsignedMulHigh(a: Long, b: Long): Long =
-    Math.multiplyHigh(a, b) + ((a >> 63) & b) + ((b >> 63) & a)
-
-  /** True FNV-1a 128-bit (prime 2^88 + 2^8 + 0x3b, offset basis
-    * 0x6c62272e07bb014262b821756295c58d) as two 64-bit limbs `(hi, lo)`,
-    * computed with a 128×128→low-128 limb multiply. Golden-vectored in
-    * FnvSpec against an independent big-integer implementation. */
-  def hash128(s: String): (Long, Long) = {
-    var hHi = 0x6c62272e07bb0142L
-    var hLo = 0x62b821756295c58dL
-    val pHi = 0x0000000001000000L // prime's high limb: 2^88 >> 64 = 2^24
-    val pLo = 0x000000000000013bL
-    val bytes = s.getBytes("UTF-8")
-    var i = 0
-    while (i < bytes.length) {
-      hLo ^= (bytes(i) & 0xffL)
-      // (hHi·2^64 + hLo) × (pHi·2^64 + pLo) mod 2^128
-      val newHi = hHi * pLo + hLo * pHi + unsignedMulHigh(hLo, pLo)
-      val newLo = hLo * pLo
-      hHi = newHi
-      hLo = newLo
-      i += 1
-    }
-    (hHi, hLo)
   }
 }

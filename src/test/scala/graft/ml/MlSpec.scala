@@ -43,57 +43,46 @@ class MlSpec extends AnyFunSuite {
 
   test("minhash LSH finds planted near-duplicates; jaccard verifies") {
     val df = docs.toDF("doc_id", "text")
-    val bands = Dedup.minhashBands(df, "doc_id", "text")
-    val cands = Dedup.minhashCandidates(bands, "doc_id")
-    val candSet = cands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // all planted near-dups (1 token of 30 changed → jaccard ≈ 0.8+) found
+    val buckets = Dedup.minhashBands(df, "doc_id", "text").as[(Long, Int, Long)].collect()
+      .groupBy(_._1).map { case (id, rows) => id -> rows.map(r => (r._2, r._3)).toSet }
+    // all planted near-dups (1 token of 30 changed → jaccard ≈ 0.8+) share a bucket
     for (i <- 0L until 10L)
-      assert(candSet.contains((i, 100 + i)), s"missing near-dup pair $i")
-    // verification: planted pairs score high, a random non-dup pair scores low
+      assert((buckets(i) & buckets(100 + i)).nonEmpty, s"missing near-dup pair $i")
+    // verification over a fixed candidate frame (as q24 feeds it): planted
+    // pairs score high, exact copies 1.0, adjacent unrelated docs low
+    val near = (0L until 10L).map(i => (i, 100 + i))
+    val exact = (0L until 5L).map(i => (i, 200 + i))
+    val unrelated = (10L until 20L).map(i => (i, i + 1))
+    val cands = (near ++ exact ++ unrelated).toDF("id1", "id2")
     val verified = Dedup.jaccardVerify(df, cands, "doc_id", "text", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    for (i <- 0L until 10L)
-      assert(verified((i, 100 + i)) > 0.5)
-    // exact copies → jaccard 1.0 (they also collide in every band)
-    for (i <- 0L until 5L)
-      assert(verified.get((i, 200 + i)).forall(_ == 1.0))
-  }
-
-  test("simhash pairs = brute-force hamming pairs at maxDist") {
-    val df = docs.toDF("doc_id", "text")
-    val sims = Dedup.simhashes(df, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    val brute = (for {
-      (i1, h1) <- sims; (i2, h2) <- sims if i1 < i2
-      d = java.lang.Long.bitCount(h1 ^ h2) if d <= 6
-    } yield (i1, i2, d)).toSet
-    val got = Dedup.simhashPairs(Dedup.simhashes(df, "doc_id", "text"), "doc_id", maxDist = 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(got == brute)
-    // exact copies have distance 0
-    assert(brute.exists { case (a, b, d) => d == 0 && b - a == 200 })
+    assert(verified.size == near.size + exact.size + unrelated.size)
+    for (p <- near) assert(verified(p) > 0.5, s"near-dup $p")
+    for (p <- exact) assert(verified(p) == 1.0, s"exact copy $p")
+    for (p <- unrelated) assert(verified(p) < 0.5, s"unrelated $p")
   }
 
   test("degenerate bucket (1000 identical docs) is capped, not quadratic") {
-    // 1000 byte-identical docs share every minhash band bucket: uncapped,
-    // the self-join would emit ~500k pairs per band × 16 bands. With the
-    // cap they are dropped from candidate generation and surfaced via
-    // overflowBuckets (exact dedup owns identical docs).
-    val clones = (0L until 1000L).map(i => (i, "same boring boilerplate text here"))
-    val distinct = (2000L until 2010L).map(i => (i, s"unique doc $i alpha beta gamma delta"))
-    val df = (clones ++ distinct).toDF("doc_id", "text")
-    val bands = Dedup.minhashBands(df, "doc_id", "text")
-    val cands = Dedup.minhashCandidates(bands, "doc_id", maxBucket = 50)
-    val ids = cands.select("id1").union(cands.select("id2"))
-      .distinct().as[Long].collect().toSet
-    assert(!ids.exists(_ < 1000L), "clone-bucket members must not reach the pair join")
-    val overflow = Dedup.overflowBuckets(bands, Seq("band", "band_hash"), 50).collect()
-    assert(overflow.length == 16 && overflow.forall(_.getLong(2) == 1000L),
-      "every band's clone bucket must be reported as overflow")
-    // same guard on the simhash path
-    val sims = Dedup.simhashes(df, "doc_id", "text")
-    val pairs = Dedup.simhashPairs(sims, "doc_id", maxDist = 3, maxBucket = 50)
-    assert(!pairs.select("id1").as[Long].collect().exists(_ < 1000L))
+    // 1000 identical vectors share every hyperplane table's bucket:
+    // uncapped, the self-join would emit ~500k pairs per table × 4 tables.
+    // With the cap they are dropped from candidate generation (exact dedup
+    // owns identical docs) while a planted near-dup pair still surfaces.
+    val rng = new scala.util.Random(5)
+    val dim = 64
+    def gaussian(): IndexedSeq[Float] = IndexedSeq.fill(dim)(rng.nextGaussian().toFloat)
+    val clone = gaussian()
+    val base = IndexedSeq.fill(dim)(rng.nextGaussian())
+    val clones = (0L until 1000L).map(i => (i, clone))
+    val planted = Seq(
+      (2000L, base.map(_.toFloat)),
+      (2001L, base.map(x => (x + 1e-3 * rng.nextGaussian()).toFloat)))
+    val others = (2002L until 2020L).map(i => (i, gaussian()))
+    val df = (clones ++ planted ++ others).toDF("vec_id", "embedding")
+    val pairs = Dedup.embeddingDupPairs(df, "vec_id", "embedding", threshold = 0.9, maxBucket = 50)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(!pairs.exists { case (a, b) => a < 1000L || b < 1000L },
+      s"clone-bucket members must not reach the pair join: ${pairs.take(5)}")
+    assert(pairs.contains((2000L, 2001L)), "planted near-dup pair must survive the cap")
   }
 
   test("embedding LSH multi-table pairs: planted dup found, no cross join") {
@@ -120,51 +109,61 @@ class MlSpec extends AnyFunSuite {
     assert(cands < 500, s"LSH candidates should be sparse, got $cands")
   }
 
-  test("IVF ANN matches brute force on planted clusters") {
+  /** 200 vectors around 4 planted centers; vector 0 is the query. */
+  private def ivfClusters(): Seq[(Long, IndexedSeq[Float])] = {
     val rng = new scala.util.Random(11)
     val dim = 16
     val centers = Array.fill(4)(Array.fill(dim)(rng.nextGaussian()))
-    val vecs = (0 until 200).map { i =>
+    (0 until 200).map { i =>
       val c = centers(i % 4)
       (i.toLong, c.toIndexedSeq.map(x => (x + 0.05 * rng.nextGaussian()).toFloat))
     }
+  }
+
+  /** Brute-force cosine top-k of `q` over `vecs` (cosine desc, id asc). */
+  private def bruteCosineTopK(vecs: Seq[(Long, IndexedSeq[Float])], q: Array[Double],
+                              k: Int): Seq[Long] = {
+    def norm(v: Seq[Double]) = math.sqrt(v.map(x => x * x).sum)
+    val qs = q.toIndexedSeq
+    vecs.map { case (id, v) =>
+      val d = v.map(_.toDouble)
+      (id, d.zip(qs).map { case (a, b) => a * b }.sum / (norm(d) * norm(qs)))
+    }.sortBy { case (id, c) => (-c, id) }.take(k).map(_._1)
+  }
+
+  test("IVF ANN matches brute force on planted clusters") {
+    val vecs = ivfClusters()
     val df = vecs.toDF("vec_id", "embedding")
-    val q = vecs.head._2.map(_.toDouble)
-    val brute = Ann.bruteTopK(df.filter($"vec_id" > 0), "vec_id", "embedding", q, 10)
-      .collect().map(_.getLong(0)).toSeq
+    val q = vecs.head._2.map(_.toDouble).toArray
+    val brute = bruteCosineTopK(vecs.tail, q, 10)
     val cents = Ann.centroids(df, "vec_id", "embedding", c = 4)
     val assigned = Ann.ivfAssign(df.filter($"vec_id" > 0), "vec_id", "embedding", cents)
-    val ivf = Ann.ivfTopK(assigned, "vec_id", q.toArray, cents, k = 10, nProbe = 2)
-      .collect().map(_.getLong(0)).toSeq
-    assert(ivf == brute, "IVF with 2 probes should recover brute-force top-10 on clustered data")
+    val probed = assigned.filter(col("centroid").isin(Ann.probeSet(cents, q, 2): _*))
+      .select("vec_id").as[Long].collect().toSet
+    assert(brute.forall(probed.contains),
+      "IVF with 2 probes should recover brute-force top-10 on clustered data")
     // and the probe actually prunes: 2 of 4 centroids scanned
-    val scanned = Ann.ivfTopK(assigned, "vec_id", q.toArray, cents, k = 1000, nProbe = 2).count()
-    assert(scanned < 199)
+    assert(probed.size < 199)
   }
 
   test("IVF on-disk layout prunes non-probed centroid partitions") {
-    val rng = new scala.util.Random(11)
-    val dim = 16
-    val centers = Array.fill(4)(Array.fill(dim)(rng.nextGaussian()))
-    val vecs = (0 until 200).map { i =>
-      val c = centers(i % 4)
-      (i.toLong, c.toIndexedSeq.map(x => (x + 0.05 * rng.nextGaussian()).toFloat))
-    }
+    val vecs = ivfClusters()
     val df = vecs.toDF("vec_id", "embedding")
     val q = vecs.head._2.map(_.toDouble).toArray
     val cents = Ann.centroids(df, "vec_id", "embedding", c = 4)
     val assigned = Ann.ivfAssign(df.filter($"vec_id" > 0), "vec_id", "embedding", cents)
     val dir = java.nio.file.Files.createTempDirectory("ivf").toString
-    Ann.ivfWrite(assigned, dir)
-    val onDisk = Ann.ivfTopKOnDisk(spark, dir, "vec_id", q, cents, k = 10, nProbe = 2)
-    val inMem = Ann.ivfTopK(assigned, "vec_id", q, cents, k = 10, nProbe = 2)
-    assert(onDisk.collect().map(_.getLong(0)).toSeq ==
-           inMem.collect().map(_.getLong(0)).toSeq)
-    // the probe is a PARTITION filter: non-probed directories never read
+    Ann.ivfWrite(assigned, dir, cents)
+    // the centroids travel with the layout, exactly
+    assert(Ann.readCentroids(dir).map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq)
     val probes = Ann.probeSet(cents, q, 2)
-    val plan = spark.read.parquet(dir)
-      .filter(col("centroid").isin(probes: _*))
-      .queryExecution.executedPlan.toString
+    val onDisk = spark.read.parquet(dir).filter(col("centroid").isin(probes: _*))
+    val probed = onDisk.select("vec_id").as[Long].collect().toSet
+    assert(probed == assigned.filter(col("centroid").isin(probes: _*))
+      .select("vec_id").as[Long].collect().toSet)
+    assert(bruteCosineTopK(vecs.tail, q, 10).forall(probed.contains))
+    // the probe is a PARTITION filter: non-probed directories never read
+    val plan = onDisk.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("centroid"), plan)
   }
 
@@ -197,17 +196,19 @@ class MlSpec extends AnyFunSuite {
     assert(c0.length == 4 && c0.forall(ci => ci >= 0 && ci < 8))
   }
 
-  test("connected components match local union-find on a random graph") {
-    import spark.implicits._
-    // deterministic random graph: 120 nodes, sparse edges → mix of
-    // singleton-free components, chains, and merged clusters
+  /** Deterministic random graph: 120 nodes, sparse edges → mix of
+    * singleton-free components, chains, and merged clusters, plus an
+    * explicit LONG CHAIN (diameter 40) — pointer jumping must converge it
+    * well inside maxIter where plain label prop needs 40 rounds. */
+  private lazy val ccEdges: Seq[(Long, Long)] = {
     val rng = new scala.util.Random(11)
     val edges = (0 until 150).map(_ => (rng.nextInt(120).toLong, rng.nextInt(120).toLong))
       .filter { case (a, b) => a != b }
-    // plus an explicit LONG CHAIN (diameter 40) — pointer jumping must
-    // converge it well inside maxIter where plain label prop needs 40 rounds
-    val chain = (1000L until 1040L).map(i => (i, i + 1))
-    val pairs = spark.createDataset(edges ++ chain).toDF("a", "b")
+    edges ++ (1000L until 1040L).map(i => (i, i + 1))
+  }
+
+  test("connected components match local union-find on a random graph") {
+    val pairs = ccEdges.toDF("a", "b")
     val got = graft.ml.Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -217,15 +218,29 @@ class MlSpec extends AnyFunSuite {
       val p = parent.getOrElse(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    for ((a, b) <- edges ++ chain) {
+    for ((a, b) <- ccEdges) {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
-    val nodes = (edges ++ chain).flatMap(e => Seq(e._1, e._2)).distinct
+    val nodes = ccEdges.flatMap(e => Seq(e._1, e._2)).distinct
     val want = nodes.map(x => x -> find(x)).toMap
     assert(got == want)
     // the chain collapsed to one component rooted at its min id
     assert((1000L to 1040L).forall(i => got(i) == 1000L))
+  }
+
+  test("connected components with a reliable checkpointDir equal the default, no cache left") {
+    val pairs = ccEdges.toDF("a", "b")
+    val want = graft.ml.Dedup.connectedComponents(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    // compared by id, not by count: the context holds its persisted RDDs
+    // weakly, so earlier tests' garbage can leave the map during the call
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val reliable = graft.ml.Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(left.isEmpty, "the pre-checkpoint caches must be dropped once the files exist")
+    assert(reliable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
   }
 
   test("sequence packing equals a sequential cumsum at any partitioning") {
@@ -271,13 +286,6 @@ class MlSpec extends AnyFunSuite {
     assert(TextAnalysis.langIdOf("hunden är inte på huset och det har den inte") == "sv")
     assert(TextAnalysis.langIdOf("zzz qqq xxx") == "und")
     assert(TextAnalysis.langIdOf("") == "und")
-  }
-
-  test("rolling fingerprint is order-sensitive and whitespace-robust") {
-    val a = TextAnalysis.rollingFingerprint("alpha beta gamma")
-    assert(a == TextAnalysis.rollingFingerprint("alpha  beta\tgamma"))
-    assert(a != TextAnalysis.rollingFingerprint("gamma beta alpha"))
-    assert(a != TextAnalysis.rollingFingerprint("alpha beta"))
   }
 
   test("line dedup drops cross-doc boilerplate lines, keeps order, keeps all docs") {
@@ -453,36 +461,12 @@ class MlSpec extends AnyFunSuite {
     assert(got.find(r => r._1 == 0L && r._2 == 1).exists(r => r._3 == 200L && r._4 > 0.9999))
   }
 
-  test("multimodal resize + frame sampling stubs keep the plumbing shape") {
-    val assets = Multimodal.generateAssets(spark, 30)
-    val resized = Multimodal.resizeAll(assets, 32, 32).collect()
-    assert(resized.forall(a => a.width == 32 && a.height == 32))
-    for (a <- resized) {
-      val (w, h, _, _) = Multimodal.decodeStub(a.media)
-      assert(w == 32 && h == 32, "resized header must round-trip through decode")
-    }
-    // frame explosion: one row in → `frames` rows out, deterministic bytes
-    val frames = Multimodal.sampleFrames(assets, 4).collect()
-    assert(frames.length == 30 * 4)
-    assert(frames.groupBy(_._1).forall(_._2.map(_._2).sorted.sameElements(0 until 4)))
-    val again = Multimodal.sampleFrames(Multimodal.generateAssets(spark, 30), 4).collect()
-    assert(frames.sortBy(f => (f._1, f._2)).zip(again.sortBy(f => (f._1, f._2)))
-      .forall { case (a, b) => a._3.sameElements(b._3) })
-  }
-
-  test("multimodal feature extraction is deterministic with pruned metadata scan") {
-    val assets = Multimodal.generateAssets(spark, 50)
-    val f1 = Multimodal.extractFeatures(assets).collect().sortBy(_.asset_id)
+  test("multimodal feature extraction is deterministic") {
+    val f1 = Multimodal.extractFeatures(Multimodal.generateAssets(spark, 50))
+      .collect().sortBy(_.asset_id)
     val f2 = Multimodal.extractFeatures(Multimodal.generateAssets(spark, 50))
       .collect().sortBy(_.asset_id)
     assert(f1.map(_.content_hash).sameElements(f2.map(_.content_hash)))
     assert(f1.forall(_.features.length == 8))
-    // metadata-only stats never touch the media column once on parquet
-    val dir = java.nio.file.Files.createTempDirectory("mm").toString
-    assets.write.mode("overwrite").parquet(dir)
-    val onDisk = spark.read.parquet(dir)
-    val plan = Multimodal.kindStats(onDisk).queryExecution.executedPlan.toString
-    assert(plan.contains("ReadSchema") && !plan.contains("media"),
-      s"media column must be pruned from the scan:\n$plan")
   }
 }

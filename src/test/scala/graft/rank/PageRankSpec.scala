@@ -64,30 +64,15 @@ class PageRankSpec extends AnyFunSuite {
     assert(gotMap.keySet == expected.keySet)
     for ((u, e) <- expected) assert(math.abs(gotMap(u) - e) < 1e-9, s"rank($u)")
     assert(iters > 1, "corpus should take multiple iterations to converge")
-  }
 
-  test("hashed-id iteration is rank-identical to the url-keyed path") {
-    val n = 120
-    val state0 = PageRank.init(spark, Corpus.generate(spark, n))
-    val (urlKeyed, it1) = PageRank.run(spark, state0, 0.01, 0.8)
-    val (hashed, it2) = PageRank.runHashed(spark, state0, 0.01, 0.8)
-    assert(it1 == it2)
-    val a = urlKeyed.collect().map(r => r.url -> r.rank).toMap
-    val b = hashed.collect().map(r => r.url -> r.rank).toMap
-    assert(a.keySet == b.keySet)
-    for ((u, e) <- a) assert(math.abs(b(u) - e) < 1e-9, s"rank($u)")
-  }
-
-  test("128-bit-id iteration is rank-identical to the url-keyed path") {
-    val n = 120
-    val state0 = PageRank.init(spark, Corpus.generate(spark, n))
-    val (urlKeyed, it1) = PageRank.run(spark, state0, 0.01, 0.8)
-    val (hashed, it2) = PageRank.runHashed128(spark, state0, 0.01, 0.8)
-    assert(it1 == it2)
-    val a = urlKeyed.collect().map(r => r.url -> r.rank).toMap
-    val b = hashed.collect().map(r => r.url -> r.rank).toMap
-    assert(a.keySet == b.keySet)
-    for ((u, e) <- a) assert(math.abs(b(u) - e) < 1e-9, s"rank($u)")
+    // reliable-checkpoint rounds (persist, checkpoint, drop the cache)
+    val tmp = java.nio.file.Files.createTempDirectory("pagerank-ckpt").toString
+    val (reliable, rIters) = PageRank.run(spark, PageRank.init(spark, Corpus.generate(spark, n)),
+      0.01, 0.8, checkpointEvery = 2, checkpointDir = Some(tmp))
+    assert(rIters == expIters)
+    val reliableMap = reliable.collect().map(r => r.url -> r.rank).toMap
+    assert(reliableMap.keySet == expected.keySet)
+    for ((u, e) <- expected) assert(math.abs(reliableMap(u) - e) < 1e-9, s"reliable rank($u)")
   }
 
   test("init collapses urls that normalize to the same node (no double mass)") {
