@@ -92,10 +92,6 @@ object IndexBuild {
   private[graft] def VocabularyCap: Int =
     sys.props.get("graft.vocab.cap").map(_.toInt).getOrElse(1 << 22)
 
-  /** FNV-1a 64-bit url hash for the primitive-triple fast path
-    * (the shared [[graft.util.Fnv]] family; collision-checked). */
-  private[index] def fnv1a64(s: String): Long = graft.util.Fnv.hash64(s)
-
   /** The CLOSED term universe the tokenizer can emit, derived from the
     * lexicon alone (no data scan): body/boost tokens are either ≤3-digit
     * strings, the empty token (Java split quirk — `isValidNumber("")` is
@@ -148,7 +144,7 @@ object IndexBuild {
     // ONE tokenize pass: per-posting primitive triples; the url string
     // rides on the page's FIRST row only (null elsewhere)
     val hashed = pages.flatMap { p =>
-      val h = fnv1a64(p.url)
+      val h = graft.util.Fnv.hash64(p.url)
       var first = true
       Text.postings(p.url, new String(p.html, "UTF-8"), lex.value).map {
         case (term, tf) =>

@@ -682,82 +682,21 @@ final class DirectSearcher private (dir: String, n: Int) {
     }
   }
 
-  /** Index into `docShards` of the shard holding `id` — last shard with
-    * minId <= id, range-checked. Shared by the url and dl lookups. */
-  private def shardIdxOf(id: Long): Int = {
+  /** (shard buffer, record position) for a doc id — binary search for the
+    * last shard with minId <= id (range-checked), then the shard's offset
+    * table indexed by id − minId. */
+  private def recordPos(id: Long): (java.nio.MappedByteBuffer, Int) = {
     var lo = 0; var hi = docShards.length - 1
     while (lo < hi) {
       val mid = (lo + hi + 1) >>> 1
       if (docShards(mid)._2 <= id) lo = mid else hi = mid - 1
     }
-    val (_, minId, count, _) = docShards(lo)
+    val (pid, minId, count, tablePos) = docShards(lo)
     require(id >= minId && id < minId + count, s"doc_id $id out of range")
-    lo
-  }
-
-  /** (shard buffer, record position) for a doc id — binary search over the
-    * shard ranges, then the shard's offset table indexed by id − minId. */
-  private def recordPos(id: Long): (java.nio.MappedByteBuffer, Int) = {
-    val (pid, minId, _, tablePos) = docShards(shardIdxOf(id))
     val buf = docBuf(pid)
     val off = buf.getLong((tablePos + 8L * (id - minId)).toInt)
     (buf, off.toInt)
   }
-
-  /** BM25 reads dl for EVERY accumulated posting — per-posting mmap walks
-    * (offset + record reads) measured ~2-3× the in-heap scorer's p95, so a
-    * shard's dl column is decoded ONCE into a primitive array on first
-    * touch. Memory: 8 B per doc of TOUCHED shards only — matching per-shard
-    * serving at scale, where a node holds its own shard's doc lengths (the
-    * classic further step, 1-byte quantized dl, isn't needed here). */
-  private val dlCache = new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
-  private def dlShard(shardIdx: Int): Array[Long] =
-    dlCache.computeIfAbsent(shardIdx, si => {
-      val (pid, _, count, tablePos) = docShards(si)
-      val buf = docBuf(pid)
-      val arr = new Array[Long](count)
-      var i = 0
-      while (i < count) {
-        arr(i) = buf.getLong(buf.getLong((tablePos + 8L * i).toInt).toInt)
-        i += 1
-      }
-      bytesRead.addAndGet(16L * count)
-      arr
-    })
-
-  /** DENSE dl array over the whole doc-id space (ids are the build's dense
-    * url-ordered 0..N−1): the BM25 accumulation loop reads dl once per
-    * posting, and the per-posting shard binary search + boxed-tuple access
-    * + ConcurrentHashMap hit of the per-shard path measured ~40% of the
-    * head-query latency. Built lazily on first BM25 use (reference scoring
-    * never touches it); 8 B/doc — the same per-node footprint story as the
-    * per-shard arrays, materialized flat. Falls back to the per-shard path
-    * for id spaces past Int.MaxValue. */
-  @volatile private var dlDense: Array[Long] = null
-  private def dlDenseArr(): Array[Long] = {
-    var arr = dlDense
-    if (arr == null) synchronized {
-      arr = dlDense
-      if (arr == null) {
-        arr = new Array[Long](numDocs.toInt)
-        var si = 0
-        while (si < docShards.length) {
-          val (_, minId, count, _) = docShards(si)
-          System.arraycopy(dlShard(si), 0, arr, minId.toInt, count)
-          si += 1
-        }
-        dlDense = arr
-      }
-    }
-    arr
-  }
-
-  private def dlOf(id: Long): Long =
-    if (numDocs <= Int.MaxValue.toLong) dlDenseArr()(id.toInt)
-    else {
-      val si = shardIdxOf(id)
-      dlShard(si)((id - docShards(si)._2).toInt)
-    }
 
   private def urlOf(id: Long): String = {
     val (buf, p) = recordPos(id)
@@ -768,15 +707,32 @@ final class DirectSearcher private (dir: String, n: Int) {
     new String(ub, "UTF-8")
   }
 
-  // the dense dl array is serving state built at open (like the eager shard
-  // mappings above) — built lazily it would land inside the first BM25
-  // query's measured latency. Placed after every field initializer: calling
-  // it earlier in construction would be wiped by the `dlDense = null`
-  // declaration initializer running afterwards.
-  if (numDocs > 0 && numDocs <= Int.MaxValue.toLong) dlDenseArr()
+  /** BM25 reads a doc's length for EVERY accumulated posting, so each doc's
+    * [[Bm25.lengthNorm]] is read once from its shard record into one dense
+    * array over the build's dense url-ordered ids 0..N−1 (8 B per doc) at
+    * open, like the eager shard mappings above: built lazily it would land
+    * inside the first BM25 query's latency. BM25 is bounded below
+    * Int.MaxValue docs by its dense accumulator, so a larger index gets no
+    * norms (and no BM25). */
+  private val norms: Array[Double] =
+    if (numDocs >= Int.MaxValue) Array.emptyDoubleArray
+    else {
+      val arr = new Array[Double](numDocs.toInt)
+      for ((pid, minId, count, tablePos) <- docShards) {
+        val buf = docBuf(pid)
+        var i = 0
+        while (i < count) {
+          val dl = buf.getLong(buf.getLong((tablePos + 8L * i).toInt).toInt)
+          arr(minId.toInt + i) = Bm25.lengthNorm(dl, avgdl)
+          i += 1
+        }
+        bytesRead.addAndGet(16L * count)
+      }
+      arr
+    }
 
   private val searcher =
-    new Searcher(n, dict, blocksOf, urlOf, dlOf, avgdl, dlMin, numDocs)
+    new Searcher(n, dict, blocksOf, urlOf, norms, avgdl, dlMin, numDocs)
 
   def referenceTopK(query: String,
                     pagerank: Option[String => Double] = None): List[(String, Double)] =

@@ -27,12 +27,13 @@ import graft.text.{PorterStemmer, Text}
   *  - [[bm25TopK]] — the performance scorer: standard [[Bm25]] over the
   *    impact-ordered blocks with block-max early termination (Anh–Moffat
   *    style impact ordering; the block-max bound plays the WAND θ role).
+  *    `norms` holds each doc's [[Bm25.lengthNorm]], indexed by doc id.
   */
 final class Searcher(val n: Int,
                      dict: Map[String, DictEntry],
                      blocksOf: String => IndexedSeq[PostingBlock],
                      urlOf: Long => String,
-                     dlOf: Long => Long,
+                     norms: Array[Double],
                      avgdl: Double,
                      dlMin: Long,
                      numDocs: Long) {
@@ -111,8 +112,8 @@ final class Searcher(val n: Int,
   // --------------------------------------------------------------------- BM25
   /** Decoded-block LRU shared ACROSS queries: the index is immutable for a
     * Searcher's lifetime, so a block's doc-order (ids, tfs) arrays are
-    * reusable serving state — the same class of cache as the Direct tier's
-    * per-shard dl arrays. Keyed by (term, per-term block index), which is
+    * reusable serving state — the same class of state as the per-doc
+    * length norms. Keyed by (term, per-term block index), which is
     * stable in every tier (the in-heap tier's grouped blocks and the Direct
     * tier's ref lists are both fixed serving-order sequences). Bounded:
     * 1024 entries ≈ ≤ 50 MB at the default 4096-posting blocks; repeated
@@ -125,11 +126,15 @@ final class Searcher(val n: Int,
         size() > 1024
     })
 
+  /** The length norm of the corpus' shortest doc: the block-max bound's
+    * denominator (a block's best tf landing in the shortest doc). */
+  private val normMin = Bm25.lengthNorm(dlMin, avgdl)
+
   /** One [[Bm25Accumulator]] per thread, made on the thread's first
     * [[bm25TopK]] call (reference-only serving never allocates one) and
     * reset after every query, so concurrent queries over one Searcher never
-    * share scores. Doc ids index it directly, the same dense-id bound as the
-    * tiers' dl arrays. */
+    * share scores. Doc ids index it directly, the same dense-id bound as
+    * `norms`. */
   private val accumulators = ThreadLocal.withInitial[Bm25Accumulator] { () =>
     require(numDocs < Int.MaxValue,
       s"BM25 accumulates into a dense per-doc array and is bounded at ${Int.MaxValue} docs " +
@@ -153,20 +158,21 @@ final class Searcher(val n: Int,
     * skips accumulator work for docs that cannot appear in the result.
     *
     * Scores accumulate in the calling thread's dense [[Bm25Accumulator]]
-    * (no per-query allocation, no hashing in the hot loop); the stop
-    * rule's k-th-score check scans only the ids this query touched. */
+    * (no per-query allocation, no hashing in the hot loop), each posting
+    * scored against its doc's precomputed [[Bm25.lengthNorm]]. The
+    * accumulator keeps a running heap of the k + 1 best docs, so the stop
+    * rule reads the k-th and (k+1)-th scores in O(1) and the finish pass and
+    * the final cut take their candidates from the heap; only a tie at the
+    * k-th score falls back to a scan of the touched ids. */
   def bm25TopK(query: String, k: Int = 10): List[(String, Double)] = {
     val terms = Searcher.expansionTerms(query).sorted.filter(dict.contains)
-    if (terms.isEmpty) return Nil
-
-    def contribution(idf: Double, tf: Int, dl: Long): Double =
-      Bm25.contribution(idf, tf, dl, avgdl)
+    if (terms.isEmpty || k <= 0) return Nil
 
     final case class TermState(term: String, idf: Double,
                                blocks: IndexedSeq[PostingBlock], var next: Int) {
       def bound: Double =
         if (next >= blocks.length) 0.0
-        else contribution(idf, blocks(next).max_tf, dlMin)
+        else Bm25.contribution(idf, blocks(next).max_tf, normMin)
     }
     val states = terms.map { t =>
       TermState(t, Bm25.idf(numDocs, dict(t).df), blocksOf(t), 0)
@@ -183,8 +189,8 @@ final class Searcher(val n: Int,
     }
 
     val acc = accumulators.get()
+    acc.start(k)
     try {
-      var maxAcc = 0.0
       var blocksSinceCheck = 0
       var done = false
       while (!done) {
@@ -204,27 +210,22 @@ final class Searcher(val n: Int,
           val (ids, tfs) = decodedDocOrder(st, idx)
           var j = 0
           while (j < ids.length) {
-            val v = acc.add(ids(j), contribution(st.idf, tfs(j), dlOf(ids(j))))
-            if (v > maxAcc) maxAcc = v
+            acc.add(ids(j), Bm25.contribution(st.idf, tfs(j), norms(ids(j).toInt)))
             j += 1
           }
           blocksSinceCheck += 1
-          // adaptive cadence: the kth scan is O(acc.size), so on head-term
-          // queries (hundreds of thousands of accumulated docs) checking
-          // every 8 blocks spends more time scanning than decoding — scale
-          // the interval so one scan costs at most ~a few blocks' decode.
-          // Checks are only STOP OPPORTUNITIES: a later stop does extra
-          // (exact) work, never changes results.
+          // The check itself is O(1), but its cadence fixes WHERE the stop
+          // fires, and with it the order in which each survivor's
+          // contributions are added (impact order before the stop, the finish
+          // pass's term order after it). Floating-point addition is not
+          // associative, so a different cadence can move a score's last ulp:
+          // this one is kept so scores stay bit-identical to earlier builds.
+          // A later stop only does extra exact work, never changes the set.
           val checkEvery = 8 + (acc.size >> 13)
           if (acc.size >= k && blocksSinceCheck >= checkEvery) {
             blocksSinceCheck = 0
             val remaining = states.foldLeft(0.0)(_ + _.bound)
-            if (remaining == 0.0) done = true
-            // cheap precheck: kth ≤ maxAcc, so remaining ≥ maxAcc can never prune
-            else if (remaining < maxAcc) {
-              val (kth, belowKth) = acc.kthAndNext(k)
-              if (belowKth + remaining < kth) done = true
-            }
+            if (remaining == 0.0 || acc.nextScore + remaining < acc.kthScore) done = true
           }
         }
       }
@@ -242,8 +243,7 @@ final class Searcher(val n: Int,
       // the p95 cause for one-term head queries ("the"), whose finish pass
       // re-touched every tail block for provably-complete scores.
       if (states.length > 1 && states.exists(st => st.next < st.blocks.length)) {
-        val survCut = if (acc.size <= k) Double.NegativeInfinity else acc.kthAndNext(k)._1
-        val survivors = acc.collectAtLeast(survCut).map(_._1).toArray
+        val survivors = acc.candidates().map(_._1).toArray
         java.util.Arrays.sort(survivors)
         val survMin = survivors(0)
         val survMax = survivors(survivors.length - 1)
@@ -261,7 +261,7 @@ final class Searcher(val n: Int,
                 val id = ids(j)
                 if (id >= survMin && id <= survMax &&
                     java.util.Arrays.binarySearch(survivors, id) >= 0)
-                  acc.add(id, contribution(st.idf, tfs(j), dlOf(id)))
+                  acc.add(id, Bm25.contribution(st.idf, tfs(j), norms(id.toInt)))
                 j += 1
               }
             } else {
@@ -287,7 +287,7 @@ final class Searcher(val n: Int,
                     val id = ids(p)
                     if (id >= survMin && id <= survMax &&
                         java.util.Arrays.binarySearch(survivors, id) >= 0)
-                      acc.add(id, contribution(st.idf, tfs(p), dlOf(id)))
+                      acc.add(id, Bm25.contribution(st.idf, tfs(p), norms(id.toInt)))
                     p += 1
                   }
                 }
@@ -298,11 +298,9 @@ final class Searcher(val n: Int,
         }
       }
 
-      // select candidates ≥ k-th score first (primitive pass), THEN sort the
-      // small survivor set with the url tie-break — avoids sorting the full
-      // accumulator table
-      val cutoff = if (acc.size <= k) Double.NegativeInfinity else acc.kthAndNext(k)._1
-      acc.collectAtLeast(cutoff)
+      // the candidates ≥ k-th score come from the heap; sort only them with
+      // the url tie-break, never the full accumulator table
+      acc.candidates()
         .sortBy { case (id, s) => (-s, urlOf(id)) }
         .take(k)
         .map { case (id, s) => (urlOf(id), s) }
@@ -313,74 +311,85 @@ final class Searcher(val n: Int,
 
 /** Dense BM25 score accumulator over the doc-id space `0 until numDocs`
   * (doc ids are the build's dense url-ordered ids), reused by one thread
-  * across queries: a score array, a seen mark per doc and the list of ids
-  * touched by the current query, in first-touch order. [[reset]] clears
-  * only the touched ids, so a query costs O(touched), not O(numDocs). */
+  * across queries: a score array, the ids touched by the current query in
+  * first-touch order, and a min-heap of the k + 1 best touched ids with each
+  * member's heap slot kept per doc, so raising a member's score is an
+  * increase-key in place.
+  *
+  * Every [[add]] keeps the heap invariant: each touched id outside the heap
+  * scores ≤ the heap minimum. This needs non-negative contributions (BM25+
+  * idf > 0, tf ≥ 1): a score only grows, so a member only moves away from
+  * the root and an outsider enters only by displacing the root, which then
+  * scores ≤ the new minimum. The (k+1)-th score is then the root and the
+  * k-th the smaller of its children, both O(1), and the top-k candidates are
+  * the heap minus its root, unless the root ties the k-th score: other
+  * touched ids may tie as well, and only a scan of the touched ids finds
+  * them all. [[reset]] clears only the touched ids, so a query costs
+  * O(touched), not O(numDocs). Call [[start]] before a query's first add. */
 private[query] final class Bm25Accumulator(numDocs: Int) {
   private val scores = new Array[Double](numDocs)
-  private val seen = new Array[Boolean](numDocs)
+  /** Per doc: 0 = untouched, -1 = touched and outside the heap, s > 0 = heap
+    * member at slot s − 1. */
+  private val state = new Array[Int](numDocs)
   private var touched = new Array[Int](math.min(numDocs, 4096))
   var size = 0
+  private var k = 0
+  private var cap = 0
+  private var heap = Array.emptyIntArray
+  private var hSize = 0
 
-  /** Adds c to the accumulator for id; returns the new value. */
+  /** Track the k best docs for the next query; the accumulator must be empty. */
+  def start(k: Int): Unit = {
+    require(k >= 1 && size == 0, s"start($k) needs k >= 1 and an empty accumulator")
+    this.k = k
+    cap = math.min(k.toLong + 1, numDocs.toLong).toInt
+    if (heap.length < cap) heap = new Array[Int](cap)
+  }
+
+  /** Adds c ≥ 0 to the accumulator for id; returns the new value. */
   def add(id: Long, c: Double): Double = {
     val i = id.toInt
-    if (seen(i)) { scores(i) += c; scores(i) }
-    else {
+    val st = state(i)
+    if (st == 0) {
       if (size == touched.length)
         touched = java.util.Arrays.copyOf(touched, math.min(numDocs, size * 2))
-      seen(i) = true; scores(i) = c; touched(size) = i; size += 1; c
+      scores(i) = c; touched(size) = i; size += 1
+      if (hSize < cap) {
+        heap(hSize) = i; state(i) = hSize + 1; hSize += 1
+        siftUp(hSize - 1)
+      } else {
+        state(i) = -1
+        if (c > scores(heap(0))) replaceRoot(i)
+      }
+      c
+    } else {
+      val v = scores(i) + c
+      scores(i) = v
+      if (st > 0) siftDown(st - 1)
+      else if (v > scores(heap(0))) replaceRoot(i)
+      v
     }
   }
 
-  /** Forget every touched id: the next query starts from all-unseen. */
-  def reset(): Unit = {
-    var s = 0
-    while (s < size) { seen(touched(s)) = false; s += 1 }
-    size = 0
-  }
+  /** The k-th largest score (the smallest while size < k). */
+  def kthScore: Double =
+    if (hSize <= k) scores(heap(0))
+    else if (hSize == 2) scores(heap(1))
+    else math.min(scores(heap(1)), scores(heap(2)))
 
-  /** (k-th largest value, (k+1)-th largest or 0) via a primitive size-(k+1)
-    * min-heap — O(touched) scan, heap ops only for values above the current
-    * min. */
-  def kthAndNext(k: Int): (Double, Double) = {
-    val cap = k + 1
-    val heap = new Array[Double](cap)
-    var hSize = 0
-    def siftUp(j0: Int): Unit = {
-      var j = j0
-      while (j > 0 && heap(j) < heap((j - 1) / 2)) {
-        val p = (j - 1) / 2
-        val t = heap(j); heap(j) = heap(p); heap(p) = t
-        j = p
-      }
-    }
-    def siftDown(): Unit = {
-      var j = 0
-      var cont = true
-      while (cont) {
-        val l = 2 * j + 1; val r = l + 1
-        var m = j
-        if (l < hSize && heap(l) < heap(m)) m = l
-        if (r < hSize && heap(r) < heap(m)) m = r
-        if (m == j) cont = false
-        else { val t = heap(j); heap(j) = heap(m); heap(m) = t; j = m }
-      }
-    }
-    var s = 0
-    while (s < size) {
-      val v = scores(touched(s))
-      if (hSize < cap) { heap(hSize) = v; siftUp(hSize); hSize += 1 }
-      else if (v > heap(0)) { heap(0) = v; siftDown() }
-      s += 1
-    }
-    if (hSize <= k) (heap(0), 0.0)
+  /** The (k+1)-th largest score, or 0 while size ≤ k. */
+  def nextScore: Double = if (hSize <= k) 0.0 else scores(heap(0))
+
+  /** (id, score) of every touched id scoring ≥ the k-th score — all of them
+    * while size ≤ k — in no particular order. */
+  def candidates(): mutable.ArrayBuffer[(Long, Double)] =
+    if (hSize > k && scores(heap(0)) == kthScore) collectAtLeast(kthScore)
     else {
-      val next = heap(0)
-      heap(0) = heap(hSize - 1); hSize -= 1; siftDown()
-      (heap(0), next)
+      val out = new mutable.ArrayBuffer[(Long, Double)](hSize)
+      var h = if (hSize > k) 1 else 0
+      while (h < hSize) { out += ((heap(h).toLong, scores(heap(h)))); h += 1 }
+      out
     }
-  }
 
   /** (id, score) of every touched id scoring ≥ cutoff, in first-touch order. */
   def collectAtLeast(cutoff: Double): mutable.ArrayBuffer[(Long, Double)] = {
@@ -392,6 +401,50 @@ private[query] final class Bm25Accumulator(numDocs: Int) {
       s += 1
     }
     out
+  }
+
+  /** Forget every touched id: the next query starts from all-untouched. */
+  def reset(): Unit = {
+    var s = 0
+    while (s < size) { state(touched(s)) = 0; s += 1 }
+    size = 0
+    hSize = 0
+  }
+
+  private def replaceRoot(i: Int): Unit = {
+    state(heap(0)) = -1
+    heap(0) = i; state(i) = 1
+    siftDown(0)
+  }
+
+  private def place(h: Int, i: Int): Unit = { heap(h) = i; state(i) = h + 1 }
+
+  private def siftUp(h0: Int): Unit = {
+    val i = heap(h0); val v = scores(i)
+    var h = h0
+    while (h > 0 && v < scores(heap((h - 1) >>> 1))) {
+      val p = (h - 1) >>> 1
+      place(h, heap(p))
+      h = p
+    }
+    place(h, i)
+  }
+
+  private def siftDown(h0: Int): Unit = {
+    val i = heap(h0); val v = scores(i)
+    var h = h0
+    var more = true
+    while (more) {
+      val l = 2 * h + 1
+      if (l >= hSize) more = false
+      else {
+        val r = l + 1
+        val m = if (r < hSize && scores(heap(r)) < scores(heap(l))) r else l
+        if (scores(heap(m)) < v) { place(h, heap(m)); h = m }
+        else more = false
+      }
+    }
+    place(h, i)
   }
 }
 
@@ -433,7 +486,7 @@ object Searcher {
     // integer dl sum (exact, order-free) → double once: reproducible in SQL
     val avgdl = if (docs.isEmpty) 1.0 else dlArr.sum.toDouble / docs.length
     val dlMin = if (docs.isEmpty) 0L else dlArr.min
-    new Searcher(n, dict, t => blocks.getOrElse(t, IndexedSeq.empty), id => urlArr(id.toInt), id => dlArr(id.toInt),
-      avgdl, dlMin, docs.length.toLong)
+    new Searcher(n, dict, t => blocks.getOrElse(t, IndexedSeq.empty), id => urlArr(id.toInt),
+      dlArr.map(Bm25.lengthNorm(_, avgdl)), avgdl, dlMin, docs.length.toLong)
   }
 }

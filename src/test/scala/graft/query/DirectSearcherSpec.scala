@@ -239,9 +239,10 @@ class DirectSearcherSpec extends AnyFunSuite {
   }
 
   test("concurrent queries on one open searcher match serial results") {
-    // a serving tier is multithreaded: race a COLD searcher's lazy caches
-    // (shard mmap, per-shard dl decode, per-term block fetch) from many
-    // threads and require every result to equal the serial answer
+    // a serving tier is multithreaded: race a COLD searcher's lazy state
+    // (per-term block fetch, the decoded-block cache, each thread's first
+    // accumulator) from many threads and require every result to equal the
+    // serial answer
     val serial = DirectSearcher.open(dir, numDocs)
     val qs = (queries ++ Seq("telescope", "observation comet", "nebula gravity", ""))
     val expected = qs.map(q => q -> (serial.referenceTopK(q), serial.bm25TopK(q, 10))).toMap
